@@ -100,50 +100,30 @@ def _spread_if_narrow(df: DataFrame) -> DataFrame:
     50k-doc corpus on one core of 32 (57s; ~3s spread). Scale-adaptive:
     when the input already has at least defaultParallelism/2 partitions
     (any real multi-file corpus), this is the identity — no extra
-    shuffle is ever added to a 100-TB input."""
-    sc = df.sparkSession.sparkContext
-    p = sc.defaultParallelism
-    try:
-        n = df.rdd.getNumPartitions()
-    except Exception:  # pragma: no cover - defensive (streaming frames)
+    shuffle is ever added to a 100-TB input. Streaming frames have no
+    RDD to count and pass through unchanged."""
+    if df.isStreaming:
         return df
-    if n * 2 <= p:
+    p = df.sparkSession.sparkContext.defaultParallelism
+    if df.rdd.getNumPartitions() * 2 <= p:
         return df.repartition(p)
     return df
 
 
-def _signature_from_hashes(hashes: Column, n_hashes: int = 64,
-                           seed: int = 42) -> Column:
-    """The 64 min-permutation folds over an ALREADY-MATERIALIZED hash
-    array column. Callers that fan the signature out over a corpus scan
-    should project :func:`shingle_hashes` into its own column first and
-    pass that here — the n_hashes array_min(transform(...)) expressions
-    all reference the hash subtree, HOFs are CodegenFallback, and
-    interpreted-mode Catalyst does not CSE the repeated subtree (the
-    repo's round-1 serializer lesson; measured again for minhash in
-    tools/bench_minhash_ab.py)."""
-    a, b = _coeffs(n_hashes, seed)
-
-    def perm(ai: int, bi: int):
-        # single-arg lambda (pyspark derives HOF arity from the signature)
-        return lambda h: F.pmod(ai * h + bi, F.lit(MERSENNE_31))
-
-    sigs = [
-        F.array_min(F.transform(hashes, perm(int(a[i]), int(b[i]))))
-        for i in range(n_hashes)
-    ]
-    return F.array(*sigs)
-
-
 def _signature_batch_udf(n_hashes: int = 64, seed: int = 42,
                          n_extra: int = 0):
-    """Vectorized twin of :func:`_signature_from_hashes`: one pandas UDF
-    computing all n_hashes min-permutation folds with numpy instead of
-    n_hashes interpreted Catalyst ``array_min(transform(...))`` folds
-    (HOFs are CodegenFallback — the fold family alone cost ~35s of the
-    50k-doc corpus scan at sf1.0; the numpy form is ~1s).
+    """MinHash signature over an ALREADY-MATERIALIZED shingle-hash array:
+    one pandas UDF computing all n_hashes min-permutation folds
 
-    BIT-IDENTICAL to the Catalyst form: same coefficients, and
+        sig_i = min over shingles s of (a_i * h(s) + b_i) mod M31
+
+    with numpy instead of n_hashes interpreted Catalyst
+    ``array_min(transform(...))`` folds (HOFs are CodegenFallback — the
+    fold family alone cost ~35s of the 50k-doc corpus scan at sf1.0; the
+    numpy form is ~1s).
+
+    BIT-IDENTICAL to that Catalyst fold (kept in the tests as the
+    reference): same coefficients, and
     ``(a*h + b) % M31`` over int64 (a, b, h all < 2^31, so the product
     stays below 2^62 — no overflow, same values as Spark's pmod), then a
     per-row segment min. A NULL hash array maps to the Catalyst result
@@ -171,8 +151,8 @@ def _signature_batch_udf(n_hashes: int = 64, seed: int = 42,
         array_min(transform([], ...)) is NULL per component, and
         reduceat on an empty segment would silently return the NEXT
         row's first element (or raise for a trailing empty segment) —
-        unreachable via shingles() today, but this UDF is documented as
-        a general vectorized twin, so match the Catalyst semantics."""
+        unreachable via shingles() today, but match the Catalyst
+        semantics for any hash array."""
         vals = hashes.to_numpy()
         idx = [i for i, v in enumerate(vals) if v is not None and len(v)]
         if not idx:
@@ -223,19 +203,6 @@ def _signature_batch_udf(n_hashes: int = 64, seed: int = 42,
     return _sig_packed
 
 
-def minhash_signature(col: Column | str, n_hashes: int = 64, k: int = 5,
-                      seed: int = 42) -> Column:
-    """array<bigint> of n_hashes min-permutation values (pure Catalyst).
-
-    sig_i = min over shingles s of (a_i * h(s) + b_i) mod M31.
-
-    NOTE: as a single inline expression this repeats the shingle-hash
-    subtree n_hashes times; fine for one-off use, but scan-heavy callers
-    (see :func:`_minhash_banded`) hoist the hashes into a projection and
-    use :func:`_signature_from_hashes`."""
-    return _signature_from_hashes(shingle_hashes(col, k), n_hashes, seed)
-
-
 def minhash_lsh_candidates(
     df: DataFrame,
     text_col: str = "text",
@@ -245,7 +212,6 @@ def minhash_lsh_candidates(
     k: int = 5,
     seed: int = 42,
     max_bucket: int = 200,
-    _sigs: DataFrame | None = None,
 ) -> DataFrame:
     """Candidate near-dup pairs via banded LSH.
 
@@ -257,10 +223,13 @@ def minhash_lsh_candidates(
     runtime). A degenerate corpus (billions of near-identical docs in one
     bucket) therefore never OOMs a reducer; truncated buckets are
     observable via :func:`lsh_bucket_stats`.
+
+    The former ``_sigs`` signature-reuse parameter is gone: no caller
+    passed it, and the estimate prefilter in
+    :func:`near_duplicates_minhash` reuses its own signature frame
+    internally.
     """
-    banded = _minhash_banded(
-        df, text_col, id_col, n_hashes, bands, k, seed, _sigs=_sigs
-    )
+    banded = _minhash_banded(df, text_col, id_col, n_hashes, bands, k, seed)
     return _raw_bucket_pairs(banded, max_bucket).distinct()
 
 
@@ -302,35 +271,26 @@ def _raw_bucket_pairs(
     )
 
 
-def _minhash_sigs(df, text_col, id_col, n_hashes, k, seed) -> DataFrame:
-    """(id, sig) minhash signatures. The shingle hashes are hoisted
-    through their own projection so the fold stage consumes ONE
-    materialized array instead of re-evaluating the shingle->hash
-    subtree per fold (HOFs are CodegenFallback; CollapseProject keeps
-    the boundary because the subtree is non-cheap and multiply
-    referenced) — measured 16x on the sf0.1 corpus scan (120.7s ->
-    7.9s), tools/bench_minhash_ab.py. Round 6: the folds themselves
-    moved from n_hashes interpreted Catalyst array_min(transform(...))
-    expressions to one numpy pandas UDF (:func:`_signature_batch_udf`,
-    bit-identical values), and the scan is spread across cores first
-    (:func:`_spread_if_narrow` — the sf tables are single-file scans)."""
-    sig = _signature_batch_udf(n_hashes, seed)
-    return _spread_if_narrow(df).select(
-        F.col(id_col).alias("id"), shingle_hashes(text_col, k).alias("_sh")
-    ).select(
-        "id",
-        sig(F.col("_sh")).alias("sig"),
-    )
-
-
 def _minhash_sigs_packed(df, text_col, id_col, n_hashes, k, seed,
-                         n_extra) -> DataFrame:
-    """(id, sig, p): the exact banding signature PLUS the packed
-    (n_hashes + n_extra)-byte estimate sketch, from ONE corpus scan."""
+                         n_extra: int = 0) -> DataFrame:
+    """(id, sig) minhash signatures from ONE corpus scan; with
+    ``n_extra > 0`` also the packed (n_hashes + n_extra)-byte estimate
+    sketch ``p`` -> (id, sig, p). The shingle hashes are hoisted through
+    their own projection so the fold consumes ONE materialized array
+    instead of re-evaluating the shingle->hash subtree per fold (HOFs are
+    CodegenFallback; CollapseProject keeps the boundary because the
+    subtree is non-cheap and multiply referenced) — measured 16x on the
+    sf0.1 corpus scan (120.7s -> 7.9s). The folds run in one numpy
+    pandas UDF (:func:`_signature_batch_udf`), and the scan is spread
+    across cores first (:func:`_spread_if_narrow` — the sf tables are
+    single-file scans)."""
     sig = _signature_batch_udf(n_hashes, seed, n_extra=n_extra)
-    return _spread_if_narrow(df).select(
+    hashed = _spread_if_narrow(df).select(
         F.col(id_col).alias("id"), shingle_hashes(text_col, k).alias("_sh")
-    ).select(
+    )
+    if not n_extra:
+        return hashed.select("id", sig(F.col("_sh")).alias("sig"))
+    return hashed.select(
         "id", sig(F.col("_sh")).alias("_s")
     ).select("id", "_s.sig", "_s.p")
 
@@ -378,7 +338,7 @@ def _minhash_banded(df, text_col, id_col, n_hashes, bands, k, seed,
     rows_per_band = n_hashes // bands
     sigs = (
         _sigs if _sigs is not None
-        else _minhash_sigs(df, text_col, id_col, n_hashes, k, seed)
+        else _minhash_sigs_packed(df, text_col, id_col, n_hashes, k, seed)
     )
     return sigs.select(
         "id",
@@ -990,7 +950,6 @@ def connected_components(
     a_col: str = "a",
     b_col: str = "b",
     max_iters: int = 25,
-    algorithm: str = "auto",
     checkpoint_dir: str | None = None,
     checkpoint_every: int = 5,
 ) -> DataFrame:
@@ -1004,13 +963,11 @@ def connected_components(
     hop or two), so this terminates in a handful of rounds even at
     corpus scale.
 
-    ``algorithm``: "label" = propagation only (raises at max_iters, for
-    callers that treat a deep graph as a data bug); "star" = go straight
-    to star_contraction_components (O(log n) rounds, diameter-proof);
-    "auto" (default) = propagate up to max_iters, then FALL BACK to star
-    contraction instead of failing mid-pipeline — an adversarial chain
-    from greedy-transitive LSH output degrades to the logarithmic
-    algorithm rather than taking down the whole dedup job.
+    A graph that has not converged after ``max_iters`` rounds FALLS BACK
+    to :func:`star_contraction_components` (O(log n) rounds, diameter-
+    proof) with a warning instead of failing mid-pipeline — an
+    adversarial chain from greedy-transitive LSH output degrades to the
+    logarithmic algorithm rather than taking down the whole dedup job.
 
     Scale shape: per round, one groupBy over the (symmetrized) edge list
     joined to current labels — shuffles on node id only, labels frame is
@@ -1022,15 +979,6 @@ def connected_components(
     (recomputable after executor loss — localCheckpoint blocks die with
     their executor; see _IterCheckpointer).
     """
-    if algorithm not in ("auto", "label", "star"):
-        raise ValueError(
-            f"unknown algorithm {algorithm!r}; expected auto|label|star"
-        )
-    if algorithm == "star":
-        return star_contraction_components(
-            pairs, a_col, b_col,
-            checkpoint_dir=checkpoint_dir, checkpoint_every=checkpoint_every,
-        )
     ckpt = _IterCheckpointer(
         pairs.sparkSession, checkpoint_dir, checkpoint_every, tag="label_"
     )
@@ -1081,25 +1029,19 @@ def connected_components(
         labels = merged.select("node", F.col("new_label").alias("label"))
         if changed == 0:
             return labels.select("node", F.col("label").alias("component"))
-    if algorithm == "auto":
-        # graph deeper than the propagation bound: degrade to the
-        # O(log n) contraction instead of failing the whole dedup job
-        import warnings
+    # graph deeper than the propagation bound: degrade to the O(log n)
+    # contraction instead of failing the whole dedup job
+    import warnings
 
-        warnings.warn(
-            f"connected_components: label propagation hit max_iters="
-            f"{max_iters} (deep graph); falling back to large-star/"
-            "small-star contraction",
-            stacklevel=2,
-        )
-        return star_contraction_components(
-            pairs, a_col, b_col,
-            checkpoint_dir=checkpoint_dir, checkpoint_every=checkpoint_every,
-        )
-    raise RuntimeError(
-        f"connected_components did not converge in {max_iters} rounds "
-        "(graph diameter exceeds the bound — raise max_iters, or use "
-        "algorithm='auto'/'star' for the O(log n) star contraction)"
+    warnings.warn(
+        f"connected_components: label propagation hit max_iters="
+        f"{max_iters} (deep graph); falling back to large-star/"
+        "small-star contraction",
+        stacklevel=2,
+    )
+    return star_contraction_components(
+        pairs, a_col, b_col,
+        checkpoint_dir=checkpoint_dir, checkpoint_every=checkpoint_every,
     )
 
 
@@ -1116,8 +1058,8 @@ def dedupe_by_components(
     dedup pipeline (pairs from minhash/simhash/embedding candidates).
     One broadcast-sized join when the pair list is small relative to the
     corpus; a plain shuffled left_anti otherwise (Spark picks via AQE).
-    Extra kwargs (algorithm=, checkpoint_dir=, checkpoint_every=,
-    max_iters=) pass through to :func:`connected_components`."""
+    Extra kwargs (checkpoint_dir=, checkpoint_every=, max_iters=) pass
+    through to :func:`connected_components`."""
     comps = connected_components(pairs, a_col, b_col, **cc_kwargs)
     drop = comps.filter(F.col("node") != F.col("component")).select(
         F.col("node").alias(id_col)

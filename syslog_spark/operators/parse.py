@@ -307,54 +307,12 @@ def parse_record_batch(
     )
 
 
-def make_kernel_runner(ref_year: int, ref_tz: int, keep_raw: bool):
-    """callable(RecordBatch) -> parsed RecordBatch, honouring the
-    SYSLOG_SPARK_PARSE_TIMING env var (bench diagnostics): when set,
-    pure-kernel seconds accumulate per fn invocation into a uniquely
-    named file under that dir, so bench tooling can split stage wall
-    time into compute vs feed/stall. One file PER invocation (task):
-    pid_max is 32768 on this box and JVM tids + worker forks wrap the
-    pid space within minutes, so pid-keyed files get clobbered by
-    unrelated later workers — aggregators sum over all files. When the
-    env var is unset (production) this is a zero-overhead passthrough.
-    Shared by the standard mapInArrow feed (make_parse_fn) and the
-    fused direct-parquet source (sources/direct.py)."""
-    import os
-
-    tdir = os.environ.get("SYSLOG_SPARK_PARSE_TIMING")
-    if not tdir:
-        def run(batch: pa.RecordBatch) -> pa.RecordBatch:
-            return parse_record_batch(batch, ref_year, ref_tz, keep_raw)
-
-        return run
-
-    import json as _json
-    import time as _time
-    import uuid as _uuid
-
-    path = os.path.join(tdir, f"w{_uuid.uuid4().hex}.json")
-    acc = {"kernel_s": 0.0, "rows": 0, "batches": 0}
-
-    def run(batch: pa.RecordBatch) -> pa.RecordBatch:
-        t0 = _time.monotonic()
-        out = parse_record_batch(batch, ref_year, ref_tz, keep_raw)
-        acc["kernel_s"] += _time.monotonic() - t0
-        acc["rows"] += batch.num_rows
-        acc["batches"] += 1
-        with open(path, "w") as f:  # /dev/shm; ~50us per 32k rows
-            _json.dump(acc, f)
-        return out
-
-    return run
-
-
 def make_parse_fn(ref_year: int, ref_tz: int, keep_raw: bool):
     def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        run = make_kernel_runner(ref_year, ref_tz, keep_raw)
         for batch in batches:
             if batch.num_rows == 0:
                 continue
-            yield run(batch)
+            yield parse_record_batch(batch, ref_year, ref_tz, keep_raw)
 
     return fn
 

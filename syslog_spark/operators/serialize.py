@@ -6,18 +6,13 @@ space-trimmed, structured data with both key levels sorted (already sorted
 in our canonical storage form), ' message' only when non-empty, RFC3339Nano
 timestamps with trailing-zero-trimmed fractions and 'Z' for UTC.
 
-Engines:
-  * "auto" (default) — byte-exact for ALL inputs: pure-Catalyst
-    expression for rows whose param values are ASCII, per-row routing to
-    the pandas serializer for rows with non-ASCII param values (inputs
-    null-masked for clean rows so an ASCII corpus pays only an Arrow
-    validity-bitmap roundtrip).
-  * "sql" — pure Catalyst expression (canonical_line_expr) only, zero
-    Python, whole-stage codegen; covers backslash/quote escaping and ALL
-    ASCII control-character escapes (\\a..\\v named + \\xNN) but not
-    go_quote's \\uNNNN for non-printable NON-ASCII runes in param values.
-  * "pandas" — vectorized python serializer for every row, total for any
-    value content.
+One path, byte-exact for ALL inputs: rows whose param values are ASCII
+take the pure-Catalyst expression (canonical_line_expr: zero Python,
+whole-stage codegen, every ASCII control escape); rows with non-ASCII
+param values route per row to the vectorized pandas serializer
+(serialize_batch), the only one that reproduces go_quote's \\uNNNN
+escapes. Inputs of the pandas branch are null-masked for clean rows, so
+an ASCII corpus pays only an Arrow validity-bitmap roundtrip.
 Used for the token round-trip invariant (SURVEY.md §1.2) and as the
 user-facing re-emit operator. Row-set checksums for routing parity do
 NOT use this (operators/route.py hashes the canonical tuple directly).
@@ -112,7 +107,7 @@ def _data_str(data_objs: pd.Series) -> pd.Series:
 # UDF: a NULLABLE int64 Arrow column converts to float64 pandas (NaN for
 # nulls), and float64 only holds integers exactly to 2^53 — year-0 /
 # year-3000 epoch micros (~6.2e16) would come back off by a few micros
-# and shift the serialized second (caught by the auto-engine fuzz).
+# and shift the serialized second (caught by the serialize fuzz).
 # Never a real value: the grammar's year range 0000-9999 keeps
 # |ts_micros| < 2.6e17 << 2^63.
 TS_NULL_SENTINEL = -(2**63)
@@ -127,8 +122,8 @@ def serialize_batch(
     timestamp."""
     n = len(priority)
     if bool(priority.isna().all()):
-        # all-null batch: nothing to serialize (error rows, or the auto
-        # engine masked every clean row out) — skip the column work
+        # all-null batch: nothing to serialize (error rows, or
+        # with_canonical masked every clean row out) — skip the column work
         return pd.Series([None] * n, index=priority.index, dtype=object)
     pri = priority.astype("float").fillna(0).astype(np.int64)
     head = "<" + pri.astype(str) + ">"
@@ -164,10 +159,10 @@ def canonical_line_expr():
 
     Matches oracle.serialize exactly for rows whose param values are
     ASCII (incl. every control character, via go_quote's named + \\xNN
-    escapes); non-printable NON-ASCII runes in param values need the
-    pandas engine (`with_canonical(engine="pandas")`) for Go's \\uNNNN
-    escapes — printable non-ASCII passes through verbatim in both, like
-    Go. Timestamps re-emitted as
+    escapes); non-printable NON-ASCII runes in param values need
+    :func:`serialize_batch` for Go's \\uNNNN escapes (with_canonical
+    routes those rows there) — printable non-ASCII passes through
+    verbatim in both, like Go. Timestamps re-emitted as
     RFC3339Nano with trailing-zero-trimmed fractions and 'Z' for UTC;
     wall time reconstructed from ts_micros + tz_offset_seconds (session
     timezone must be UTC — session.py pins it)."""
@@ -219,7 +214,7 @@ def canonical_line_expr():
     # the seven named control escapes, then \xNN for the remaining ASCII
     # control bytes — a chain of literal replaces, fully codegen'd. Exact
     # for all-ASCII param values; non-printable NON-ASCII runes (Go \u
-    # escapes) are the one case needing engine="pandas".
+    # escapes) are the one case needing serialize_batch.
     _CTRL = {
         "\x07": "\\a", "\x08": "\\b", "\x0c": "\\f", "\n": "\\n",
         "\r": "\\r", "\t": "\\t", "\x0b": "\\v",
@@ -266,19 +261,13 @@ def canonical_line_expr():
     return F.when(F.col("priority").isNull(), F.lit(None)).otherwise(line)
 
 
-_SER_COLS = (
-    "priority", "version", "ts_micros", "ts_nanos", "tz_offset_seconds",
-    "hostname", "appname", "proc_id", "msg_id", "data", "message",
-)
-
-
 def needs_unicode_quote():
     """True for rows whose param VALUES contain any non-ASCII character —
     a cheap JVM over-approximation of go_quote's \\uNNNN cases (printable
-    non-ASCII serializes verbatim in both engines, so routing it to the
-    pandas engine is correct, merely unnecessary). Only values are quoted
-    by Go (syslog.go:113-115); sd_ids/keys/message pass verbatim in both
-    engines regardless of content."""
+    non-ASCII serializes verbatim in both serializers, so routing it to
+    serialize_batch is correct, merely unnecessary). Only values are
+    quoted by Go (syslog.go:113-115); sd_ids/keys/message pass verbatim
+    in both serializers regardless of content."""
     from pyspark.sql import functions as F
 
     return F.coalesce(
@@ -296,27 +285,19 @@ def needs_unicode_quote():
     )
 
 
-def with_canonical(df, out_col: str = "canonical", engine: str = "auto"):
+def with_canonical(df, out_col: str = "canonical"):
     """Append the canonical serialized line (null for error rows).
 
-    engine="auto" (default): byte-exact for ALL inputs in one pass — rows
-    whose param values are pure ASCII take the pure-JVM expression; rows
-    with non-ASCII param values (the only case where the SQL engine can't
-    reproduce go_quote's Unicode-table-driven \\uNNNN escapes) route to
-    the pandas serializer. The pandas branch's inputs are null-masked for
-    clean rows, so an all-ASCII corpus ships only validity bitmaps through
-    Arrow and serialize_batch short-circuits — no double scan of the
-    upstream lineage, which is what a union-of-filters split would cost.
-    engine="sql": pure JVM expression only (whole-stage codegen; byte-
-    exact whenever param values are ASCII — opt in when the corpus is
-    known-ASCII and the Python worker roundtrip should be skipped).
-    engine="pandas": the vectorized python serializer for every row,
-    total for any value content."""
+    Byte-exact for ALL inputs in one pass — rows whose param values are
+    pure ASCII take the pure-JVM expression; rows with non-ASCII param
+    values (the only case where canonical_line_expr can't reproduce
+    go_quote's Unicode-table-driven \\uNNNN escapes) route to the pandas
+    serializer. The pandas branch's inputs are null-masked for clean rows,
+    so an all-ASCII corpus ships only validity bitmaps through Arrow and
+    serialize_batch short-circuits — no double scan of the upstream
+    lineage, which is what a union-of-filters split would cost."""
     from pyspark.sql import functions as F
     from pyspark.sql import types as T
-
-    if engine == "sql":
-        return df.withColumn(out_col, canonical_line_expr())
 
     @F.pandas_udf(T.StringType())
     def _ser(
@@ -328,36 +309,6 @@ def with_canonical(df, out_col: str = "canonical", engine: str = "auto"):
             hostname, appname, proc_id, msg_id, data, message,
         )
 
-    def _int_args(needs=None):
-        # ship the three int ts columns NULL-FREE (sentinel/zero instead
-        # of null) so Arrow->pandas keeps them int64: a nullable int64
-        # batch converts to float64 and loses exactness past 2^53 (see
-        # TS_NULL_SENTINEL)
-        def nn(c, sentinel):
-            col = F.coalesce(F.col(c), F.lit(sentinel))
-            if needs is not None:
-                col = F.when(needs, col).otherwise(F.lit(sentinel))
-            return col.cast("long")
-
-        def mask(c):
-            col = F.col(c)
-            if needs is not None:
-                col = F.when(needs, col).otherwise(F.lit(None))
-            return col
-
-        return [
-            mask("priority"), mask("version"),
-            nn("ts_micros", TS_NULL_SENTINEL), nn("ts_nanos", 0),
-            nn("tz_offset_seconds", 0),
-            mask("hostname"), mask("appname"), mask("proc_id"),
-            mask("msg_id"), mask("data"), mask("message"),
-        ]
-
-    if engine == "pandas":
-        return df.withColumn(out_col, _ser(*_int_args()))
-    if engine != "auto":
-        raise ValueError(f"unknown engine {engine!r}")
-
     # materialize the routing predicate ONCE: it appears in the branch
     # condition and in every one of the 11 masked UDF inputs, and
     # Catalyst does not CSE a nested-array exists() across a pandas-UDF
@@ -365,10 +316,27 @@ def with_canonical(df, out_col: str = "canonical", engine: str = "auto"):
     # (measured ~2x on the serialize gate query)
     tmp = "__needs_uquote"
     needs = F.col(tmp)
+
+    def mask(c):
+        return F.when(needs, F.col(c)).otherwise(F.lit(None))
+
+    def nn(c, sentinel):
+        # ship the three int ts columns NULL-FREE (sentinel/zero instead
+        # of null) so Arrow->pandas keeps them int64: a nullable int64
+        # batch converts to float64 and loses exactness past 2^53 (see
+        # TS_NULL_SENTINEL)
+        col = F.coalesce(F.col(c), F.lit(sentinel))
+        return F.when(needs, col).otherwise(F.lit(sentinel)).cast("long")
+
+    args = [
+        mask("priority"), mask("version"),
+        nn("ts_micros", TS_NULL_SENTINEL), nn("ts_nanos", 0),
+        nn("tz_offset_seconds", 0),
+        mask("hostname"), mask("appname"), mask("proc_id"),
+        mask("msg_id"), mask("data"), mask("message"),
+    ]
     out = df.withColumn(tmp, needs_unicode_quote()).withColumn(
         out_col,
-        F.when(needs, _ser(*_int_args(needs))).otherwise(
-            canonical_line_expr()
-        ),
+        F.when(needs, _ser(*args)).otherwise(canonical_line_expr()),
     )
     return out.drop(tmp)

@@ -7,7 +7,8 @@ loop), window rank. Exact; O(N*Q) but embarrassingly parallel.
 Scale path: random-hyperplane LSH — 64-bit signatures from deterministic
 seeded planes, multi-probe via Hamming-block equality (same pigeonhole
 blocking as simhash), exact re-rank inside candidate sets only. Sub-linear
-candidate generation at 100 TB; planes are a broadcast literal.
+candidate generation at 100 TB; planes are regenerated from the seed
+inside each worker.
 """
 
 from __future__ import annotations
@@ -94,28 +95,22 @@ def _lit_double_array(values) -> Column:
     return F.expr(_double_array_sql(values))
 
 
-# above this many plane literals (n_bits * dim) the pure-Catalyst
-# signature stops being free: ~50-100k literal nodes per call at real
-# embedding widths (768-1536) bloat analysis time and can push generated
-# code past the 64KB JVM method limit, falling back to interpreted mode
-# exactly on the 100-TB operator. The pandas path is one Arrow-batched
-# matmul against a worker-side plane matrix instead.
-_CATALYST_SIG_MAX_LITERALS = 8192
-
-
-def rh_signature_batch(
+def rh_signature(
     vec_col, dim: int, n_bits: int = 64, seed: int = 42,
     cast: bool = True,
 ) -> Column:
-    """Random-hyperplane signature via ONE vectorized pandas UDF: batch
-    matmul against the (n_bits x dim) plane matrix + bit-pack. Planes are
-    regenerated deterministically inside the worker (same seeded
-    RandomState as _planes) — nothing rides the closure but three ints.
+    """Random-hyperplane signature as a bigint, via ONE vectorized pandas
+    UDF: batch matmul against the (n_bits x dim) plane matrix + bit-pack
+    (bit i set iff ``v @ planes[i] > 0``). Planes are regenerated
+    deterministically inside the worker (same seeded RandomState as
+    _planes) — nothing rides the closure but three ints, so plan size
+    and analysis time do not grow with ``dim`` (plane literals baked into
+    a Catalyst expression reach ~50-100k nodes at real embedding widths
+    and push generated code past the 64KB JVM method limit). Null or
+    wrong-width rows get a NULL signature and drop out of block joins.
 
-    Bitwise-equivalent to the Catalyst form except when a plane dot lands
-    within float rounding of exactly 0 (summation order differs); for
-    continuous embeddings that is measure-zero and candidate differences
-    are absorbed by the exact-cosine verify stage anyway."""
+    ``cast=False`` skips the to-double transform; scan-heavy callers
+    hoist ``_vec`` into its own projection and pass that column."""
     from pyspark.sql.functions import pandas_udf
 
     @pandas_udf("long")
@@ -136,10 +131,8 @@ def rh_signature_batch(
             return pd.Series([], dtype="Int64")
         planes = _planes(dim, n_bits, seed)  # deterministic per (args)
         vals = v.to_numpy()
-        # null / wrong-width rows -> null signature (matching the
-        # Catalyst engine, where the dot over a null/short array yields
-        # null and the row drops out of the block join) instead of
-        # np.stack raising and killing the task (round-4 review finding)
+        # null / wrong-width rows -> null signature instead of np.stack
+        # raising and killing the task (round-4 review finding)
         ok = np.array(
             [x is not None and len(x) == dim for x in vals], dtype=bool
         )
@@ -159,75 +152,7 @@ def rh_signature_batch(
         res[~ok] = pd.NA
         return res
 
-    c = F.col(vec_col) if isinstance(vec_col, str) else vec_col
-    return _sig(F.transform(c, lambda x: x.cast("double")) if cast else c)
-
-
-def rh_signature(
-    vec_col,
-    dim: int,
-    n_bits: int = 64,
-    seed: int = 42,
-    engine: str = "auto",
-    cast: bool = True,
-) -> Column:
-    """Random-hyperplane signature as a bigint.
-
-    engine="catalyst": one JVM dot product per bit against literal plane
-    arrays, bit-packed — zero Python, but bakes n_bits*dim literals into
-    the plan. engine="pandas": rh_signature_batch (one Arrow matmul).
-    "auto" picks catalyst below _CATALYST_SIG_MAX_LITERALS and pandas
-    above, so small dims keep the pure-JVM plan and real embedding widths
-    never hit the codegen cliff.
-
-    ``cast=False`` skips the to-double transform; scan-heavy callers
-    hoist ``_vec`` into its own projection and pass that column — the
-    inline transform would otherwise be re-evaluated inside every one of
-    the n_bits fold expressions (HOFs are CodegenFallback, no CSE; the
-    round-5 minhash lesson)."""
-    if engine == "auto":
-        engine = (
-            "catalyst"
-            if n_bits * dim <= _CATALYST_SIG_MAX_LITERALS
-            else "pandas"
-        )
-    if engine == "pandas":
-        return rh_signature_batch(vec_col, dim, n_bits, seed, cast=cast)
-    planes = _planes(dim, n_bits, seed)
-    if isinstance(vec_col, str) and vec_col.isidentifier():
-        # build the WHOLE signature as one SQL expression — the
-        # per-bit Column-API form costs thousands of py4j round trips
-        # (plane literals + HOF lambda wrappers), ~9s of driver latency
-        # per call at 64x64 before any data moved (round-5 finding);
-        # the parser builds the identical tree JVM-side in one call.
-        # Simple identifiers only: backticking a dotted/qualified name
-        # ('s.embedding') would turn it into one literal identifier and
-        # break the resolution F.col provides — those take the Column
-        # path below.
-        vname = f"`{vec_col}`"
-        vexpr = (
-            f"transform({vname}, x -> cast(x as double))" if cast else vname
-        )
-        bits = []
-        for i in range(n_bits):
-            arr = _double_array_sql(planes[i])
-            bits.append(
-                f"shiftleft(cast(aggregate(zip_with({vexpr}, {arr}, "
-                f"(x, y) -> x * y), 0.0D, (a, x) -> a + x) > 0 as long), "
-                f"{i})"
-            )
-        return F.expr(" | ".join(bits))
-    c = F.col(vec_col) if isinstance(vec_col, str) else vec_col
-    v = _vec(c) if cast else c
-    bit_cols = []
-    for i in range(n_bits):
-        plane = _lit_double_array(planes[i])
-        bit = (dot(v, plane) > 0).cast("long")
-        bit_cols.append(F.shiftleft(bit, i))
-    sig = bit_cols[0]
-    for b in bit_cols[1:]:
-        sig = sig.bitwiseOR(b)
-    return sig
+    return _sig(_vec(vec_col) if cast else vec_col)
 
 
 def embedding_near_dups(
@@ -241,7 +166,7 @@ def embedding_near_dups(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """Near-duplicate pairs by embedding cosine, WITHOUT an all-pairs
-    cross join: random-hyperplane signatures (pure Catalyst), pigeonhole
+    cross join: random-hyperplane signatures (one Arrow matmul), pigeonhole
     block equi-join for candidates, exact cosine verify on candidates only
     — the same blocked shape as simhash_near_dups (dedup.py).
 
@@ -256,20 +181,19 @@ def embedding_near_dups(
     shuffle on (blk, key); candidates are verified with a JVM cosine. No
     CartesianProduct anywhere in the plan (asserted in tests).
 
-    ``dim`` is required: the hyperplanes are literal arrays baked into the
-    plan, and inferring the width from data would need an eager driver-side
-    job (``.first()``) inside an otherwise lazy operator (and crash on an
-    empty frame)."""
+    ``dim`` is required: it sizes the hyperplanes, and inferring the width
+    from data would need an eager driver-side job (``.first()``) inside an
+    otherwise lazy operator (and crash on an empty frame)."""
     if dim is None:
         raise ValueError(
-            "embedding_near_dups requires dim= (hyperplanes are plan "
-            "literals; no eager data peek in a lazy operator)"
+            "embedding_near_dups requires dim= (it sizes the hyperplanes; "
+            "no eager data peek in a lazy operator)"
         )
     width = n_bits // n_blocks
     mask = (1 << width) - 1
-    # hoist the to-double cast: the signature's 64 dot folds and the
-    # verify stage all reference ONE materialized "v" instead of
-    # re-running the cast transform per fold (CodegenFallback, no CSE)
+    # hoist the to-double cast: the signature UDF and the verify stage
+    # both reference ONE materialized "v" instead of re-running the cast
+    # transform per use (HOFs are CodegenFallback, no CSE)
     pre = _spread_if_narrow(df).select(
         F.col(id_col).alias("id"), _vec(vec_col).alias("v")
     )

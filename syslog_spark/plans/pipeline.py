@@ -36,11 +36,12 @@ class PipelineConfig:
     write_metrics: bool = True
     # fused pyarrow read+parse for plain parquet dirs (local paths and
     # pyarrow.fs schemes: file://, s3://, s3a://, hdfs://): skips the
-    # JVM row->Arrow feed conversion (the non-scaling cost identified by
-    # the in-worker timer; 13% faster at 8 cores / 24% at 32, bitwise
-    # identical output — tools/bench_direct_ab.py). "auto" uses it only
-    # when the layout is listable and fully understood; Iceberg tables
-    # and unreachable stores always take the catalog/scan reader.
+    # JVM row->Arrow feed conversion (the non-scaling cost found by the
+    # round-4 kernel profile, BENCH/PARSE_PROFILE_r4.json; measured 13%
+    # faster at 8 cores / 24% at 32, bitwise identical output). "auto"
+    # uses it only when the layout is listable and fully understood;
+    # Iceberg tables and unreachable stores always take the catalog/scan
+    # reader.
     direct_parquet: str = "auto"  # "auto" | "never" | "always"
     # LIKE-'p%' prefixes over the source partition value: the direct
     # path prunes at the FILE LIST (partitions never opened), the

@@ -5,7 +5,7 @@ The standard path (spark.read.parquet -> mapInArrow) pays a JVM feed
 tax: the vectorized parquet reader's columnar batches are converted to
 InternalRows, then re-serialized row-by-row into Arrow IPC for the
 python worker — for a list<int32> tokens column that conversion is the
-dominant JVM cost, and the in-worker timer (BENCH/PARSE_PROFILE_r4.json)
+dominant JVM cost, and the round-4 kernel profile (BENCH/PARSE_PROFILE_r4.json)
 shows it is exactly the part whose core-seconds double from 8 to 32
 local cores. Here the JVM only distributes FILE PATHS (spark.range over
 a broadcast file list); each task opens its parquet file through a
@@ -42,7 +42,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 
 from .. import constants as C
-from ..operators.parse import make_kernel_runner
+from ..operators.parse import parse_record_batch
 from ..operators.schema import parsed_spark_schema
 
 
@@ -209,7 +209,6 @@ def parse_tokens_direct(
         import pyarrow.parquet as pq
 
         wfs, flist = bc.value
-        run = make_kernel_runner(ref_year, ref_tz, keep_raw)
         cols = ["doc_id", "tokens", "n_tok", "source"]
 
         def file_tables(b):
@@ -267,7 +266,7 @@ def parse_tokens_direct(
         def emit(table):
             for rb in table.combine_chunks().to_batches(batch_rows):
                 if rb.num_rows:
-                    yield run(rb)
+                    yield parse_record_batch(rb, ref_year, ref_tz, keep_raw)
 
         for b in batches:
             buf, buffered = [], 0

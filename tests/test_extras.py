@@ -50,14 +50,16 @@ def test_minhash_near_dup(spark, docs):
 
 def test_minhash_accuracy(spark):
     """Minhash signature similarity approximates true Jaccard."""
-    from syslog_spark.operators.dedup import minhash_signature, shingles
+    from syslog_spark.operators.dedup import (
+        _signature_batch_udf, shingle_hashes, shingles,
+    )
 
     rows = [("a", "abcdefghijklmnopqrstuvwxyz" * 4),
             ("b", "abcdefghijklmnopqrstuvwxyz" * 3 + "0123456789abcdefghijklmnop")]
     df = spark.createDataFrame(rows, "doc_id string, text string")
     out = df.select(
         "doc_id",
-        minhash_signature("text", 128).alias("sig"),
+        _signature_batch_udf(128)(shingle_hashes("text")).alias("sig"),
         shingles("text").alias("sh"),
     ).collect()
     sig = {r["doc_id"]: r["sig"] for r in out}
@@ -306,25 +308,6 @@ def test_dedupe_by_components_minhash_end_to_end(spark):
     assert kept == [0, 10, 11]
 
 
-def test_rh_signature_engines_agree(spark):
-    """The pandas batch-matmul signature is bitwise-equal to the Catalyst
-    per-bit literal form (differences require a plane dot within float
-    rounding of exactly 0 — measure-zero for continuous embeddings)."""
-    from syslog_spark.operators.similarity import rh_signature
-
-    rng = np.random.RandomState(7)
-    rows = [(i, rng.normal(size=64).tolist()) for i in range(200)]
-    emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    both = emb.select(
-        "vec_id",
-        rh_signature("embedding", dim=64, engine="catalyst").alias("s_cat"),
-        rh_signature("embedding", dim=64, engine="pandas").alias("s_pd"),
-    ).collect()
-    assert len(both) == 200
-    for r in both:
-        assert r["s_cat"] == r["s_pd"], r["vec_id"]
-
-
 def test_embedding_near_dups_dim768_no_plan_bloat(spark):
     """Real embedding width (768): the signature must route to the pandas
     matmul — plan analysis stays fast (no 50k literal nodes, no codegen
@@ -372,7 +355,7 @@ def test_star_contraction_matches_label_propagation(spark):
     edges = [(a, b) for a, b in edges if a != b]
     pairs = spark.createDataFrame(edges, "a long, b long")
     want = {(r["node"], r["component"])
-            for r in connected_components(pairs, algorithm="label").collect()}
+            for r in connected_components(pairs).collect()}
     got = {(r["node"], r["component"])
            for r in star_contraction_components(pairs).collect()}
     assert got == want
@@ -403,8 +386,8 @@ def test_star_contraction_deep_path_graph(spark):
 
 
 def test_connected_components_auto_falls_back(spark):
-    """algorithm='auto' degrades to star contraction instead of raising
-    when the propagation bound is hit mid-pipeline."""
+    """connected_components degrades to star contraction instead of
+    raising when the propagation bound is hit mid-pipeline."""
     import warnings
 
     from syslog_spark.operators.dedup import connected_components
@@ -418,10 +401,6 @@ def test_connected_components_auto_falls_back(spark):
     assert any("falling back" in str(x.message) for x in w)
     assert {r["component"] for r in comps} == {0}
     assert len(comps) == 61
-    with pytest.raises(RuntimeError):
-        connected_components(
-            pairs, max_iters=3, algorithm="label"
-        ).collect()
 
 
 def test_star_contraction_exact_termination_survives_sig_collision(
@@ -464,7 +443,7 @@ def test_connected_components_parquet_spill_checkpoint(spark, tmp_path):
     got = {
         (r["node"], r["component"])
         for r in connected_components(
-            pairs, algorithm="label", checkpoint_dir=ck, checkpoint_every=2
+            pairs, checkpoint_dir=ck, checkpoint_every=2
         ).collect()
     }
     assert got == {(i, 0) for i in range(10)}
@@ -491,7 +470,7 @@ def test_connected_components_spill_every_round(spark, tmp_path):
     got = {
         (r["node"], r["component"])
         for r in connected_components(
-            pairs, algorithm="label", checkpoint_dir=ck, checkpoint_every=1
+            pairs, checkpoint_dir=ck, checkpoint_every=1
         ).collect()
     }
     assert got == {(i, 0) for i in range(10)}
@@ -608,10 +587,16 @@ def test_star_contraction_random_graphs_vs_union_find(spark, seed):
 
 
 def test_rh_signature_pandas_null_and_bad_width_rows(spark):
-    """Null or wrong-width embeddings yield NULL signatures in the pandas
-    engine (matching Catalyst, where the dot over null/padded arrays is
-    null) instead of np.stack killing the task."""
-    from syslog_spark.operators.similarity import rh_signature
+    """Signatures equal the numpy reference (bit i set iff
+    ``v @ planes[i] > 0``, as a signed bigint); null or wrong-width
+    embeddings yield NULL signatures instead of np.stack killing the
+    task."""
+    from syslog_spark.operators.similarity import _planes, rh_signature
+
+    def reference(v):
+        bits = (np.asarray(v) @ _planes(64, 64, 42).T) > 0
+        u = sum(1 << i for i, b in enumerate(bits) if b)
+        return u - (1 << 64) if u >= 1 << 63 else u
 
     rng = np.random.RandomState(4)
     rows = [(0, rng.normal(size=64).tolist()),
@@ -619,39 +604,10 @@ def test_rh_signature_pandas_null_and_bad_width_rows(spark):
             (2, rng.normal(size=16).tolist()),   # wrong width
             (3, rng.normal(size=64).tolist())]
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    got = {r["vec_id"]: (r["s_pd"], r["s_cat"]) for r in emb.select(
-        "vec_id",
-        rh_signature("embedding", dim=64, engine="pandas").alias("s_pd"),
-        rh_signature("embedding", dim=64, engine="catalyst").alias("s_cat"),
+    got = {r["vec_id"]: r["sig"] for r in emb.select(
+        "vec_id", rh_signature("embedding", dim=64).alias("sig"),
     ).collect()}
-    assert got[1] == (None, None)
-    assert got[2] == (None, None)
-    assert got[0][0] == got[0][1] is not None
-    assert got[3][0] == got[3][1] is not None
-
-
-def test_rh_signature_sql_and_column_paths_agree(spark):
-    """The single-F.expr signature (simple identifier names) and the
-    Column-API fallback (Column inputs / non-identifier names) must
-    build the SAME values; dotted struct references take the Column
-    path and resolve (backticking them would break resolution)."""
-    import numpy as np
-
-    from pyspark.sql import functions as F
-    from syslog_spark.operators.similarity import rh_signature
-
-    rng = np.random.RandomState(7)
-    rows = [(i, [float(x) for x in rng.normal(size=8)]) for i in range(50)]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    both = df.select(
-        rh_signature("embedding", 8, 16, cast=False).alias("sql_sig"),
-        rh_signature(F.col("embedding"), 8, 16, cast=False)
-        .alias("col_sig"),
-    )
-    assert both.filter("sql_sig <> col_sig").count() == 0
-    # dotted name through a struct: Column path resolves it
-    nested = df.select(F.struct("embedding").alias("s"))
-    got = nested.select(
-        rh_signature(F.col("s.embedding"), 8, 16, cast=False).alias("sig")
-    )
-    assert got.filter("sig is null").count() == 0
+    assert got[1] is None
+    assert got[2] is None
+    assert got[0] == reference(rows[0][1])
+    assert got[3] == reference(rows[3][1])

@@ -29,8 +29,9 @@ def test_numpy_signature_bit_identical_to_catalyst(spark):
     """_signature_batch_udf must return the EXACT values of the Catalyst
     fold chain (same coefficients, same mod arithmetic), including the
     all-NULL signature for NULL text."""
+    from minhash_reference import signature_from_hashes
     from syslog_spark.operators.dedup import (
-        _signature_batch_udf, _signature_from_hashes, shingle_hashes,
+        _signature_batch_udf, shingle_hashes,
     )
 
     rows = _random_docs(30) + [("dnull", None), ("dempty", "")]
@@ -49,7 +50,7 @@ def test_numpy_signature_bit_identical_to_catalyst(spark):
         r["doc_id"]: r["s"]
         for r in hashes.select(
             "doc_id",
-            _signature_from_hashes(F.col("_sh"), 16, seed=42).alias("s"),
+            signature_from_hashes(F.col("_sh"), 16, seed=42).alias("s"),
         ).collect()
     }
     assert got == want
@@ -233,3 +234,16 @@ def test_signature_udf_empty_array_matches_catalyst_null(spark):
     assert got["c"] == [None] * 8
     assert all(v is not None for v in got["a"])
     assert all(v is not None for v in got["d"])
+
+
+def test_spread_if_narrow_streaming_and_narrow_batch(spark):
+    """A streaming frame passes through unchanged (it has no RDD to
+    count); a 1-partition batch frame fans out to defaultParallelism."""
+    from syslog_spark.operators.dedup import _spread_if_narrow
+
+    stream = spark.readStream.format("rate").load()
+    assert _spread_if_narrow(stream) is stream
+    narrow = spark.range(10, numPartitions=1)
+    out = _spread_if_narrow(narrow)
+    assert out.rdd.getNumPartitions() == spark.sparkContext.defaultParallelism
+    assert sorted(r["id"] for r in out.collect()) == list(range(10))

@@ -97,7 +97,12 @@ def ceil_pow10(n: int) -> int:
 
 
 def rotate_text(col: pa.ChunkedArray, k: int) -> pa.Array:
-    """Per-copy lowercase-letter rotation (bijective on shingles)."""
+    """Per-copy lowercase-letter rotation (bijective on shingles).
+
+    Only 26 distinct rotations exist: k=26 would be the identity again
+    and silently make copy k a near-dup clique with copy 0."""
+    if not 0 <= k < 26:
+        raise ValueError(f"rotation k={k} outside 0..25")
     if k == 0:
         return col.combine_chunks()
     src = "abcdefghijklmnopqrstuvwxyz"
@@ -118,7 +123,15 @@ def permute_vecs(col: pa.ChunkedArray, k: int, dim: int) -> pa.Array:
     rng = np.random.RandomState(1000 + k)
     perm = rng.permutation(dim)
     flat = col.combine_chunks()
-    vals = flat.flatten().to_numpy(zero_copy_only=False).reshape(-1, dim)
+    values = flat.flatten()
+    # a null row or a row of another width would shift every later row
+    # across the reshape below and silently scramble the vectors
+    if flat.null_count or values.null_count:
+        raise ValueError("embedding column has null vectors or elements")
+    widths = pc.unique(pc.list_value_length(flat)).to_pylist()
+    if widths not in ([], [dim]):
+        raise ValueError(f"embedding rows are not all {dim} wide: {widths}")
+    vals = values.to_numpy(zero_copy_only=False).reshape(-1, dim)
     out = vals[:, perm]
     return pa.FixedSizeListArray.from_arrays(
         pa.array(out.reshape(-1), type=pa.float32()), dim
@@ -164,6 +177,10 @@ def main() -> None:
     ap.add_argument("--out", default="/tmp/sf1.0")
     ap.add_argument("--copies", type=int, default=10)
     a = ap.parse_args()
+    if a.copies > 26:
+        # one letter rotation per copy (rotate_text); a 27th copy would
+        # repeat copy 0's text
+        ap.error("--copies must be <= 26")
     os.makedirs(a.out, exist_ok=True)
     for name in sorted(FIXED | set(KEY_COLS)):
         upscale_table(name, a.out, a.copies)
