@@ -6,9 +6,9 @@ the north rule's fan-out, designed as a SINGLE PASS over the parsed rows:
   * every row gets a sink key ``sink_severity`` = severity, or -1 for rows
     that failed to parse — the error sink (the distributed version of the
     reference's stdout print at syslog.go:155) is just another partition,
-  * ONE shuffle (repartition on the sink key, optionally salted so hot
-    sinks split across writer tasks), ONE write partitioned by
-    (sink_severity, source),
+  * ONE shuffle (an AQE rebalance on the sink key: one file per sink
+    while partitions are small, hot sinks split across writer tasks),
+    ONE write partitioned by (sink_severity, source),
   * manifest / per-sink aggregates / per-partition lineage metrics are
     computed from the *written* table (cheap columnar re-reads), never by
     re-running the Python parse stage and never via caching — measured on
@@ -60,6 +60,17 @@ def with_sink_key(parsed: DataFrame) -> DataFrame:
         "sink_severity",
         F.coalesce(F.col("severity").cast("int"), F.lit(ERROR_SINK)),
     ).withColumn("input_partition", F.spark_partition_id())
+
+
+def rebalance_by_sink(df: DataFrame) -> DataFrame:
+    """The routing exchange: one REBALANCE_PARTITIONS_BY_COL shuffle on
+    (sink_severity, source). AQE coalesces small partitions, so a small
+    sink is written by one task as one file, and splits any partition
+    larger than ``spark.sql.adaptive.advisoryPartitionSizeInBytes``
+    across several tasks, so a hot sink (one facility dominating) does
+    not straggle. Only the keys that are actually hot get split; nothing
+    is salted up front."""
+    return df.hint("rebalance", "sink_severity", "source")
 
 
 def sink_manifest(routed: DataFrame) -> DataFrame:
@@ -248,18 +259,14 @@ def route_write(
     spark=None,
     resume: bool = False,
     write_metrics: bool = True,
-    files_per_sink: int | None = None,
-    n_write_tasks: int | None = None,
 ) -> dict:
     """Single-pass fan-out write + manifests.
 
-    files_per_sink salts the shuffle key so a hot sink (skewed
-    severity/source — e.g. one facility dominating) is written by several
-    tasks instead of one. The DEFAULT derives from the cluster's
-    parallelism (P/4, min 2) so the skewed plan never happens without
-    caller tuning; at scale set it explicitly to
-    ceil(hot_sink_rows / rows_per_file_target). files_per_sink=1 restores
-    the exactly-one-file-per-sink layout.
+    The write goes through :func:`rebalance_by_sink`: each sink is one
+    file while its shuffle partition stays under
+    ``spark.sql.adaptive.advisoryPartitionSizeInBytes``, and a hot sink
+    is split across several writer tasks/files past it — no per-call
+    file or task count to tune.
     With resume=True, sinks already in the manifest are skipped via a
     broadcast left_anti join and the returned ``sink_stats`` /
     ``routed_rows`` are CUMULATIVE (full manifest: prior runs + this one).
@@ -270,8 +277,6 @@ def route_write(
     import time as _time
 
     spark = spark or parsed.sparkSession
-    if files_per_sink is None:
-        files_per_sink = max(2, spark.sparkContext.defaultParallelism // 4)
     # static overwrite truncates the whole table in one step but is only
     # safe when nothing pre-exists; dynamic preserves untouched partitions
     # at the cost of a driver-side rename per partition dir (~10s/650 dirs
@@ -286,10 +291,10 @@ def route_write(
     # commit protocol: v2 moves task output into place at TASK commit
     # (parallel, no serial driver-side job-commit rename over every
     # sink dir — measured ~0.9s of a ~8s write at 32 cores, and the
-    # serial cost grows with sinks x files_per_sink, i.e. with cluster
-    # size: a direct Amdahl penalty on the 4N config). Safe only for
-    # fresh overwrites, where a crashed job is rerun from scratch and
-    # the static truncate clears any partials. Resume/append runs keep
+    # serial cost grows with the number of files written: a direct
+    # Amdahl penalty on a large write). Safe only for fresh overwrites,
+    # where a crashed job is rerun from scratch and the static truncate
+    # clears any partials. Resume/append runs keep
     # v1: v2's task-visible partial files would double-write a sink
     # that crashed mid-job on the next resume (manifest rows are only
     # written after job success, so v1's invisible-until-job-commit is
@@ -328,11 +333,9 @@ def route_write(
                 F.broadcast(keys), ["sink_severity", "source"], "left_anti"
             )
 
-    n = n_write_tasks or spark.sparkContext.defaultParallelism * 2
-    salt = F.pmod(F.xxhash64("doc_id"), F.lit(max(files_per_sink, 1)))
     mode = "overwrite" if not resume else "append"
     (
-        df.repartition(n, F.col("sink_severity"), F.col("source"), salt)
+        rebalance_by_sink(df)
         .write.mode(mode)
         .option("partitionOverwriteMode", overwrite_mode)
         .option(

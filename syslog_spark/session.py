@@ -25,7 +25,7 @@ def build_session(
     arrow_batch_rows: int = 32768,
     extra_conf: dict | None = None,
 ) -> SparkSession:
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(_usable_cpus())
     # Respect an externally-configured master (spark-submit --master sets
     # the spark.master JVM system property): only default to local[cpus]
     # when the caller passed none AND the environment configured none.
@@ -55,7 +55,7 @@ def build_session(
     local_sizing = local_jvm and master.startswith("local")
     if shuffle_partitions is None and local_sizing:
         n = master[master.find("[") + 1 : master.find("]")] if "[" in master else cpus
-        shuffle_partitions = int(n) if n.isdigit() else 32
+        shuffle_partitions = int(n) if n.isdigit() else _usable_cpus()
     # one BLAS/OMP thread per python worker — the workers ARE the
     # parallelism; nested thread pools oversubscribe the box
     for var in ("OMP_NUM_THREADS", "OPENBLAS_NUM_THREADS", "MKL_NUM_THREADS"):
@@ -96,6 +96,14 @@ def build_session(
     spark.sparkContext.setLogLevel("WARN")
     _ship_package(spark)
     return spark
+
+
+def _usable_cpus() -> int:
+    """CPUs this process may run on (its affinity mask, which a container
+    CPU set or ``taskset`` narrows below ``os.cpu_count()``)."""
+    if hasattr(os, "sched_getaffinity"):
+        return len(os.sched_getaffinity(0))
+    return os.cpu_count() or 1
 
 
 def _has_gateway() -> bool:

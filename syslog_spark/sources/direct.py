@@ -149,6 +149,19 @@ def _stripe_by_size(files: list[tuple], n_parts: int) -> list[tuple]:
     return [files[i] for b in range(n_parts) for i in order[b::n_parts]]
 
 
+def _fan_out(spark: SparkSession, files: list[tuple]) -> int:
+    """Parse tasks for (file, size, src) entries: one wave of
+    defaultParallelism tasks, more only when the input exceeds one
+    ``spark.sql.files.maxPartitionBytes`` split per task, and never more
+    tasks than files (a file is the split unit). Each Python task costs
+    ~0.3 s of fixed overhead even when it does nothing, so a small input
+    dealt over several waves pays that overhead per wave."""
+    split = spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
+    total = sum(sz for _f, sz, _src in files)
+    want = max(spark.sparkContext.defaultParallelism, -(-total // split))
+    return min(len(files), want)
+
+
 def parse_tokens_direct(
     spark: SparkSession,
     path: str,
@@ -173,6 +186,12 @@ def parse_tokens_direct(
     prefix list is rejected — it would mean "no sources", which is
     never what a caller wants (use None for all sources).
 
+    Files are dealt into one task wave (``defaultParallelism`` tasks)
+    unless the input is larger than that many
+    ``spark.sql.files.maxPartitionBytes`` splits; then there is one task
+    per split, capped at the file count (:func:`_fan_out`).
+    :func:`_stripe_by_size` balances the files across those tasks.
+
     ``_scanned`` is the private single-listing handoff: plans/pipeline
     passes its own _scan result so auto mode lists the store once, not
     twice."""
@@ -194,9 +213,7 @@ def parse_tokens_direct(
             raise FileNotFoundError(
                 f"no partitions under {path} match {source_prefixes}"
             )
-    n_parts = max(
-        1, min(len(files), spark.sparkContext.defaultParallelism * 3)
-    )
+    n_parts = _fan_out(spark, files)
     striped = [
         (f, src) for f, _sz, src in _stripe_by_size(files, n_parts)
     ]
@@ -258,8 +275,9 @@ def parse_tokens_direct(
                 finally:
                     pf.close()
 
-        # token files are often much smaller than one Arrow batch (the
-        # salted fan-out writes many ~10k-row files): BUFFER across files
+        # token files are often much smaller than one Arrow batch (a
+        # partitioned write leaves one file per writer task per source,
+        # often ~10k rows): BUFFER across files
         # up to batch_rows so the parse kernel keeps its per-batch
         # amortization — a 10k-row batch pays the same regex machinery
         # as a 32k one
@@ -279,8 +297,6 @@ def parse_tokens_direct(
             if buf:
                 yield from emit(pa.concat_tables(buf))
 
-    # a few tasks per core (not one per file): workers buffer several
-    # small files into full batches, and scheduling overhead stays flat
     seed = spark.range(len(striped), numPartitions=n_parts).select(
         F.col("id").cast("long").alias("id")
     )

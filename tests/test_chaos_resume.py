@@ -56,15 +56,18 @@ _CHILD = textwrap.dedent("""
     from syslog_spark.operators.parse import parse_tokens
     from syslog_spark.operators.route import route_write
 
+    # 24 uncoalesced write tasks on 2 cores: the write runs in several
+    # waves, so the kill lands after the first task commit, mid-job
     spark = build_session(
-        app_name="chaos_child", master="local[2]", shuffle_partitions=4,
+        app_name="chaos_child", master="local[2]", shuffle_partitions=24,
         extra_conf={{"spark.driver.memory": "4g",
+                     "spark.sql.adaptive.coalescePartitions.enabled": "false",
                      "spark.ui.showConsoleProgress": "false"}},
     )
     tok = spark.read.parquet({tokens!r})
     print("READY", flush=True)
     route_write(parse_tokens(tok), {out!r}, spark, resume={resume},
-                write_metrics=False, files_per_sink=4, n_write_tasks=24)
+                write_metrics=False)
     print("DONE", flush=True)
 """)
 
@@ -119,10 +122,10 @@ def test_chaos_kill_fresh_then_rerun_and_kill_resume_then_resume(
     # ---- uncrashed reference: fresh b1, then resume-append b2
     clean = str(tmp_path / "out_clean")
     route_write(parse_tokens(spark.read.parquet(b1)), clean, spark,
-                write_metrics=False, files_per_sink=4)
+                write_metrics=False)
     clean_after_b1 = _manifest_set(spark, clean)
     route_write(parse_tokens(spark.read.parquet(b2)), clean, spark,
-                resume=True, write_metrics=False, files_per_sink=4)
+                resume=True, write_metrics=False)
     clean_final = _manifest_set(spark, clean)
     assert clean_final > clean_after_b1
 
@@ -145,11 +148,11 @@ def test_chaos_kill_fresh_then_rerun_and_kill_resume_then_resume(
     # and then legitimize the duplicates in a fresh manifest
     with pytest.raises(RuntimeError, match="crashed\\s+FRESH write"):
         route_write(parse_tokens(spark.read.parquet(b1)), out, spark,
-                    resume=True, write_metrics=False, files_per_sink=4)
+                    resume=True, write_metrics=False)
 
     # documented recovery: rerun the fresh write from scratch
     route_write(parse_tokens(spark.read.parquet(b1)), out, spark,
-                write_metrics=False, files_per_sink=4)
+                write_metrics=False)
     assert _manifest_set(spark, out) == clean_after_b1
 
     # ---- scenario 2: kill a RESUME/append (committer v1) write mid-job
@@ -165,7 +168,7 @@ def test_chaos_kill_fresh_then_rerun_and_kill_resume_then_resume(
 
     # documented recovery: run the SAME resume again
     route_write(parse_tokens(spark.read.parquet(b2)), out, spark,
-                resume=True, write_metrics=False, files_per_sink=4)
+                resume=True, write_metrics=False)
     assert _manifest_set(spark, out) == clean_final
 
     # the routed tables are row-multiset identical (not just manifest):

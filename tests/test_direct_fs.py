@@ -131,6 +131,49 @@ def test_stripe_by_size_balances_contiguous_ranges():
     assert striped == _stripe_by_size(list(files), n_parts)
 
 
+def test_direct_source_fan_out_one_wave_then_split_size(spark, tmp_path):
+    """A small input runs in one task wave (defaultParallelism tasks);
+    past one spark.sql.files.maxPartitionBytes split per task there is a
+    task per split, capped at the file count. The output equals the
+    standard reader's at every fan-out."""
+    from syslog_spark.operators.parse import parse_tokens
+    from syslog_spark.operators.route import row_checksum
+    from syslog_spark.sources.direct import _scan, parse_tokens_direct
+
+    path = str(tmp_path / "tok")
+    _mini_tokens(spark, "rfc5424", 1_600).repartition(16).write.mode(
+        "overwrite"
+    ).parquet(path)
+    _, files = _scan(path)
+    assert len(files) == 16
+    total = sum(sz for _f, sz, _src in files)
+
+    def snap(df):
+        return df.agg(
+            F.count(F.lit(1)).alias("n"),
+            F.bit_xor(row_checksum()).alias("cs"),
+            F.bit_xor(F.xxhash64("source", "ts")).alias("cs_src_ts"),
+        ).first()
+
+    want = snap(parse_tokens(spark.read.parquet(path)))
+    assert want["n"] == 1_600
+    P = spark.sparkContext.defaultParallelism
+    key = "spark.sql.files.maxPartitionBytes"
+    before = spark.conf.get(key)
+    try:
+        got = {}
+        # 256 MB (the session default), total/8 per split, 1 byte
+        for split in (before, str(-(-total // 8)), "1"):
+            spark.conf.set(key, split)
+            df = parse_tokens_direct(spark, path)
+            got[split] = df.rdd.getNumPartitions()
+            assert snap(df) == want
+    finally:
+        spark.conf.set(key, before)
+    assert P < 8 < 16
+    assert list(got.values()) == [P, 8, 16]
+
+
 def test_resolve_fs_s3a_alias(monkeypatch):
     """s3a:// (the Hadoop connector scheme) aliases to pyarrow's s3://
     handler — path rewriting only; no network touched here."""

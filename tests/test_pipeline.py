@@ -278,49 +278,64 @@ def test_resume_skips_completed(spark, synth, tmp_path):
     assert spark.read.parquet(f"{out}/routed").count() == first
 
 
-def test_files_per_sink_salting(spark, synth, tmp_path):
-    out = str(tmp_path / "out3")
+def test_default_write_one_file_per_sink(spark, synth, tmp_path):
+    """A small multi-sink table under defaults: the rebalance exchange
+    writes every (sink_severity, source) sink as exactly one file."""
     import glob
 
+    out = str(tmp_path / "out3")
     df = enrich(parse_tokens(spark.read.parquet(synth), Y, TZ))
-    route_write(df, out, spark, write_metrics=False, files_per_sink=3)
-    some_sink = glob.glob(f"{out}/routed/sink_severity=*/source=*")[0]
-    nfiles = len(glob.glob(f"{some_sink}/*.parquet"))
-    assert 1 <= nfiles <= 3
+    route_write(df, out, spark, write_metrics=False)
+    sinks = glob.glob(f"{out}/routed/sink_severity=*/source=*")
+    assert len(sinks) > 1
+    assert {len(glob.glob(f"{d}/*.parquet")) for d in sinks} == {1}
 
 
-def test_default_salt_splits_hot_sink(spark, tmp_path):
-    """Under DEFAULTS (no files_per_sink tuning) a skewed sink is written
-    by multiple tasks/files, and the manifest checksums equal the
-    unsalted layout's — salting changes the file layout, never the routed
-    row sets."""
+def test_rebalance_splits_hot_sink(spark, tmp_path):
+    """A sink whose shuffle partition exceeds AQE's advisory partition
+    size is split across several writer tasks/files, and its manifest
+    rows and checksums equal those of the one-file layout — the split
+    changes the file layout, never the routed row sets."""
     import glob
 
     from syslog_spark.sources.datagen import generate_tokens_df
 
-    out_a = str(tmp_path / "salted")
-    out_b = str(tmp_path / "plain")
-    # skew: every row the same (severity, source) sink
+    out_split = str(tmp_path / "split")
+    out_one = str(tmp_path / "one")
+    # skew: every row the same source, so one sink per severity
     tok = generate_tokens_df(spark, 4000, partitions=4).withColumn(
         "source", F.lit("rfc5424/hot")
     )
     df = enrich(parse_tokens(tok, Y, TZ))
-    route_write(df, out_a, spark, write_metrics=False)  # default salt
-    route_write(df, out_b, spark, write_metrics=False, files_per_sink=1)
-    sizes = sorted(
-        (len(glob.glob(f"{d}/*.parquet")), d)
-        for d in glob.glob(f"{out_a}/routed/sink_severity=*/source=*")
-    )
-    # the hottest sink must split across >1 file without caller tuning
-    assert sizes[-1][0] > 1, sizes
-    m_a = spark.read.parquet(f"{out_a}/manifest").select(
+    route_write(df, out_one, spark, write_metrics=False)
+    key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    before = spark.conf.get(key, None)
+    spark.conf.set(key, "16k")
+    try:
+        route_write(df, out_split, spark, write_metrics=False)
+    finally:
+        if before is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, before)
+
+    def files_per_sink(out):
+        return sorted(
+            (len(glob.glob(f"{d}/*.parquet")), d[len(out):])
+            for d in glob.glob(f"{out}/routed/sink_severity=*/source=*")
+        )
+
+    assert {n for n, _ in files_per_sink(out_one)} == {1}
+    # the hottest sink splits across >1 file
+    assert files_per_sink(out_split)[-1][0] > 1, files_per_sink(out_split)
+    m_split = spark.read.parquet(f"{out_split}/manifest").select(
         "sink_severity", "source", "rows", "row_set_checksum"
     )
-    m_b = spark.read.parquet(f"{out_b}/manifest").select(
+    m_one = spark.read.parquet(f"{out_one}/manifest").select(
         "sink_severity", "source", "rows", "row_set_checksum"
     )
-    assert m_a.exceptAll(m_b).count() == 0
-    assert m_b.exceptAll(m_a).count() == 0
+    assert m_split.exceptAll(m_one).count() == 0
+    assert m_one.exceptAll(m_split).count() == 0
 
 
 def test_resume_appends_new_sinks(spark, tmp_path):

@@ -116,19 +116,20 @@ def test_embedding_neardup_no_cross_join(spark):
 
 def test_single_shuffle_in_route_plan(spark):
     """parse -> enrich -> sink-key assignment stays shuffle-free; the only
-    exchange is the explicit routing repartition."""
+    exchange is route_write's rebalance on the sink key, unsalted."""
     from syslog_spark.operators.enrich import enrich
     from syslog_spark.operators.parse import parse_tokens
-    from syslog_spark.operators.route import with_sink_key
+    from syslog_spark.operators.route import rebalance_by_sink, with_sink_key
     from syslog_spark.sources.datagen import generate_tokens_df
 
     df = with_sink_key(
         enrich(parse_tokens(generate_tokens_df(spark, 100, partitions=2)))
     )
     assert "Exchange" not in plan_of(df)
-    routed = df.repartition(8, "sink_severity", "source")
-    plan = plan_of(routed)
+    plan = plan_of(rebalance_by_sink(df))
     assert plan.count("Exchange") == 1
+    assert "REBALANCE_PARTITIONS_BY_COL" in plan
+    assert "xxhash64" not in plan
 
 
 def test_connected_components_no_cross_join(spark):

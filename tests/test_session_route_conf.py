@@ -101,9 +101,7 @@ def test_route_write_does_not_leak_committer_conf(spark, sf_dir, tmp_path):
         )
         .withColumn("n_tok", F.size("tokens"))
     )
-    res = route_write(
-        parse_tokens(tok), str(tmp_path / "out"), spark, files_per_sink=1
-    )
+    res = route_write(parse_tokens(tok), str(tmp_path / "out"), spark)
     assert res["routed_rows"] > 0
 
     after_committer = hconf.get(
@@ -141,14 +139,8 @@ def test_route_write_layering_preserves_other_sinks(spark, tmp_path):
     from syslog_spark.operators.route import route_write
 
     out = str(tmp_path / "out")
-    route_write(
-        parse_tokens(_mini_tokens(spark, "rfc5424/a")), out, spark,
-        files_per_sink=1,
-    )
-    route_write(
-        parse_tokens(_mini_tokens(spark, "rfc5424/b")), out, spark,
-        files_per_sink=1,
-    )
+    route_write(parse_tokens(_mini_tokens(spark, "rfc5424/a")), out, spark)
+    route_write(parse_tokens(_mini_tokens(spark, "rfc5424/b")), out, spark)
     sources = {
         r["source"]
         for r in spark.read.parquet(f"{out}/routed")
@@ -197,22 +189,17 @@ def test_build_session_respects_real_spark_submit_master(tmp_path):
     assert got["effective"] == "local[3]"
 
 
-def test_build_session_remote_master_env_leaves_sizing(monkeypatch):
-    """MASTER env pointing at a REAL cluster (spark://...) with no
-    gateway: build_session must start the JVM with that master but must
-    NOT force local sizing conf onto it (round-5 ADVICE: the '[' parse
-    fall-through used to apply shuffle.partitions=32 and a 48g
-    driver.memory, overriding cluster-appropriate conf)."""
+class _Stop(Exception):
+    pass
+
+
+def _record_builder(monkeypatch) -> dict:
+    """Replace build_session's SparkSession with a builder that records
+    its master and conf into the returned dict and raises _Stop instead
+    of starting a JVM."""
     from syslog_spark import session as S
 
-    monkeypatch.delenv("PYSPARK_GATEWAY_PORT", raising=False)
-    monkeypatch.delenv("PYSPARK_GATEWAY_SECRET", raising=False)
-    monkeypatch.setenv("MASTER", "spark://cluster:7077")
-
     recorded = {}
-
-    class _Stop(Exception):
-        pass
 
     class FakeBuilder:
         def appName(self, *_a):
@@ -233,6 +220,22 @@ def test_build_session_remote_master_env_leaves_sizing(monkeypatch):
         builder = FakeBuilder()
 
     monkeypatch.setattr(S, "SparkSession", FakeSparkSession)
+    return recorded
+
+
+def test_build_session_remote_master_env_leaves_sizing(monkeypatch):
+    """MASTER env pointing at a REAL cluster (spark://...) with no
+    gateway: build_session must start the JVM with that master but must
+    NOT force local sizing conf onto it (round-5 ADVICE: the '[' parse
+    fall-through used to apply shuffle.partitions=32 and a 48g
+    driver.memory, overriding cluster-appropriate conf)."""
+    from syslog_spark import session as S
+
+    monkeypatch.delenv("PYSPARK_GATEWAY_PORT", raising=False)
+    monkeypatch.delenv("PYSPARK_GATEWAY_SECRET", raising=False)
+    monkeypatch.setenv("MASTER", "spark://cluster:7077")
+
+    recorded = _record_builder(monkeypatch)
     monkeypatch.delenv("SPARK_DRIVER_MEM", raising=False)
     with pytest.raises(_Stop):
         S.build_session(app_name="probe_remote")
@@ -249,3 +252,27 @@ def test_build_session_remote_master_env_leaves_sizing(monkeypatch):
         S.build_session(app_name="probe_remote2")
     assert recorded["spark.driver.memory"] == "7g"
     assert "spark.sql.shuffle.partitions" not in recorded
+
+
+def test_build_session_default_cpus_follow_affinity(monkeypatch):
+    """With no master and no SPARK_GRAFT_CPUS, the local master and its
+    shuffle partitions take the CPUs of this process's affinity mask,
+    not a fixed count; an explicit SPARK_GRAFT_CPUS still wins."""
+    from syslog_spark import session as S
+
+    for var in ("PYSPARK_GATEWAY_PORT", "PYSPARK_GATEWAY_SECRET", "MASTER",
+                "SPARK_GRAFT_CPUS"):
+        monkeypatch.delenv(var, raising=False)
+
+    recorded = _record_builder(monkeypatch)
+    n = len(os.sched_getaffinity(0))
+    with pytest.raises(_Stop):
+        S.build_session(app_name="probe_cpus")
+    assert recorded["__master__"] == f"local[{n}]"
+    assert recorded["spark.sql.shuffle.partitions"] == str(n)
+
+    recorded.clear()
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
+    with pytest.raises(_Stop):
+        S.build_session(app_name="probe_cpus_env")
+    assert recorded["__master__"] == "local[3]"
