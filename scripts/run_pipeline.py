@@ -46,15 +46,8 @@ def main() -> int:
                     help="year injected into year-less nginx timestamps")
     ap.add_argument("--reference-tz-seconds", type=int, default=None,
                     help="tz offset injected into zone-less timestamps")
-    ap.add_argument("--no-metrics", action="store_true",
-                    help="skip per-partition lineage metrics")
     ap.add_argument("--master", default=None,
                     help="standalone only; under spark-submit leave unset")
-    ap.add_argument("--direct", default="auto",
-                    choices=("auto", "never", "always"),
-                    help="fused pyarrow read+parse (auto: when the input "
-                         "is a plain parquet dir on a pyarrow.fs-readable "
-                         "store: local, file://, s3://, s3a://, hdfs://)")
     ap.add_argument("--source-prefix", action="append", default=None,
                     metavar="PREFIX",
                     help="process only sources matching this LIKE-'p%%' "
@@ -81,12 +74,9 @@ def main() -> int:
             else C.DEFAULT_REFERENCE_TZ_OFFSET_SECONDS
         ),
         resume=args.resume,
-        write_metrics=not args.no_metrics,
-        direct_parquet=args.direct,
         source_prefixes=args.source_prefix,
     )
     res = run_pipeline(spark, args.input, args.out, cfg)
-    res.pop("sink_stats", None)
     print(json.dumps(res))
     spark.stop()
     return 0

@@ -317,6 +317,19 @@ def make_parse_fn(ref_year: int, ref_tz: int, keep_raw: bool):
     return fn
 
 
+def _parse_frame(df, cols, ref_year: int, ref_tz: int, keep_raw: bool):
+    """The one parse stage behind every DataFrame entry point: select the
+    input columns, one mapInArrow over :func:`make_parse_fn`, then the
+    JVM-side analytic timestamp column (UTC instant)."""
+    from pyspark.sql import functions as F
+
+    out = df.select(*cols).mapInArrow(
+        make_parse_fn(ref_year, ref_tz, keep_raw),
+        parsed_spark_schema(keep_raw),
+    )
+    return out.withColumn("ts", F.timestamp_micros(F.col("ts_micros")))
+
+
 def parse_tokens(
     df,
     ref_year: int = C.DEFAULT_REFERENCE_YEAR,
@@ -327,15 +340,9 @@ def parse_tokens(
 
     Equivalent of ParseMessage over every row (syslog.go:143-161), with the
     error sink columns replacing the reference's (nil, err) return."""
-    from pyspark.sql import functions as F
-
-    df = df.select("doc_id", "tokens", "n_tok", "source")
-    out = df.mapInArrow(
-        make_parse_fn(ref_year, ref_tz, keep_raw),
-        parsed_spark_schema(keep_raw),
+    return _parse_frame(
+        df, ("doc_id", "tokens", "n_tok", "source"), ref_year, ref_tz, keep_raw
     )
-    # JVM-side analytic timestamp column (UTC instant)
-    return out.withColumn("ts", F.timestamp_micros(F.col("ts_micros")))
 
 
 def new_parser(
@@ -370,11 +377,6 @@ def parse_lines(
     Raw-string variant of :func:`parse_tokens` for callers that already
     hold text lines (e.g. the DuckDB cross-check queries); `source` selects
     the format as usual."""
-    from pyspark.sql import functions as F
-
-    df = df.select("doc_id", "line", "source")
-    out = df.mapInArrow(
-        make_parse_fn(ref_year, ref_tz, keep_raw),
-        parsed_spark_schema(keep_raw),
+    return _parse_frame(
+        df, ("doc_id", "line", "source"), ref_year, ref_tz, keep_raw
     )
-    return out.withColumn("ts", F.timestamp_micros(F.col("ts_micros")))

@@ -7,7 +7,8 @@ The Spark lifecycle equivalent of the reference's ParseMessage driver loop
     -> parse (one mapInArrow stage: detokenize + parse, no shuffle)
     -> enrich (literal lookups / broadcast joins, no shuffle)
     -> route  (ONE shuffle on (severity, source) for the fan-out write)
-    -> aggregates (reuses the same key space; AQE/salting for skew)
+    -> aggregate (one scan of the routed table: manifest + per-sink stats;
+       hot sinks are split by the AQE rebalance on the routing shuffle)
 
 Checkpoint/resume: the routing manifest records completed sinks; a resumed
 run anti-joins them out. Per-partition lineage rows land in <out>/metrics.
@@ -24,6 +25,7 @@ from .. import constants as C
 from ..operators.enrich import enrich
 from ..operators.parse import parse_tokens
 from ..operators.route import route_write
+from ..sources import direct
 from ..sources.io import read_tokens
 
 
@@ -32,17 +34,6 @@ class PipelineConfig:
     reference_year: int = C.DEFAULT_REFERENCE_YEAR
     reference_tz_offset: int = C.DEFAULT_REFERENCE_TZ_OFFSET_SECONDS
     resume: bool = False
-    exact_percentiles: bool = True
-    write_metrics: bool = True
-    # fused pyarrow read+parse for plain parquet dirs (local paths and
-    # pyarrow.fs schemes: file://, s3://, s3a://, hdfs://): skips the
-    # JVM row->Arrow feed conversion (the non-scaling cost found by the
-    # round-4 kernel profile, BENCH/PARSE_PROFILE_r4.json; measured 13%
-    # faster at 8 cores / 24% at 32, bitwise identical output). "auto"
-    # uses it only when the layout is listable and fully understood;
-    # Iceberg tables and unreachable stores always take the catalog/scan
-    # reader.
-    direct_parquet: str = "auto"  # "auto" | "never" | "always"
     # LIKE-'p%' prefixes over the source partition value: the direct
     # path prunes at the FILE LIST (partitions never opened), the
     # standard path pushes a startswith filter into the scan (Catalyst
@@ -50,45 +41,35 @@ class PipelineConfig:
     source_prefixes: list[str] | None = None
 
 
-def _can_read_direct(input_path: str) -> bool:
-    if input_path.startswith("iceberg:"):
-        return False
-    from ..sources.direct import layout_supported
-
-    # only layouts the direct source FULLY understands (flat and/or one
-    # source= level) — a date=-partitioned or nested dir silently taking
-    # the fused path would drop files (round-4 review finding). Remote
-    # schemes (file://, s3a://, hdfs://) resolve through pyarrow.fs since
-    # round 5; an unreachable/unlistable store returns False here and the
-    # standard reader takes over.
-    return layout_supported(input_path)
-
-
 def parsed_frame(
     spark: SparkSession, input_path: str, cfg: PipelineConfig | None = None
 ) -> DataFrame:
+    """Read + parse + enrich. The input picks the feed path:
+
+      * ``iceberg:`` tables go through the catalog reader;
+      * a parquet dir the direct source can list — flat and/or one
+        ``source=`` level, on a local path or a pyarrow.fs store
+        (file://, s3://, s3a://, hdfs://) — takes the fused pyarrow
+        read+parse (sources/direct.py), which skips the JVM
+        row->Arrow feed conversion;
+      * anything else (another layout, an unreachable store) takes the
+        standard ``spark.read.parquet`` reader, which is always correct.
+
+    ONE listing decides the path AND feeds the direct source, so an
+    object store is listed once, not twice."""
     cfg = cfg or PipelineConfig()
     if cfg.source_prefixes is not None and not cfg.source_prefixes:
         raise ValueError(
             "source_prefixes=[] selects nothing; pass None for all sources"
         )
     scanned = None
-    use_direct = cfg.direct_parquet == "always"
-    if cfg.direct_parquet == "auto" and not input_path.startswith("iceberg:"):
-        # ONE listing decides feed-path support AND feeds the direct
-        # source (a layout_supported + parse_tokens_direct pair would
-        # recursively list an object store twice, review finding)
-        from ..sources.direct import _scan
-
+    if not input_path.startswith("iceberg:"):
         try:
-            scanned = _scan(input_path)
-            use_direct = True
+            scanned = direct._scan(input_path)
         except Exception:
-            use_direct = False
-    if use_direct:
-        from ..sources.direct import parse_tokens_direct
-
-        parsed = parse_tokens_direct(
+            pass  # a layout _scan rejects, or an unlistable store
+    if scanned is not None:
+        parsed = direct.parse_tokens_direct(
             spark, input_path, cfg.reference_year, cfg.reference_tz_offset,
             source_prefixes=cfg.source_prefixes, _scanned=scanned,
         )
@@ -123,9 +104,7 @@ def run_pipeline(
     cfg = cfg or PipelineConfig()
     t0 = time.monotonic()
     df = parsed_frame(spark, input_path, cfg)
-    route_info = route_write(
-        df, out_dir, spark, resume=cfg.resume, write_metrics=cfg.write_metrics
-    )
+    route_info = route_write(df, out_dir, spark, resume=cfg.resume)
     # per-sink aggregates were computed in the same scan as the manifest
     # (route_write -> sink_stats) and collected (tiny: one row per sink);
     # materialize the aggregate view from those rows — no data re-scan,

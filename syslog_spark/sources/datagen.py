@@ -10,7 +10,7 @@ Two layers:
   bench/scale runs: ``spark.range(n)`` -> mapInArrow, each row's content a
   pure function of its index (no RNG state, so any partitioning of the
   range yields the same table). Facility distribution is deliberately
-  skewed (hot facility = Local7) to exercise salting, per FIXTURES.md §2.
+  skewed (hot facility = Local7) to exercise skew handling, per FIXTURES.md §2.
 
 Tokenization: token id i == byte value i (FIXTURES.md §1); encoding is the
 exact inverse of operators/parse.detokenize_array.

@@ -18,11 +18,12 @@ Filesystems: plain local paths, ``file://``, ``s3://``/``s3a://`` and
 — the driver lists once (one recursive listing call, object-store
 friendly) and the workers open files through the same (pickled)
 FileSystem handle, so the fused path reaches the remote deployments the
-JVM feed tax actually lives on. An unreachable or unauthenticated store
-makes :func:`layout_supported` return False and the pipeline falls back
-to the standard (always-correct) reader.
+JVM feed tax actually lives on. The pipeline (plans/pipeline.py) takes
+this path for every input :func:`_scan` can list; an unreachable or
+unauthenticated store, or a layout it rejects, falls back to the
+standard (always-correct) reader.
 
-Trade-offs (this is an OPT-IN fast path, not the default):
+Trade-offs:
   * plain parquet directories only — an Iceberg table with delete files
     / schema evolution must go through the catalog reader (sources/io);
   * no Catalyst pushdown into the scan — irrelevant for the
@@ -114,20 +115,6 @@ def _scan(path: str):
     return fs, out
 
 
-def layout_supported(path: str) -> bool:
-    """True iff the directory is a layout the direct source understands
-    AND is actually listable: top-level *.parquet files and/or one level
-    of `source=` hive partitioning, nothing else holding parquet data.
-    Any listing failure (missing path, unknown scheme, unreachable or
-    unauthenticated object store) returns False — the caller's fallback
-    is the standard reader, which is always correct."""
-    try:
-        _scan(path)
-        return True
-    except Exception:
-        return False
-
-
 def list_parquet_files(path: str) -> list[tuple[str, str | None]]:
     """(file, hive-partition source value or None) pairs, sorted by path.
     Raises FileNotFoundError on layouts :func:`_scan` rejects."""
@@ -193,7 +180,7 @@ def parse_tokens_direct(
     :func:`_stripe_by_size` balances the files across those tasks.
 
     ``_scanned`` is the private single-listing handoff: plans/pipeline
-    passes its own _scan result so auto mode lists the store once, not
+    passes its own _scan result so the store is listed once, not
     twice."""
     from pyspark.sql import functions as F
 

@@ -21,7 +21,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..operators.enrich import enrich
-from ..operators.parse import make_parse_fn, parsed_spark_schema
+from ..operators.parse import parse_tokens
 from ..operators.schema import TOKENS_SPARK_SCHEMA
 from .. import constants as C
 
@@ -40,11 +40,7 @@ def parse_stream(
     ref_year: int = C.DEFAULT_REFERENCE_YEAR,
     ref_tz: int = C.DEFAULT_REFERENCE_TZ_OFFSET_SECONDS,
 ) -> DataFrame:
-    out = tokens.select("doc_id", "tokens", "n_tok", "source").mapInArrow(
-        make_parse_fn(ref_year, ref_tz, keep_raw=False),
-        parsed_spark_schema(False),
-    )
-    return enrich(out.withColumn("ts", F.timestamp_micros("ts_micros")))
+    return enrich(parse_tokens(tokens, ref_year, ref_tz))
 
 
 def windowed_severity_counts(

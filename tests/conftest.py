@@ -31,3 +31,25 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
+
+
+@pytest.fixture
+def standard_reader(monkeypatch):
+    """Context manager: inside it ``sources.direct._scan`` fails the way
+    it does on an unlistable store, the condition under which the
+    pipeline reads through ``spark.read.parquet`` instead of the direct
+    source."""
+    import contextlib
+
+    from syslog_spark.sources import direct
+
+    def unlistable(path):
+        raise OSError(f"cannot list {path}")
+
+    @contextlib.contextmanager
+    def forced():
+        with monkeypatch.context() as m:
+            m.setattr(direct, "_scan", unlistable)
+            yield
+
+    return forced

@@ -66,8 +66,7 @@ _CHILD = textwrap.dedent("""
     )
     tok = spark.read.parquet({tokens!r})
     print("READY", flush=True)
-    route_write(parse_tokens(tok), {out!r}, spark, resume={resume},
-                write_metrics=False)
+    route_write(parse_tokens(tok), {out!r}, spark, resume={resume})
     print("DONE", flush=True)
 """)
 
@@ -121,11 +120,10 @@ def test_chaos_kill_fresh_then_rerun_and_kill_resume_then_resume(
 
     # ---- uncrashed reference: fresh b1, then resume-append b2
     clean = str(tmp_path / "out_clean")
-    route_write(parse_tokens(spark.read.parquet(b1)), clean, spark,
-                write_metrics=False)
+    route_write(parse_tokens(spark.read.parquet(b1)), clean, spark)
     clean_after_b1 = _manifest_set(spark, clean)
     route_write(parse_tokens(spark.read.parquet(b2)), clean, spark,
-                resume=True, write_metrics=False)
+                resume=True)
     clean_final = _manifest_set(spark, clean)
     assert clean_final > clean_after_b1
 
@@ -148,11 +146,10 @@ def test_chaos_kill_fresh_then_rerun_and_kill_resume_then_resume(
     # and then legitimize the duplicates in a fresh manifest
     with pytest.raises(RuntimeError, match="crashed\\s+FRESH write"):
         route_write(parse_tokens(spark.read.parquet(b1)), out, spark,
-                    resume=True, write_metrics=False)
+                    resume=True)
 
     # documented recovery: rerun the fresh write from scratch
-    route_write(parse_tokens(spark.read.parquet(b1)), out, spark,
-                write_metrics=False)
+    route_write(parse_tokens(spark.read.parquet(b1)), out, spark)
     assert _manifest_set(spark, out) == clean_after_b1
 
     # ---- scenario 2: kill a RESUME/append (committer v1) write mid-job
@@ -168,7 +165,7 @@ def test_chaos_kill_fresh_then_rerun_and_kill_resume_then_resume(
 
     # documented recovery: run the SAME resume again
     route_write(parse_tokens(spark.read.parquet(b2)), out, spark,
-                resume=True, write_metrics=False)
+                resume=True)
     assert _manifest_set(spark, out) == clean_final
 
     # the routed tables are row-multiset identical (not just manifest):

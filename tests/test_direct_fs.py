@@ -30,18 +30,13 @@ def test_direct_source_file_uri_scheme(spark, tmp_path):
     """file:// URIs resolve through pyarrow.fs (the non-local-FS code
     path: FileSystem.from_uri listing + worker-side open_input_file) and
     produce the same row set as the plain local path."""
-    from syslog_spark.plans.pipeline import _can_read_direct
-    from syslog_spark.sources.direct import (
-        layout_supported, parse_tokens_direct,
-    )
+    from syslog_spark.sources.direct import parse_tokens_direct
 
     path = str(tmp_path / "tok")
     _mini_tokens(spark, "rfc5424", 2_000).write.mode("overwrite").partitionBy(
         "source"
     ).parquet(path)
     uri = f"file://{path}"
-    assert layout_supported(uri)
-    assert _can_read_direct(uri)
 
     def snap(df):
         return df.agg(
@@ -59,16 +54,13 @@ def test_direct_source_rejects_nested_under_source_dir(spark, tmp_path):
     """Parquet nested INSIDE a source= dir (source=x/date=y/part.parquet)
     must fail the layout guard — the flat glob would silently drop those
     rows (round-4 ADVICE finding)."""
-    from syslog_spark.plans.pipeline import _can_read_direct
-    from syslog_spark.sources.direct import (
-        layout_supported, list_parquet_files,
-    )
+    from syslog_spark.sources.direct import list_parquet_files
 
     path = str(tmp_path / "tok")
     _mini_tokens(spark, "rfc5424", 300).write.mode("overwrite").partitionBy(
         "source"
     ).parquet(path)
-    assert layout_supported(path)
+    assert len(list_parquet_files(path)) > 0
     nested = tmp_path / "tok" / "source=rfc5424" / "date=2024-01-01"
     nested.mkdir(parents=True)
     # a real (tiny) parquet file, nested one level too deep
@@ -78,10 +70,54 @@ def test_direct_source_rejects_nested_under_source_dir(spark, tmp_path):
     pq.write_table(
         pa.table({"doc_id": ["z"]}), str(nested / "part-0.parquet")
     )
-    assert not layout_supported(path)
-    assert not _can_read_direct(path)
     with pytest.raises(FileNotFoundError):
         list_parquet_files(path)
+
+
+def test_pipeline_falls_back_on_date_partitioned_layout(
+    spark, tmp_path, monkeypatch
+):
+    """A `partitionBy("source", "date")` token table is a layout the
+    direct source rejects, so run_pipeline reads it through the standard
+    reader; a flat `source=` table of the same rows takes the direct
+    path. Both routes give the same manifest."""
+    from syslog_spark.plans.pipeline import run_pipeline
+    from syslog_spark.sources import direct
+
+    direct_inputs = []
+    real = direct.parse_tokens_direct
+
+    def spy(spark_, path, *a, **kw):
+        direct_inputs.append(path)
+        return real(spark_, path, *a, **kw)
+
+    monkeypatch.setattr(direct, "parse_tokens_direct", spy)
+    rows = (
+        _mini_tokens(spark, "rfc5424", 300)
+        .unionAll(_mini_tokens(spark, "rfc5424x", 120, start=1000))
+        .withColumn("date", F.when(F.col("n_tok") % 2 == 0, "2024-01-01")
+                    .otherwise("2024-01-02"))
+    )
+    dated = str(tmp_path / "dated")
+    flat = str(tmp_path / "flat")
+    rows.write.partitionBy("source", "date").parquet(dated)
+    rows.drop("date").write.partitionBy("source").parquet(flat)
+
+    def manifest(inp, out):
+        run_pipeline(spark, inp, str(tmp_path / out))
+        return sorted(
+            (r["sink_severity"], r["source"], r["rows"],
+             r["row_set_checksum"])
+            for r in spark.read.parquet(f"{tmp_path}/{out}/manifest")
+            .collect()
+        )
+
+    m_dated = manifest(dated, "out_dated")
+    assert direct_inputs == []
+    m_flat = manifest(flat, "out_flat")
+    assert direct_inputs == [flat]
+    assert m_dated == m_flat
+    assert sum(r[2] for r in m_flat) == 420
 
 
 def test_direct_source_prefix_is_like_prefix(spark, tmp_path):
@@ -196,9 +232,8 @@ def test_resolve_fs_s3a_alias(monkeypatch):
 
 
 def test_direct_source_pipeline_auto_takes_file_uri(spark, tmp_path):
-    """parsed_frame with direct_parquet='auto' now engages the fused
-    source for a file:// URI (round-4 gap: any :// path silently fell
-    back to the taxed JVM reader)."""
+    """parsed_frame engages the fused source for a file:// URI (round-4
+    gap: any :// path silently fell back to the taxed JVM reader)."""
     from syslog_spark.plans.pipeline import PipelineConfig, parsed_frame
 
     path = str(tmp_path / "tok")
@@ -209,7 +244,9 @@ def test_direct_source_pipeline_auto_takes_file_uri(spark, tmp_path):
     assert df.count() == 500
 
 
-def test_pipeline_source_prefixes_both_paths(spark, tmp_path):
+def test_pipeline_source_prefixes_both_paths(
+    spark, tmp_path, standard_reader
+):
     """PipelineConfig.source_prefixes prunes equivalently through both
     feed paths: file-list pruning on the direct source, a pushed
     startswith filter (partition pruning on hive layouts) on the
@@ -233,15 +270,14 @@ def test_pipeline_source_prefixes_both_paths(spark, tmp_path):
             F.bit_xor(F.xxhash64("doc_id", "source")).alias("cs"),
         ).first()
 
-    a = snap(PipelineConfig(direct_parquet="always",
-                            source_prefixes=["rfc5424"]))
-    b = snap(PipelineConfig(direct_parquet="never",
-                            source_prefixes=["rfc5424"]))
+    a = snap(PipelineConfig(source_prefixes=["rfc5424"]))
+    with standard_reader():
+        b = snap(PipelineConfig(source_prefixes=["rfc5424"]))
     assert a["n"] == b["n"] == 280  # rfc5424 + rfc5424x, not nginx
     assert a["cs"] == b["cs"]
 
 
-def test_empty_source_prefixes_rejected(spark, tmp_path):
+def test_empty_source_prefixes_rejected(spark, tmp_path, standard_reader):
     """source_prefixes=[] is ambiguous (selects nothing) and previously
     got three different behaviors depending on feed-path routing; both
     entry points now reject it uniformly."""
@@ -254,9 +290,7 @@ def test_empty_source_prefixes_rejected(spark, tmp_path):
     ).parquet(path)
     with pytest.raises(ValueError, match="selects nothing"):
         parse_tokens_direct(spark, path, source_prefixes=[])
-    for direct in ("always", "never", "auto"):
-        with pytest.raises(ValueError, match="selects nothing"):
-            parsed_frame(
-                spark, path,
-                PipelineConfig(direct_parquet=direct, source_prefixes=[]),
-            )
+    with pytest.raises(ValueError, match="selects nothing"):
+        parsed_frame(spark, path, PipelineConfig(source_prefixes=[]))
+    with standard_reader(), pytest.raises(ValueError, match="selects nothing"):
+        parsed_frame(spark, path, PipelineConfig(source_prefixes=[]))

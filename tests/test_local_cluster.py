@@ -25,7 +25,11 @@ _PROBE = textwrap.dedent("""
     from pyspark.sql import functions as F
     from syslog_spark.session import build_session
     from syslog_spark.sources.datagen import write_token_table
-    from syslog_spark.plans.pipeline import PipelineConfig, run_pipeline
+    from syslog_spark.operators.enrich import enrich
+    from syslog_spark.operators.parse import parse_tokens
+    from syslog_spark.operators.route import ERROR_SINK, route_write
+    from syslog_spark.plans.pipeline import run_pipeline
+    from syslog_spark.sources.io import read_tokens
     from syslog_spark.operators.dedup import (
         connected_components, near_duplicates_minhash,
     )
@@ -40,10 +44,14 @@ _PROBE = textwrap.dedent("""
     # real executor boundary here)
     tok = f"{{base}}/tok"
     write_token_table(spark, tok, 40_000, partitions=8)
-    r_std = run_pipeline(spark, tok, f"{{base}}/out_std",
-                         PipelineConfig(direct_parquet="never"),)
-    r_dir = run_pipeline(spark, tok, f"{{base}}/out_dir",
-                         PipelineConfig(direct_parquet="always"),)
+    std = route_write(enrich(parse_tokens(read_tokens(spark, tok))),
+                      f"{{base}}/out_std", spark)
+    r_std = {{
+        "routed_rows": std["routed_rows"],
+        "error_rows": sum(r["rows"] for r in std["sink_stats"]
+                          if r["sink_severity"] == ERROR_SINK),
+    }}
+    r_dir = run_pipeline(spark, tok, f"{{base}}/out_dir")
 
     def manifest(d):
         return sorted(

@@ -144,22 +144,17 @@ def test_direct_source_flat_unpartitioned_dir(spark, tmp_path):
     assert s == d
 
 
-def test_pipeline_direct_auto(spark, tmp_path):
-    """run_pipeline with direct_parquet='auto' (local dir -> fused read)
-    routes the same rows as the standard reader."""
-    from syslog_spark.plans.pipeline import PipelineConfig, run_pipeline
+def test_pipeline_direct_auto(spark, tmp_path, standard_reader):
+    """run_pipeline on a local dir (fused direct read) routes the same
+    rows as the standard reader, which it takes when the listing fails."""
+    from syslog_spark.plans.pipeline import run_pipeline
     from syslog_spark.sources.datagen import write_token_table
 
     path = str(tmp_path / "tok")
     write_token_table(spark, path, 10_000, partitions=4)
-    r1 = run_pipeline(
-        spark, path, str(tmp_path / "out1"),
-        PipelineConfig(direct_parquet="never"),
-    )
-    r2 = run_pipeline(
-        spark, path, str(tmp_path / "out2"),
-        PipelineConfig(direct_parquet="auto"),
-    )
+    with standard_reader():
+        r1 = run_pipeline(spark, path, str(tmp_path / "out1"))
+    r2 = run_pipeline(spark, path, str(tmp_path / "out2"))
     assert r1["routed_rows"] == r2["routed_rows"] > 0
     assert r1["error_rows"] == r2["error_rows"]
     m1 = {(r["sink_severity"], r["source"], r["rows"], r["row_set_checksum"])

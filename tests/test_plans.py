@@ -70,8 +70,7 @@ def test_column_pruning(spark, routed_dir):
 
 def test_manifest_scan_prunes_nested(spark, routed_dir):
     """sink_stats reads the precomputed row_cs, never the nested data."""
-    from syslog_spark.operators.aggregate import sink_stats
-    from syslog_spark.operators.route import read_routed
+    from syslog_spark.operators.route import read_routed, sink_stats
 
     plan = plan_of(sink_stats(read_routed(spark, routed_dir)))
     read_schema = plan.split("ReadSchema:")[1][:400]

@@ -140,8 +140,7 @@ def test_stream_error_sink_parity(spark, token_dir, tmp_path):
     run_stream_once(spark, token_dir, s_out, str(tmp_path / "ck"))
     b_out = str(tmp_path / "batch_out")
     route_write(
-        enrich(parse_tokens(spark.read.parquet(token_dir))),
-        b_out, spark, write_metrics=False,
+        enrich(parse_tokens(spark.read.parquet(token_dir))), b_out, spark
     )
     s_counts = (
         spark.read.parquet(f"{s_out}/routed")

@@ -2,6 +2,9 @@
 
 from __future__ import annotations
 
+import ast
+import glob
+import importlib
 import importlib.util
 import os
 
@@ -31,6 +34,43 @@ def test_tool_module_imports(rel):
     """Every tool imports cleanly (main stays behind the __main__ guard),
     so a tool still importing a removed library symbol fails here."""
     assert hasattr(_load(rel), "main")
+
+
+def _library_imports():
+    """(file, module, name) for every ``from syslog_spark... import name``
+    in the code that drives the library from outside it, at any depth:
+    perfbench imports inside functions, so a deleted name would otherwise
+    fail only when the benchmark runs."""
+    files = (
+        sorted(glob.glob(os.path.join(ROOT, "perfbench", "*.py")))
+        + [os.path.join(ROOT, "__spark_entry__.py")]
+        + [os.path.join(ROOT, rel) for rel in TOOL_FILES]
+    )
+    for path in files:
+        with open(path) as f:
+            tree = ast.parse(f.read(), path)
+        for node in ast.walk(tree):
+            if isinstance(node, ast.ImportFrom) and (
+                node.module or ""
+            ).split(".")[0] == "syslog_spark":
+                for alias in node.names:
+                    yield os.path.relpath(path, ROOT), node.module, alias.name
+
+
+def test_library_names_resolve():
+    """Every name those files import from syslog_spark exists: a module
+    attribute or a submodule."""
+    imports = sorted(set(_library_imports()))
+    missing = []
+    for rel, module, name in imports:
+        if hasattr(importlib.import_module(module), name):
+            continue
+        try:
+            importlib.import_module(f"{module}.{name}")
+        except ModuleNotFoundError:
+            missing.append(f"{rel}: from {module} import {name}")
+    assert any(rel.startswith("perfbench") for rel, _m, _n in imports)
+    assert not missing, missing
 
 
 def test_upscale_rotate_text_rejects_wrapping_copies(monkeypatch):
