@@ -37,6 +37,7 @@ from syslog_spark.functions.priority import (  # noqa: E402
     severity_of,
     tenant_of,
 )
+from syslog_spark.operators.dedup import _spread_if_narrow  # noqa: E402
 from syslog_spark.operators.parse import parse_lines, parse_tokens  # noqa: E402
 from syslog_spark.operators import textstats as TS  # noqa: E402
 from syslog_spark.operators.serialize import with_canonical  # noqa: E402
@@ -82,13 +83,6 @@ _RFC_LINE_DUCK = (
 )
 
 
-def _spread(df, spark):
-    """The single-file testdata parquet reads as ONE partition — spread the
-    constructed lines across the cores before the parse stage (a real log
-    corpus arrives in many files; this keeps the query plan representative)."""
-    return df.repartition(spark.sparkContext.defaultParallelism)
-
-
 def _spread_events(spark, sf_dir):
     """Events columns fanned out BEFORE line construction: the testdata
     table is one file/one row group, so a construct-then-repartition plan
@@ -96,10 +90,9 @@ def _spread_events(spark, sf_dir):
     and shuffles the long strings; spreading the three narrow source
     columns first parallelizes the concat and shuffles ~4x fewer bytes
     (round-6, guide §2.3 "project before the exchange")."""
-    return _spread(
+    return _spread_if_narrow(
         _t(spark, sf_dir, "events").select("event_id", "user_id",
-                                           "event_type"),
-        spark,
+                                           "event_type")
     )
 
 
@@ -187,9 +180,8 @@ def q_parse_rfc5424_data(spark, sf_dir):
 
 
 def q_parse_timestamps(spark, sf_dir):
-    o = _spread(
-        _t(spark, sf_dir, "orders").select("o_orderkey", "o_orderdate"),
-        spark,
+    o = _spread_if_narrow(
+        _t(spark, sf_dir, "orders").select("o_orderkey", "o_orderdate")
     )
     lines = o.select(
         F.col("o_orderkey").cast("string").alias("doc_id"),
@@ -655,14 +647,14 @@ def q_dedup_exact(spark, sf_dir):
 
 
 def q_fingerprint(spark, sf_dir):
-    docs = _spread(_t(spark, sf_dir, "documents"), spark)
+    docs = _spread_if_narrow(_t(spark, sf_dir, "documents"))
     return docs.select(
         "doc_id", TS.fingerprint_md5("text").alias("fingerprint")
     )
 
 
 def q_token_counts(spark, sf_dir):
-    docs = _spread(_t(spark, sf_dir, "documents"), spark)
+    docs = _spread_if_narrow(_t(spark, sf_dir, "documents"))
     return docs.select(
         "doc_id",
         TS.whitespace_token_count("text").cast("bigint").alias("n_tokens"),
@@ -671,7 +663,7 @@ def q_token_counts(spark, sf_dir):
 
 
 def q_quality(spark, sf_dir):
-    docs = _spread(_t(spark, sf_dir, "documents"), spark)
+    docs = _spread_if_narrow(_t(spark, sf_dir, "documents"))
     return docs.select(
         "doc_id",
         TS.stopword_count("text").cast("bigint").alias("stopwords"),
@@ -692,7 +684,7 @@ def q_document_stats(spark, sf_dir):
     DuckDB rounds the BINARY value, so any value whose shortest repr
     ends in ...5 at the 5th place diverges (hit on row 492 of sf0.01);
     floor of the identical product is deterministic."""
-    docs = _spread(_t(spark, sf_dir, "documents"), spark)
+    docs = _spread_if_narrow(_t(spark, sf_dir, "documents"))
     stats = TS.document_stats(docs)
     return stats.select(
         "doc_id",
@@ -710,7 +702,7 @@ def q_document_stats(spark, sf_dir):
 
 
 def q_lang_id(spark, sf_dir):
-    docs = _spread(_t(spark, sf_dir, "documents"), spark)
+    docs = _spread_if_narrow(_t(spark, sf_dir, "documents"))
     return docs.select("doc_id", TS.lang_id("text").alias("lang_pred"))
 
 
@@ -774,7 +766,7 @@ def _pair_docs(spark, sf_dir, text_b_expr):
     # project-above-the-exchange shape as _spread_events): the
     # single-file events scan would otherwise synthesize the whole
     # corpus in one task per union branch and shuffle the built strings
-    ev = _spread(_t(spark, sf_dir, "events").select("event_id"), spark)
+    ev = _spread_if_narrow(_t(spark, sf_dir, "events").select("event_id"))
     a = ev.select(
         F.concat(F.lit("a-"), F.col("event_id")).alias("doc_id"),
         F.expr(_TEXT_A).alias("text"),
@@ -1046,10 +1038,10 @@ def smoke_token_corpus(spark, sf_dir):
         # shuffle barrier between construction and tokenization: stops
         # Catalyst collapsing the projections and re-inlining the 60-term
         # line expression into every per-char lambda (measured 12s vs ~1s)
-        lines = _spread(_t(spark, sf_dir, "events").select(
+        lines = _spread_if_narrow(_t(spark, sf_dir, "events").select(
             F.col("event_id").cast("string").alias("doc_id"),
             F.expr(_RFC_LINE_SPARK).alias("line"),
-        ), spark)
+        ))
         tokens = lines.select(
             "doc_id",
             F.expr("transform(split(line, ''), c -> cast(ascii(c) as int))")
@@ -1187,10 +1179,10 @@ def stream_token_corpus(spark, sf_dir) -> str:
     path = f"/tmp/syslog_spark_stream_{key}"
     tok_dir = f"{path}/tokens"
     if not os.path.exists(os.path.join(tok_dir, "_SUCCESS")):
-        lines = _spread(_t(spark, sf_dir, "events").select(
+        lines = _spread_if_narrow(_t(spark, sf_dir, "events").select(
             F.col("event_id").cast("string").alias("doc_id"),
             F.expr(_STREAM_LINE_SPARK).alias("line"),
-        ), spark)
+        ))
         tokens = lines.select(
             "doc_id",
             F.expr("transform(split(line, ''), c -> cast(ascii(c) as int))")

@@ -18,6 +18,7 @@ Everything upstream of the pandas UDFs is Catalyst expressions
 
 from __future__ import annotations
 
+import itertools
 import sys
 
 import numpy as np
@@ -29,6 +30,10 @@ from pyspark.sql import types as T
 # 31-bit Mersenne prime: products a*h stay below 2^62 (no long overflow
 # under ANSI mode; Spark 4 is ANSI-on by default)
 MERSENNE_31 = (1 << 31) - 1
+
+# width of every bit signature (simhash, random-hyperplane) that
+# _signature_blocks splits into blocks
+SIG_BITS = 64
 
 
 def text_digest(col: Column | str) -> Column:
@@ -619,28 +624,89 @@ def simhash(df: DataFrame, text_col: str = "text",
     )
 
 
+def _signature_blocks(df: DataFrame, sig: str, m: int, r: int):
+    """Multi-table pigeonhole blocking of a SIG_BITS-bit signature
+    (Manku et al., *Detecting Near-Duplicates for Web Crawling*, WWW'07):
+    the bits split into ``m`` near-equal blocks (``SIG_BITS // m`` wide,
+    one bit wider for the first ``SIG_BITS % m``) and two rows become
+    candidates when they agree exactly on some ``r``-subset of blocks.
+
+    Returns ``(blocked, keys, first)``:
+
+      * ``blocked`` is ``df`` exploded once per ``r``-subset of blocks,
+        with the join-key columns ``keys = ["blk", "key0", ...]`` added
+        (``blk`` numbers the subset, ``key<k>`` is its k-th block);
+      * ``first(xor)`` is the dedup-at-source filter over the joined
+        rows' signature XOR. A pair whose agreeing blocks form S matches
+        every ``r``-subset of S; keep the row only on the LOWEST one —
+        every block below the subset's last block, other than the
+        subset's own, must disagree. Exactly one subset per pair
+        survives (the subset's own blocks agree by join-key
+        construction), so no distinct shuffle is needed to emit each
+        pair once (round 6: 10M -> 1M rows into simhash's distinct at
+        sf1.0) — pure int64 bitwise ops.
+
+    NULL signatures give NULL keys and drop out of the equi-join."""
+    widths = [SIG_BITS // m + (1 if i < SIG_BITS % m else 0)
+              for i in range(m)]
+    offs = [sum(widths[:i]) for i in range(m)]
+
+    def block(col: Column, b: int) -> Column:
+        return (
+            F.shiftrightunsigned(col, offs[b])
+            .bitwiseAND(F.lit((1 << widths[b]) - 1))
+        )
+
+    subsets = list(itertools.combinations(range(m), r))
+    keys = ["blk"] + [f"key{k}" for k in range(r)]
+    blocked = df.select(
+        "*",
+        F.inline(F.array(*[
+            F.struct(
+                F.lit(c).alias("blk"),
+                *[block(F.col(sig), b).alias(f"key{k}")
+                  for k, b in enumerate(s)],
+            )
+            for c, s in enumerate(subsets)
+        ])),
+    )
+
+    def first(xor: Column) -> Column:
+        expr = F.lit(False)
+        for c, s in enumerate(subsets):
+            cond = F.lit(True)
+            for b in range(s[-1]):
+                if b not in s:
+                    cond = cond & (block(xor, b) != 0)
+            expr = F.when(F.col("blk") == c, cond).otherwise(expr)
+        return expr
+
+    return blocked, keys, first
+
+
 def simhash_near_dups(df: DataFrame, max_hamming: int = 3,
-                      text_col: str = "text", id_col: str = "doc_id",
-                      n_blocks: int = 4) -> DataFrame:
+                      text_col: str = "text",
+                      id_col: str = "doc_id") -> DataFrame:
     """Near-dup pairs by simhash Hamming distance, blocked so no
-    quadratic comparison ever happens.
+    quadratic comparison ever happens (:func:`_signature_blocks`).
 
-    When ``max_hamming < n_blocks`` (the guaranteed-recall regime) the
-    blocking is MULTI-INDEX: the 64 bits split into m = max_hamming + 2
-    blocks, and candidates must agree on an exact PAIR of blocks (all
-    C(m, 2) pairs are probed). Pigeonhole: d <= max_hamming bit flips
-    damage at most max_hamming blocks, leaving >= 2 intact, so every
-    true pair shares at least one probed block pair — recall identical
-    to the single-block scheme, but the join key is ~2*64/m bits instead
-    of 64/n_blocks. At 2M docs the 16-bit single-block keys generated
-    n^2/2^17-per-block random collisions (~122M candidate rows, 180s at
-    sf1.0); the ~26-bit pair keys cut that ~4000x (round-6 measurement).
-    The Hamming filter runs BEFORE the distinct so the distinct sees
-    only true pairs, not the collision stream.
+    When ``max_hamming < 4`` (the guaranteed-recall regime) the blocking
+    is MULTI-INDEX: the 64 bits split into m = max_hamming + 2 blocks,
+    and candidates must agree on an exact PAIR of blocks (all C(m, 2)
+    pairs are probed). Pigeonhole: d <= max_hamming bit flips damage at
+    most max_hamming blocks, leaving >= 2 intact, so every true pair
+    shares at least one probed block pair, while the join key is ~2*64/m
+    bits instead of 16. At 2M docs the 16-bit single-block keys
+    generated n^2/2^17-per-block random collisions (~122M candidate
+    rows, 180s at sf1.0); the ~26-bit pair keys cut that ~4000x (round-6
+    measurement).
 
-    When ``max_hamming >= n_blocks`` the original single-block probe is
-    kept (same partial-recall contract as before: only pairs sharing
-    one exact 64/n_blocks-bit block are found)."""
+    When ``max_hamming >= 4`` the probe is one exact 16-bit block out of
+    4 (partial recall: only pairs sharing a block are found).
+
+    Each candidate pair is emitted once at source and the Hamming filter
+    runs BEFORE the distinct, so the distinct sees only true pairs, not
+    the collision stream; it only collapses inputs with duplicate ids."""
     # materialize (id, simhash) once: the blocked self-join references
     # the frame on BOTH sides, and without the cut each side would
     # re-run the corpus scan + fold (the same shape the minhash path
@@ -648,95 +714,8 @@ def simhash_near_dups(df: DataFrame, max_hamming: int = 3,
     sh = simhash(
         _spread_if_narrow(df), text_col, id_col
     ).withColumnRenamed(id_col, "id").localCheckpoint(eager=False)
-    if max_hamming < n_blocks:
-        m = max_hamming + 2
-        widths = [64 // m + (1 if i < 64 % m else 0) for i in range(m)]
-        offs = [sum(widths[:i]) for i in range(m)]
-
-        def blk(i: int) -> Column:
-            return (
-                F.shiftrightunsigned("simhash", offs[i])
-                .bitwiseAND(F.lit((1 << widths[i]) - 1))
-            )
-
-        combos = [(i, j) for i in range(m) for j in range(i + 1, m)]
-        blocked = sh.select(
-            "id", "simhash",
-            F.explode(
-                F.array(*[
-                    F.struct(
-                        F.lit(c).alias("blk"),
-                        blk(i).alias("key"),
-                        blk(j).alias("key2"),
-                    )
-                    for c, (i, j) in enumerate(combos)
-                ])
-            ).alias("b"),
-        ).select("id", "simhash", "b.blk", "b.key", "b.key2")
-        keys = ["blk", "key", "key2"]
-
-        def _minimal_probe(xor_col: Column) -> Column:
-            # Dedup-at-source (round 6): a pair whose agreeing-block set
-            # is S matches EVERY probed combo (i, j) with i, j in S, so
-            # each true pair came out of the join |S| choose 2 times and
-            # only the .distinct() collapsed them (10M -> 1M rows at
-            # sf1.0, 3-7s of hash aggregate). Keep a row only when its
-            # combo is the MINIMAL agreeing pair (min S, second-min S):
-            # every block below i and every block strictly between i
-            # and j must DISAGREE. Exactly one combo per pair survives
-            # (blocks i/j agree by join-key construction), so the
-            # distinct input is already pair-unique — pure int64
-            # bitwise ops, no extra shuffle.
-            def disagree(b: int) -> Column:
-                return (
-                    F.shiftrightunsigned(xor_col, offs[b])
-                    .bitwiseAND(F.lit((1 << widths[b]) - 1))
-                    != 0
-                )
-
-            expr = F.lit(False)
-            for c, (i, j) in enumerate(combos):
-                cond = F.lit(True)
-                for b in list(range(i)) + list(range(i + 1, j)):
-                    cond = cond & disagree(b)
-                expr = F.when(F.col("blk") == c, cond).otherwise(expr)
-            return expr
-    else:
-        width = 64 // n_blocks
-        blocked = sh.select(
-            "id", "simhash",
-            F.explode(
-                F.array(*[
-                    F.struct(
-                        F.lit(i).alias("blk"),
-                        F.shiftrightunsigned("simhash", i * width)
-                        .bitwiseAND(F.lit((1 << width) - 1))
-                        .alias("key"),
-                    )
-                    for i in range(n_blocks)
-                ])
-            ).alias("b"),
-        ).select("id", "simhash", "b.blk", "b.key")
-        keys = ["blk", "key"]
-
-        def _minimal_probe(xor_col: Column) -> Column:
-            # same dedup-at-source as the multi-index branch: keep only
-            # the row probed on the LOWEST agreeing block (all blocks
-            # below it must disagree)
-            def disagree(b: int) -> Column:
-                return (
-                    F.shiftrightunsigned(xor_col, b * width)
-                    .bitwiseAND(F.lit((1 << width) - 1))
-                    != 0
-                )
-
-            expr = F.lit(False)
-            for i in range(n_blocks):
-                cond = F.lit(True)
-                for b in range(i):
-                    cond = cond & disagree(b)
-                expr = F.when(F.col("blk") == i, cond).otherwise(expr)
-            return expr
+    m, r = (max_hamming + 2, 2) if max_hamming < 4 else (4, 1)
+    blocked, keys, first = _signature_blocks(sh, "simhash", m, r)
     left = blocked.select(
         *keys, F.col("id").alias("a"), F.col("simhash").alias("sh_a")
     )
@@ -747,7 +726,7 @@ def simhash_near_dups(df: DataFrame, max_hamming: int = 3,
     pairs = (
         left.join(right, keys)
         .filter(F.col("a") < F.col("b"))
-        .filter(_minimal_probe(xor))
+        .filter(first(xor))
         .withColumn("hamming", F.bit_count(xor))
         .filter(F.col("hamming") <= max_hamming)
         .select("a", "b", "hamming")

@@ -2,11 +2,11 @@
 
 Images/audio/video are opaque ``binary`` columns with a typed metadata
 struct; decode / resize / frame-sample run as Arrow-batched ``mapInPandas``
-stages. The decode libraries (PIL/ffmpeg/librosa) are NOT in this
-container, so the decode step is STUBBED: ``decoder="stub"`` produces a
-deterministic fake (seeded from the payload digest) with the real batch
-shapes, schema, and partitioning; ``decoder="pil"`` is the real path,
-gated behind an import-try, same signature.
+stages. The decode libraries (PIL/ffmpeg/librosa) are not dependencies,
+so there are two decoders: ``decoder="stub"`` produces a deterministic
+fake (seeded from the payload digest) with the real batch shapes,
+schema, and partitioning; ``decoder="numpy"`` really decodes
+uncompressed BMP/PPM images and PCM16 WAV audio with numpy alone.
 
 The Spark-side contract (what 100 TB cares about) is fully real:
   * payloads never hit the driver; batches stream through Arrow,
@@ -68,7 +68,7 @@ def _stub_features(payload: bytes) -> np.ndarray:
 
 # --- dependency-free real decoders (decoder="numpy") ----------------------------
 #
-# The container has no PIL/ffmpeg/librosa, but BMP (uncompressed 24-bit),
+# The package does not depend on PIL/ffmpeg/librosa, but BMP (uncompressed 24-bit),
 # PPM (P6) and WAV (PCM16) are simple enough to decode with numpy alone —
 # so the decode path can be genuinely real for these formats instead of
 # stubbed: real bytes in, content-pinned features out. Every arithmetic
@@ -220,7 +220,7 @@ def _audio_bands(signal: np.ndarray) -> np.ndarray:
 def _numpy_features(payload: bytes) -> np.ndarray:
     """Real decode dispatch by magic bytes: BMP / P6 PPM -> 8x8 pooled
     grayscale; WAV PCM16 -> 64 segment-energy bands. 64-dim float32
-    unit vector either way (same contract as the stub/PIL paths)."""
+    unit vector either way (same contract as the stub path)."""
     if payload[:2] == b"BM":
         return _pool_8x8(_decode_bmp(payload))
     if payload[:2] == b"P6":
@@ -231,16 +231,6 @@ def _numpy_features(payload: bytes) -> np.ndarray:
     raise ValueError("unrecognized payload format (want BMP/PPM/WAV)")
 
 
-def _pil_features(payload: bytes) -> np.ndarray:  # pragma: no cover
-    from io import BytesIO
-
-    from PIL import Image  # gated import; absent in this container
-
-    img = Image.open(BytesIO(payload)).convert("L").resize((8, 8))
-    v = np.asarray(img, dtype=np.float32).ravel()
-    return v / (np.linalg.norm(v) or 1.0)
-
-
 def extract_features(
     media: DataFrame,
     decoder: str = "stub",
@@ -248,17 +238,10 @@ def extract_features(
 ) -> DataFrame:
     """media(doc_id, modality, payload, meta) -> feature vectors.
 
-    mapInPandas keeps decode streaming per Arrow batch (payloads never
+    ``decoder`` is ``"stub"`` or ``"numpy"`` (see the module docstring);
+    any other value raises ``ValueError``. mapInPandas keeps decode streaming per Arrow batch (payloads never
     materialize as a whole-partition list)."""
-    if decoder == "pil":
-        try:
-            import PIL  # noqa: F401
-            decode = _pil_features
-        except ImportError as e:  # pragma: no cover
-            raise NotImplementedError(
-                "PIL not available in this environment; use decoder='stub'"
-            ) from e
-    elif decoder == "numpy":
+    if decoder == "numpy":
         decode = _numpy_features
     elif decoder == "stub":
         decode = _stub_features

@@ -5,10 +5,11 @@ JVM-side dot products via zip_with/aggregate (no Python in the score
 loop), window rank. Exact; O(N*Q) but embarrassingly parallel.
 
 Scale path: random-hyperplane LSH — 64-bit signatures from deterministic
-seeded planes, multi-probe via Hamming-block equality (same pigeonhole
-blocking as simhash), exact re-rank inside candidate sets only. Sub-linear
-candidate generation at 100 TB; planes are regenerated from the seed
-inside each worker.
+seeded planes, multi-probe via exact equality on one of 8 signature
+blocks (the pigeonhole blocking simhash uses, dedup._signature_blocks),
+exact re-rank inside candidate sets only. Sub-linear candidate
+generation at 100 TB; planes are regenerated from the seed inside each
+worker.
 """
 
 from __future__ import annotations
@@ -18,7 +19,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from .dedup import _spread_if_narrow
+from .dedup import SIG_BITS, _signature_blocks, _spread_if_narrow
 
 
 def _vec(col) -> Column:
@@ -76,9 +77,9 @@ def brute_force_topk(
     )
 
 
-def _planes(dim: int, n_bits: int = 64, seed: int = 42) -> np.ndarray:
+def _planes(dim: int, seed: int = 42) -> np.ndarray:
     rng = np.random.RandomState(seed)
-    return rng.normal(size=(n_bits, dim)).astype(np.float64)
+    return rng.normal(size=(SIG_BITS, dim)).astype(np.float64)
 
 
 def _double_array_sql(values) -> str:
@@ -96,14 +97,13 @@ def _lit_double_array(values) -> Column:
 
 
 def rh_signature(
-    vec_col, dim: int, n_bits: int = 64, seed: int = 42,
-    cast: bool = True,
+    vec_col, dim: int, seed: int = 42, cast: bool = True,
 ) -> Column:
     """Random-hyperplane signature as a bigint, via ONE vectorized pandas
-    UDF: batch matmul against the (n_bits x dim) plane matrix + bit-pack
+    UDF: batch matmul against the (SIG_BITS x dim) plane matrix + bit-pack
     (bit i set iff ``v @ planes[i] > 0``). Planes are regenerated
     deterministically inside the worker (same seeded RandomState as
-    _planes) — nothing rides the closure but three ints, so plan size
+    _planes) — nothing rides the closure but two ints, so plan size
     and analysis time do not grow with ``dim`` (plane literals baked into
     a Catalyst expression reach ~50-100k nodes at real embedding widths
     and push generated code past the 64KB JVM method limit). Null or
@@ -129,7 +129,7 @@ def rh_signature(
             os.environ.setdefault(var, "1")
         if len(v) == 0:
             return pd.Series([], dtype="Int64")
-        planes = _planes(dim, n_bits, seed)  # deterministic per (args)
+        planes = _planes(dim, seed)  # deterministic per (args)
         vals = v.to_numpy()
         # null / wrong-width rows -> null signature instead of np.stack
         # raising and killing the task (round-4 review finding)
@@ -139,9 +139,9 @@ def rh_signature(
         out = np.zeros(len(vals), dtype=np.int64)
         if ok.any():
             m = np.stack(vals[ok]).astype(np.float64, copy=False)
-            bits = (m @ planes.T) > 0  # (ok_rows, n_bits)
+            bits = (m @ planes.T) > 0  # (ok_rows, SIG_BITS)
             weights = np.left_shift(
-                np.uint64(1), np.arange(n_bits, dtype=np.uint64)
+                np.uint64(1), np.arange(SIG_BITS, dtype=np.uint64)
             )
             out[ok] = (
                 (bits.astype(np.uint64) * weights)
@@ -159,8 +159,6 @@ def embedding_near_dups(
     df: DataFrame,
     threshold: float = 0.9,
     dim: int | None = None,
-    n_bits: int = 64,
-    n_blocks: int = 8,
     seed: int = 42,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
@@ -168,17 +166,19 @@ def embedding_near_dups(
     """Near-duplicate pairs by embedding cosine, WITHOUT an all-pairs
     cross join: random-hyperplane signatures (one Arrow matmul), pigeonhole
     block equi-join for candidates, exact cosine verify on candidates only
-    — the same blocked shape as simhash_near_dups (dedup.py).
+    — the same blocked shape as simhash_near_dups (both block through
+    dedup._signature_blocks).
 
     Recall: a pair at cosine c has per-bit flip probability arccos(c)/pi;
-    a candidate needs one exact (n_bits/n_blocks)-bit block. At the
-    near-dup thresholds this operator is for (c >= ~0.9, flip p <= 0.15)
-    the miss probability is (1-(1-p)^8)^8 ~ <1e-3 and falls fast as c->1;
-    it is NOT suitable for low thresholds (c ~ 0.5) where an all-pairs or
+    a candidate needs one exact 8-bit block of the 8. At the near-dup
+    thresholds this operator is for (c >= ~0.9, flip p <= 0.15) the miss
+    probability is (1-(1-p)^8)^8 ~ <1e-3 and falls fast as c->1; it is
+    NOT suitable for low thresholds (c ~ 0.5) where an all-pairs or
     multi-table LSH is required.
 
-    Scale shape: one corpus scan for signatures, explode x n_blocks, one
-    shuffle on (blk, key); candidates are verified with a JVM cosine. No
+    Scale shape: one corpus scan for signatures, explode x 8, one
+    shuffle on (blk, key0); each candidate pair is emitted once, on its
+    lowest agreeing block, and verified with a JVM cosine. No
     CartesianProduct anywhere in the plan (asserted in tests).
 
     ``dim`` is required: it sizes the hyperplanes, and inferring the width
@@ -189,37 +189,24 @@ def embedding_near_dups(
             "embedding_near_dups requires dim= (it sizes the hyperplanes; "
             "no eager data peek in a lazy operator)"
         )
-    width = n_bits // n_blocks
-    mask = (1 << width) - 1
     # hoist the to-double cast: the signature UDF and the verify stage
     # both reference ONE materialized "v" instead of re-running the cast
     # transform per use (HOFs are CodegenFallback, no CSE)
     pre = _spread_if_narrow(df).select(
         F.col(id_col).alias("id"), _vec(vec_col).alias("v")
     )
-    sig = rh_signature("v", dim, n_bits, seed, cast=False)
-    base = pre.select("id", "v", sig.alias("sig"))
-    blocked = base.select(
-        "id", "v",
-        F.explode(
-            F.array(*[
-                F.struct(
-                    F.lit(i).alias("blk"),
-                    F.shiftrightunsigned("sig", i * width)
-                    .bitwiseAND(F.lit(mask)).alias("key"),
-                )
-                for i in range(n_blocks)
-            ])
-        ).alias("b"),
-    ).select("id", "v", "b.blk", "b.key")
-    left = blocked.select("blk", "key", F.col("id").alias("a"),
-                          F.col("v").alias("va"))
-    right = blocked.select("blk", "key", F.col("id").alias("b"),
-                           F.col("v").alias("vb"))
+    sig = rh_signature("v", dim, seed, cast=False)
+    blocked, keys, first = _signature_blocks(
+        pre.select("id", "v", sig.alias("sig")), "sig", 8, 1
+    )
+    left = blocked.select(*keys, F.col("id").alias("a"),
+                          F.col("v").alias("va"), F.col("sig").alias("sa"))
+    right = blocked.select(*keys, F.col("id").alias("b"),
+                           F.col("v").alias("vb"), F.col("sig").alias("sb"))
     cands = (
-        left.join(right, ["blk", "key"])
+        left.join(right, keys)
         .filter(F.col("a") < F.col("b"))
-        .dropDuplicates(["a", "b"])
+        .filter(first(F.col("sa").bitwiseXOR(F.col("sb"))))
     )
     return (
         cands.withColumn("cos", cosine(F.col("va"), F.col("vb")))
@@ -334,43 +321,31 @@ def lsh_topk(
     queries: DataFrame,
     dim: int,
     k: int = 10,
-    n_bits: int = 64,
-    n_blocks: int = 8,
     seed: int = 42,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     query_id_col: str = "query_id",
 ) -> DataFrame:
     """Approximate top-k: candidates share >= one exact 8-bit signature
-    block with the query (multi-probe by pigeonhole), re-ranked exactly."""
-    width = n_bits // n_blocks
-    mask = (1 << width) - 1
+    block with the query (multi-probe by pigeonhole), each (query,
+    vector) pair emitted once on its lowest agreeing block, re-ranked
+    exactly."""
 
     def blocked(df, idc, name):
         pre = df.select(
             F.col(idc).alias(name), _vec(vec_col).alias(f"v_{name}")
         )
-        sig = rh_signature(f"v_{name}", dim, n_bits, seed, cast=False)
-        base = pre.select(name, f"v_{name}", sig.alias("sig"))
-        return base.select(
-            name, f"v_{name}",
-            F.explode(
-                F.array(*[
-                    F.struct(
-                        F.lit(i).alias("blk"),
-                        F.shiftrightunsigned("sig", i * width)
-                        .bitwiseAND(F.lit(mask)).alias("key"),
-                    )
-                    for i in range(n_blocks)
-                ])
-            ).alias("b"),
-        ).select(name, f"v_{name}", "b.blk", "b.key")
+        sig = rh_signature(f"v_{name}", dim, seed, cast=False)
+        return _signature_blocks(
+            pre.select(name, f"v_{name}", sig.alias(f"s_{name}")),
+            f"s_{name}", 8, 1,
+        )
 
-    cb = blocked(_spread_if_narrow(corpus), id_col, "vec_id")
-    qb = blocked(queries, query_id_col, "query_id")
-    cands = cb.join(F.broadcast(qb), ["blk", "key"]).select(
-        "query_id", "vec_id", "v_vec_id", "v_query_id"
-    ).dropDuplicates(["query_id", "vec_id"])
+    cb, keys, first = blocked(_spread_if_narrow(corpus), id_col, "vec_id")
+    qb, _, _ = blocked(queries, query_id_col, "query_id")
+    cands = cb.join(F.broadcast(qb), keys).filter(
+        first(F.col("s_vec_id").bitwiseXOR(F.col("s_query_id")))
+    )
     scored = cands.select(
         "query_id", "vec_id",
         cosine(F.col("v_vec_id"), F.col("v_query_id")).alias("cosine"),

@@ -155,7 +155,6 @@ def parse_tokens_direct(
     ref_year: int = C.DEFAULT_REFERENCE_YEAR,
     ref_tz: int = C.DEFAULT_REFERENCE_TZ_OFFSET_SECONDS,
     keep_raw: bool = False,
-    batch_rows: int = 32768,
     source_prefixes: list[str] | None = None,
     _scanned=None,
 ) -> DataFrame:
@@ -179,6 +178,11 @@ def parse_tokens_direct(
     per split, capped at the file count (:func:`_fan_out`).
     :func:`_stripe_by_size` balances the files across those tasks.
 
+    Kernel batches hold up to
+    ``spark.sql.execution.arrow.maxRecordsPerBatch`` rows, the conf that
+    also sizes the standard reader's ``mapInArrow`` batches
+    (``build_session(arrow_batch_rows=)`` sets it).
+
     ``_scanned`` is the private single-listing handoff: plans/pipeline
     passes its own _scan result so the store is listed once, not
     twice."""
@@ -188,6 +192,11 @@ def parse_tokens_direct(
         raise ValueError(
             "source_prefixes=[] selects nothing; pass None for all sources"
         )
+    batch_rows = int(
+        spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
+    )
+    if batch_rows <= 0:  # Spark reads a non-positive value as "no limit"
+        batch_rows = 1 << 62
     fs, files = _scanned if _scanned is not None else _scan(path)
     if source_prefixes is not None:
         files = [

@@ -109,12 +109,19 @@ def test_lsh_topk_recall(spark):
     for i in range(1, 6):
         base[i] = base[0] + rng.normal(scale=0.05, size=16)
     rows = [(i, base[i].tolist()) for i in range(40)]
+    # exact copies agree with their query on EVERY signature block
+    rows += [(100 + i, base[i].tolist()) for i in range(3)]
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
     q = emb.filter("vec_id = 0").select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
     exact = {r["vec_id"] for r in brute_force_topk(emb, q, k=5).collect()}
-    approx = {r["vec_id"] for r in lsh_topk(emb, q, dim=16, k=5).collect()}
+    got = [r["vec_id"] for r in lsh_topk(emb, q, dim=16, k=5).collect()]
+    # each (query, vector) candidate is emitted once, not once per
+    # agreeing block
+    assert len(got) == len(set(got))
+    approx = set(got)
+    assert {0, 100} <= approx
     # strongly-planted neighbours must be recalled
     assert len(exact & approx) >= 4
 
@@ -140,8 +147,9 @@ def test_lsh_bucket_stats_flags_hot_buckets(spark):
 
 
 def test_embedding_near_dups_planted(spark):
-    """Blocked-LSH near-dup finds every planted high-cosine pair, and the
-    exact-cosine verify rejects random pairs — no cross join involved."""
+    """Blocked-LSH near-dup finds every planted high-cosine pair once,
+    and the exact-cosine verify rejects random pairs — no cross join
+    involved."""
     from syslog_spark.operators.similarity import embedding_near_dups
 
     rng = np.random.RandomState(2)
@@ -152,11 +160,17 @@ def test_embedding_near_dups_planted(spark):
         v = base[i].copy()
         v[0] *= 1.001
         rows.append((100 + i, v.tolist()))
+    # exact copies (200+i) agree with i on every signature block; with
+    # the near-dups they form triangles {i, 100+i, 200+i}
+    rows += [(200 + i, base[i].tolist()) for i in range(5)]
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    got = {(r["a"], r["b"]) for r in
-           embedding_near_dups(emb, threshold=0.9, dim=32).collect()}
+    got = [(r["a"], r["b"]) for r in
+           embedding_near_dups(emb, threshold=0.9, dim=32).collect()]
+    assert len(got) == len(set(got))  # each pair once
     want = {(i, 100 + i) for i in range(10)}
-    assert got == want
+    want |= {(i, 200 + i) for i in range(5)}
+    want |= {(100 + i, 200 + i) for i in range(5)}
+    assert set(got) == want
 
 
 def test_textstats(spark, docs):
@@ -594,7 +608,7 @@ def test_rh_signature_pandas_null_and_bad_width_rows(spark):
     from syslog_spark.operators.similarity import _planes, rh_signature
 
     def reference(v):
-        bits = (np.asarray(v) @ _planes(64, 64, 42).T) > 0
+        bits = (np.asarray(v) @ _planes(64, 42).T) > 0
         u = sum(1 << i for i, b in enumerate(bits) if b)
         return u - (1 << 64) if u >= 1 << 63 else u
 

@@ -198,8 +198,8 @@ def test_direct_source_partition_pruning(spark, tmp_path):
 
 
 def test_direct_source_single_large_file(spark, tmp_path):
-    """A file larger than batch_rows splits into multiple kernel batches
-    (to_batches slicing), preserving row-set equality."""
+    """A file larger than one Arrow batch splits into multiple kernel
+    batches (to_batches slicing), preserving row-set equality."""
     from pyspark.sql import functions as F
 
     from syslog_spark.operators.parse import parse_tokens
@@ -211,9 +211,16 @@ def test_direct_source_single_large_file(spark, tmp_path):
         "overwrite"
     ).parquet(path)
     std = parse_tokens(spark.read.parquet(path))
-    # batch_rows=8192 makes 80k rows exceed the 4x streaming threshold,
-    # so this exercises the iter_batches (big-file) branch
-    direct = parse_tokens_direct(spark, path, batch_rows=8192)
+    # 8192-row batches make 80k rows exceed the 4x streaming threshold,
+    # so this exercises the iter_batches (big-file) branch; the batch
+    # size is read from the conf when the frame is built
+    conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(conf)
+    spark.conf.set(conf, "8192")
+    try:
+        direct = parse_tokens_direct(spark, path)
+    finally:
+        spark.conf.set(conf, old)
     a = std.agg(
         F.count(F.lit(1)).alias("n"),
         F.bit_xor(F.xxhash64("doc_id", "message", "error_msg")).alias("cs"),

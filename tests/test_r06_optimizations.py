@@ -5,6 +5,7 @@ these tests pin that claim directly (the oracle gates pin it end-to-end).
 """
 
 import numpy as np
+import pytest
 from pyspark.sql import functions as F
 
 # uses the session-scoped `spark` fixture from conftest.py: a local
@@ -92,10 +93,12 @@ def test_byte_match_udf_counts(spark):
         assert r["got"] == r["want"]
 
 
-def test_simhash_multi_index_equals_all_pairs(spark):
-    """The multi-index blocking (max_hamming < n_blocks) must return
-    EXACTLY the pairs an all-pairs Hamming filter finds — the pigeonhole
-    recall argument, executed."""
+@pytest.mark.parametrize("max_hamming", [0, 1, 2, 3])
+def test_simhash_multi_index_equals_all_pairs(spark, max_hamming):
+    """The multi-index blocking (max_hamming < 4: m = max_hamming + 2
+    blocks, every block pair probed) must return EXACTLY the pairs an
+    all-pairs Hamming filter finds, each once — the pigeonhole recall
+    argument, executed at every multi-index m (2-5)."""
     from syslog_spark.operators.dedup import simhash, simhash_near_dups
 
     rng = np.random.RandomState(3)
@@ -110,19 +113,20 @@ def test_simhash_multi_index_equals_all_pairs(spark):
             rows.append((f"p{i}", " ".join(words)))
     df = spark.createDataFrame(rows, "doc_id string, text string")
 
-    got = {
+    got = [
         (r["a"], r["b"])
-        for r in simhash_near_dups(df, max_hamming=3).collect()
-    }
+        for r in simhash_near_dups(df, max_hamming=max_hamming).collect()
+    ]
+    assert len(got) == len(set(got))
     sh = {r["doc_id"]: r["simhash"] for r in simhash(df).collect()}
     ids = sorted(sh)
     want = {
         (a, b)
         for i, a in enumerate(ids)
         for b in ids[i + 1:]
-        if bin((sh[a] ^ sh[b]) & ((1 << 64) - 1)).count("1") <= 3
+        if bin((sh[a] ^ sh[b]) & ((1 << 64) - 1)).count("1") <= max_hamming
     }
-    assert got == want
+    assert set(got) == want
     assert len(want) >= 8  # the planted twins are all found
 
 
@@ -144,8 +148,9 @@ def test_minhash_prefilter_keeps_planted_pair(spark):
     assert ("d0", "twin") in pairs
 
 def test_simhash_legacy_branch_minimal_probe(spark):
-    """The single-block branch (max_hamming >= n_blocks) with the
-    minimal-probe dedup filter still returns exactly the pairs sharing
+    """The single-block blocking (max_hamming >= 4: one 16-bit block of
+    4 probed) with the minimal-probe dedup filter still returns exactly
+    the pairs sharing
     >= 1 exact block with hamming <= h, each pair once — including pairs
     agreeing on MULTIPLE blocks (which the filter must emit exactly once
     via the lowest agreeing block)."""
@@ -160,7 +165,7 @@ def test_simhash_legacy_branch_minimal_probe(spark):
             rows.append((f"t{i}", " ".join(words)))
     df = spark.createDataFrame(rows, "doc_id string, text string")
 
-    out = simhash_near_dups(df, max_hamming=8, n_blocks=4).collect()
+    out = simhash_near_dups(df, max_hamming=8).collect()
     got = [(r["a"], r["b"]) for r in out]
     assert len(got) == len(set(got))  # each pair exactly once
     sh = {r["doc_id"]: r["simhash"] for r in simhash(df).collect()}
