@@ -106,7 +106,12 @@ def _spread_if_narrow(df: DataFrame) -> DataFrame:
     when the input already has at least defaultParallelism/2 partitions
     (any real multi-file corpus), this is the identity — no extra
     shuffle is ever added to a 100-TB input. Streaming frames have no
-    RDD to count and pass through unchanged."""
+    RDD to count and pass through unchanged.
+
+    Call it only on a scan or a materialized (checkpointed) frame: on a
+    plan with an exchange, counting partitions makes AQE run the
+    shuffle stages in a separate query execution whose result is thrown
+    away."""
     if df.isStreaming:
         return df
     p = df.sparkSession.sparkContext.defaultParallelism
@@ -286,11 +291,12 @@ def _minhash_sigs_packed(df, text_col, id_col, n_hashes, k, seed,
     CodegenFallback; CollapseProject keeps the boundary because the
     subtree is non-cheap and multiply referenced) — measured 16x on the
     sf0.1 corpus scan (120.7s -> 7.9s). The folds run in one numpy
-    pandas UDF (:func:`_signature_batch_udf`), and the scan is spread
-    across cores first (:func:`_spread_if_narrow` — the sf tables are
-    single-file scans)."""
+    pandas UDF (:func:`_signature_batch_udf`). ``df`` is used as given:
+    callers spread a narrow scan first (:func:`_spread_if_narrow` — the
+    sf tables are single-file scans), once, so a caller that reuses the
+    spread frame does not count the partitions of a repartition plan."""
     sig = _signature_batch_udf(n_hashes, seed, n_extra=n_extra)
-    hashed = _spread_if_narrow(df).select(
+    hashed = df.select(
         F.col(id_col).alias("id"), shingle_hashes(text_col, k).alias("_sh")
     )
     if not n_extra:
@@ -343,7 +349,9 @@ def _minhash_banded(df, text_col, id_col, n_hashes, bands, k, seed,
     rows_per_band = n_hashes // bands
     sigs = (
         _sigs if _sigs is not None
-        else _minhash_sigs_packed(df, text_col, id_col, n_hashes, k, seed)
+        else _minhash_sigs_packed(
+            _spread_if_narrow(df), text_col, id_col, n_hashes, k, seed
+        )
     )
     return sigs.select(
         "id",
@@ -387,20 +395,34 @@ def lsh_bucket_stats(
 def jaccard_similarity(df_pairs: DataFrame, docs: DataFrame,
                        text_col: str = "text", id_col: str = "doc_id",
                        k: int = 5) -> DataFrame:
-    """Exact shingle-set Jaccard for candidate pairs (verification step)."""
-    sh = _spread_if_narrow(docs).select(
+    """Exact shingle-set Jaccard for candidate pairs (verification step).
+
+    :func:`shingles` is a set (``array_distinct``), so |A u B| = |A| +
+    |B| - |A n B|: each doc's set size is taken once on the doc side and
+    a pair pays ONE ``array_intersect`` — the same integers as
+    ``size(array_union)``, hence the same doubles. The intersect size is
+    produced by a one-element explode: a Generate's output is opaque to
+    filter pushdown, so a caller's ``jaccard >= t`` filter cannot inline
+    (and re-evaluate) the intersect into the join condition.
+
+    ``docs`` is used as given: a caller that wants the shingling spread
+    across cores passes a spread frame."""
+    sh = docs.select(
         F.col(id_col).alias("id"), shingles(text_col, k).alias("sh")
     )
-    a = sh.withColumnRenamed("id", "a").withColumnRenamed("sh", "sh_a")
-    b = sh.withColumnRenamed("id", "b").withColumnRenamed("sh", "sh_b")
+    a = sh.select(F.col("id").alias("a"), F.col("sh").alias("sh_a"),
+                  F.size("sh").alias("n_a"))
+    b = sh.select(F.col("id").alias("b"), F.col("sh").alias("sh_b"),
+                  F.size("sh").alias("n_b"))
+    i = F.explode(F.array(F.size(F.array_intersect("sh_a", "sh_b"))))
     return (
         df_pairs.join(a, "a").join(b, "b")
-        .withColumn(
-            "jaccard",
-            F.size(F.array_intersect("sh_a", "sh_b"))
-            / F.size(F.array_union("sh_a", "sh_b")),
+        .select("a", "b", "n_a", "n_b", i.alias("i"))
+        .select(
+            "a", "b",
+            (F.col("i") / (F.col("n_a") + F.col("n_b") - F.col("i")))
+            .alias("jaccard"),
         )
-        .select("a", "b", "jaccard")
     )
 
 
@@ -458,6 +480,10 @@ def near_duplicates_minhash(
         # to call negligible. Silently fall back to verifying every
         # candidate rather than silently losing true pairs.
         cutoff = 0.0
+    # spread a narrow scan ONCE: the signature scan and the verify's doc
+    # side both read `src`, so neither counts the partitions of the
+    # other's repartition plan (that count would run the shuffle)
+    src = _spread_if_narrow(df)
     if cutoff > 0.0:
         # Round-6 shape of the prefilter (same Hoeffding drop bound,
         # far cheaper join): the estimate uses 4*n_hashes independent
@@ -476,7 +502,7 @@ def near_duplicates_minhash(
         bands = kw.get("bands", 16)
         max_bucket = kw.get("max_bucket", 200)
         sp = _minhash_sigs_packed(
-            df, text_col, id_col, n_hashes, k, seed, n_extra=3 * n_hashes
+            src, text_col, id_col, n_hashes, k, seed, n_extra=3 * n_hashes
         ).localCheckpoint(eager=False)
         # the packed sketch RIDES the banding explode and the bucket
         # self-join (one exchange of n_docs*bands ~300-byte rows) instead
@@ -512,8 +538,14 @@ def near_duplicates_minhash(
     cand_ids = cands.select(
         F.explode(F.array("a", "b")).alias(id_col)
     ).distinct()
-    docs_needed = df.join(cand_ids, id_col, "leftsemi")
-    sims = jaccard_similarity(cands, docs_needed, text_col, id_col, k)
+    docs_needed = src.join(cand_ids, id_col, "leftsemi")
+    # the doc side is broadcast, the pair stream is the big side: AQE
+    # coalesces the small checkpointed pair frame into one partition,
+    # so spread it or the per-pair verify runs on one core. The
+    # checkpoint's partition count is known without running a job.
+    sims = jaccard_similarity(
+        _spread_if_narrow(cands), docs_needed, text_col, id_col, k
+    )
     return sims.filter(F.col("jaccard") >= threshold)
 
 
@@ -935,12 +967,14 @@ def connected_components(
     """Undirected connected components over a near-dup pair list:
     (node, component) where component = min node id reachable.
 
-    Min-label propagation: every node starts labelled with itself; each
-    round, each node takes the min of its own label and its neighbours'.
-    Convergence needs O(graph diameter) rounds — near-dup clusters are
-    shallow (a cluster's members all link to a shared survivor within a
-    hop or two), so this terminates in a handful of rounds even at
-    corpus scale.
+    Min-label propagation: each round, each node takes the min of its
+    own label and its neighbours'. Round 1 is the SEED: from the
+    implicit start ``label = node`` it only computes ``least(u,
+    min(v))``, so it is one keyed aggregate over the edges (no join, no
+    changed count); ``max_iters`` counts it. Convergence needs O(graph
+    diameter) rounds — near-dup clusters are shallow (a cluster's
+    members all link to a shared survivor within a hop or two), so this
+    terminates in a handful of rounds even at corpus scale.
 
     A graph that has not converged after ``max_iters`` rounds FALLS BACK
     to :func:`star_contraction_components` (O(log n) rounds, diameter-
@@ -967,21 +1001,25 @@ def connected_components(
     # count re-executed that whole plan (round-5 finding via the new
     # secondary bench section: dedup_pipeline spent ~75% of its 149s
     # re-running minhash once per round)
+    #
+    # Symmetrize with ONE reference to `pairs`: a unionAll of two
+    # projections of the lazy pair plan would execute that whole plan
+    # (the exact-Jaccard verify) once per branch.
     edges = ckpt.cut(
-        pairs.select(F.col(a_col).alias("u"), F.col(b_col).alias("v"))
-        .unionAll(
-            pairs.select(F.col(b_col).alias("u"), F.col(a_col).alias("v"))
-        )
+        pairs.select(F.inline(F.array(
+            F.struct(F.col(a_col).alias("u"), F.col(b_col).alias("v")),
+            F.struct(F.col(b_col).alias("u"), F.col(a_col).alias("v")),
+        )))
         .distinct(),
         pin=True,  # read by EVERY propagation round — the rolling GC
         # deleting this spill crashed round every+1 (executed repro)
     )
-    labels = (
-        edges.select(F.col("u").alias("node"))
-        .distinct()
-        .withColumn("label", F.col("node"))
+    # round 1, the seed: every node appears as `u` (edges are symmetric)
+    labels = ckpt.cut(
+        edges.groupBy(F.col("u").alias("node"))
+        .agg(F.least(F.col("u"), F.min("v")).alias("label"))
     )
-    for _ in range(max_iters):
+    for _ in range(max_iters - 1):
         # min neighbour label per node, folded with own label
         neigh = (
             edges.join(

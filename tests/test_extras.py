@@ -293,6 +293,82 @@ def test_connected_components_chains(spark):
     }
 
 
+def _shingle_set(text, k=5):
+    """Python-set reference of ``dedup.shingles``: substrings at
+    positions 1..max(len - k + 1, 1); a NULL text is the set {None}."""
+    if text is None:
+        return {None}
+    return {text[i:i + k] for i in range(max(len(text) - k + 1, 1))}
+
+
+def test_jaccard_similarity_matches_python_sets(spark):
+    """jaccard_similarity (one array_intersect per pair, |A u B| from
+    the per-doc set sizes) gives exactly the doubles of a Python-set
+    Jaccard: NULL and empty texts, a repeated-shingle text, identical
+    and disjoint docs, and a non-ASCII text."""
+    import itertools
+
+    from syslog_spark.operators.dedup import jaccard_similarity
+
+    texts = {
+        1: None,
+        2: None,
+        3: "",
+        4: "aaaaaaaa",
+        5: "aaaaaaaaaaaaaaaa",
+        6: "the quick brown fox jumps over the lazy dog",
+        7: "the quick brown fox jumps over the lazy dog",
+        8: "the quick brown fox jumps over the lazy cat",
+        9: "zzzz 0123456789 qwerty",
+        10: "abc",
+        11: "h\u00e9llo w\u00f6rld, na\u00efve caf\u00e9",
+    }
+    docs = spark.createDataFrame(
+        sorted(texts.items()), "doc_id long, text string"
+    )
+    pairs = list(itertools.combinations(sorted(texts), 2))
+    got = {
+        (r["a"], r["b"]): r["jaccard"]
+        for r in jaccard_similarity(
+            spark.createDataFrame(pairs, "a long, b long"), docs
+        ).collect()
+    }
+    want = {}
+    for a, b in pairs:
+        sa, sb = _shingle_set(texts[a]), _shingle_set(texts[b])
+        want[(a, b)] = len(sa & sb) / len(sa | sb)
+    assert got == want
+    # the cases the test exists for really occur
+    assert want[(1, 2)] == 1.0 and want[(6, 7)] == 1.0
+    assert want[(4, 5)] == 1.0  # one repeated shingle each
+    assert want[(6, 9)] == 0.0 and 0.0 < want[(6, 8)] < 1.0
+
+
+def test_connected_components_seed_is_round_one(spark, monkeypatch):
+    """Label propagation seeds the labels with round 1 (a keyed min over
+    the edges, no join): a 3-node path takes exactly pin + seed + 2
+    rounds of cuts (round 2 moves node 3 to label 1, round 3 confirms)."""
+    from syslog_spark.operators import dedup as D
+
+    cuts = []
+    orig = D._IterCheckpointer.cut
+
+    def record(self, df, pin=False):
+        cuts.append(df._jdf.queryExecution().optimizedPlan().toString())
+        return orig(self, df, pin=pin)
+
+    monkeypatch.setattr(D._IterCheckpointer, "cut", record)
+    pairs = spark.createDataFrame([(1, 2), (2, 3)], "a long, b long")
+    got = {
+        (r["node"], r["component"])
+        for r in D.connected_components(pairs).collect()
+    }
+    assert got == {(1, 1), (2, 1), (3, 1)}
+    assert len(cuts) == 4
+    assert "Join" not in cuts[1] and "Aggregate" in cuts[1]  # the seed
+    assert all("Join" in c for c in cuts[2:])  # propagation rounds
+
+
 def test_dedupe_by_components_minhash_end_to_end(spark):
     """Pairs from the real minhash detector -> components -> keep one per
     cluster: a 3-doc near-identical cluster keeps only its min id, unique

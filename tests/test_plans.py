@@ -147,6 +147,71 @@ def test_connected_components_no_cross_join(spark):
     assert "BroadcastNestedLoopJoin" not in plan
 
 
+def _neardup_docs(spark):
+    base = (
+        "the quick brown fox jumps over the lazy dog while the band plays "
+        "a long tune about shingled text and stable hashing in the park"
+    )
+    rows = [(0, base), (1, base + " extra"), (2, "tail " + base),
+            (3, "unrelated words about parquet footers and bloom filters")]
+    return spark.createDataFrame(rows, "doc_id long, text string")
+
+
+def test_components_run_the_verify_once(spark, monkeypatch):
+    """connected_components symmetrizes the pair list with one reference
+    to it: the executed plan of its pinned edge frame over a
+    near_duplicates_minhash output holds ONE array_intersect (a unionAll
+    of two projections ran the whole exact verify twice) and no
+    array_union (|A u B| comes from the per-doc set sizes)."""
+    from syslog_spark.operators import dedup as D
+
+    pinned = []
+    orig = D._IterCheckpointer.cut
+
+    def record(self, df, pin=False):
+        if pin:
+            pinned.append(plan_of(df))
+        return orig(self, df, pin=pin)
+
+    monkeypatch.setattr(D._IterCheckpointer, "cut", record)
+    pairs = D.near_duplicates_minhash(_neardup_docs(spark), threshold=0.5)
+    comps = {r["node"]: r["component"]
+             for r in D.connected_components(pairs).collect()}
+    assert comps == {0: 0, 1: 0, 2: 0}
+    assert len(pinned) == 1
+    assert pinned[0].count("array_intersect") == 1
+    assert "array_union" not in pinned[0]
+
+
+def test_minhash_verify_plan_starts_no_job(spark, monkeypatch):
+    """Once the candidate pairs are checkpointed, building the rest of
+    near_duplicates_minhash (candidate ids, semi-joined docs, the spread
+    pair stream, the exact verify) starts no Spark job: nothing counts
+    the partitions of a plan with an exchange."""
+    from syslog_spark.operators.dedup import near_duplicates_minhash
+
+    docs = _neardup_docs(spark)
+    tracker = spark.sparkContext.statusTracker()
+    seen = []
+    cls = type(docs)
+    orig = cls.localCheckpoint
+
+    def record(self, *a, **kw):
+        out = orig(self, *a, **kw)
+        seen.append(set(tracker.getJobIdsForGroup()))
+        return out
+
+    monkeypatch.setattr(cls, "localCheckpoint", record)
+    pairs = near_duplicates_minhash(docs, threshold=0.5)
+    after_build = set(tracker.getJobIdsForGroup())
+    monkeypatch.undo()
+    assert len(seen) == 2  # signature sketch, then candidate pairs
+    assert after_build == seen[-1]
+    assert pairs.count() == 3
+    # the tracker does see this thread's jobs (the check is not vacuous)
+    assert set(tracker.getJobIdsForGroup()) - after_build
+
+
 def test_star_contraction_no_cross_join(spark):
     """The star-contraction fallback is also pure equi-joins + keyed aggs
     with checkpoint-truncated lineage — no CartesianProduct/BNLJ."""
