@@ -19,6 +19,7 @@ Everything upstream of the pandas UDFs is Catalyst expressions
 from __future__ import annotations
 
 import itertools
+import math
 import sys
 
 import numpy as np
@@ -34,6 +35,10 @@ MERSENNE_31 = (1 << 31) - 1
 # width of every bit signature (simhash, random-hyperplane) that
 # _signature_blocks splits into blocks
 SIG_BITS = 64
+
+# minhash estimate-prefilter margin: near_duplicates_minhash keeps a
+# candidate whose sketch agreement is >= threshold - ESTIMATE_MARGIN/2
+ESTIMATE_MARGIN = 0.4
 
 
 def text_digest(col: Column | str) -> Column:
@@ -132,65 +137,27 @@ def _signature_batch_udf(n_hashes: int = 64, seed: int = 42,
     fold family alone cost ~35s of the 50k-doc corpus scan at sf1.0; the
     numpy form is ~1s).
 
-    BIT-IDENTICAL to that Catalyst fold (kept in the tests as the
-    reference): same coefficients, and
-    ``(a*h + b) % M31`` over int64 (a, b, h all < 2^31, so the product
-    stays below 2^62 — no overflow, same values as Spark's pmod), then a
-    per-row segment min. A NULL hash array maps to the Catalyst result
-    for a NULL input (an array of n_hashes NULLs).
+    Returns a struct ``(sig, p)``. ``sig`` is BIT-IDENTICAL to that
+    Catalyst fold (kept in the tests as the reference): same
+    coefficients, and ``(a*h + b) % M31`` over int64 (a, b, h all <
+    2^31, so the product stays below 2^62 — no overflow, same values as
+    Spark's pmod), then a per-row segment min. A NULL or EMPTY hash array
+    maps to the Catalyst result (an array of n_hashes NULLs; reduceat on
+    an empty segment would silently return the NEXT row's first element)
+    and a NULL ``p``.
 
-    With ``n_extra > 0`` the UDF ALSO folds n_extra additional
-    independent permutations (coefficients from seed+1000) and returns a
-    struct ``(sig, p)`` where ``p`` is a packed (n_hashes + n_extra)-byte
-    binary: the LOW byte of every min value (the n_hashes exact-signature
-    mins first, then the extras). ``p`` feeds the estimate prefilter:
-    byte equality is NECESSARY for component equality, so a byte-match
-    fraction is >= the true component-match fraction — a keep-superset
-    compression that can only weaken pruning, never drop a true pair."""
+    ``p`` is a packed (n_hashes + n_extra)-byte binary: the LOW byte of
+    every min value — the n_hashes signature mins first, then n_extra
+    additional independent permutations (coefficients from seed+1000).
+    ``p`` feeds the estimate prefilter: byte equality is NECESSARY for
+    component equality, so a byte-match fraction is >= the true
+    component-match fraction — a keep-superset compression that can only
+    weaken pruning, never drop a true pair. Callers that only band the
+    signature ignore it (the optimizer prunes the field)."""
     a, b = _coeffs(n_hashes, seed)
-    if n_extra:
-        ae, be = _coeffs(n_extra, seed + 1000)
-        a = np.concatenate([a, ae])
-        b = np.concatenate([b, be])
-    n_total = n_hashes + n_extra
-
-    def _fold(hashes: pd.Series):
-        """-> (list indices with data, (rows, n_total) int64 mins).
-
-        EMPTY arrays are excluded like NULLs: Catalyst's
-        array_min(transform([], ...)) is NULL per component, and
-        reduceat on an empty segment would silently return the NEXT
-        row's first element (or raise for a trailing empty segment) —
-        unreachable via shingles() today, but match the Catalyst
-        semantics for any hash array."""
-        vals = hashes.to_numpy()
-        idx = [i for i, v in enumerate(vals) if v is not None and len(v)]
-        if not idx:
-            return idx, None
-        arrs = [np.asarray(vals[i], dtype=np.int64) for i in idx]
-        lens = np.fromiter(
-            (x.size for x in arrs), dtype=np.int64, count=len(arrs)
-        )
-        flat = np.concatenate(arrs)
-        starts = np.zeros(len(arrs), dtype=np.int64)
-        np.cumsum(lens[:-1], out=starts[1:])
-        sigs = np.empty((len(arrs), n_total), dtype=np.int64)
-        for j in range(n_total):
-            t = (a[j] * flat + b[j]) % MERSENNE_31
-            sigs[:, j] = np.minimum.reduceat(t, starts)
-        return idx, sigs
-
-    if not n_extra:
-
-        @F.pandas_udf(T.ArrayType(T.LongType()))
-        def _sig(hashes: pd.Series) -> pd.Series:
-            out = [[None] * n_hashes] * len(hashes)
-            idx, sigs = _fold(hashes)
-            for row, i in enumerate(idx):
-                out[i] = sigs[row]
-            return pd.Series(out)
-
-        return _sig
+    ae, be = _coeffs(n_extra, seed + 1000)
+    a = np.concatenate([a, ae])
+    b = np.concatenate([b, be])
 
     @F.pandas_udf(
         T.StructType([
@@ -198,19 +165,31 @@ def _signature_batch_udf(n_hashes: int = 64, seed: int = 42,
             T.StructField("p", T.BinaryType()),
         ])
     )
-    def _sig_packed(hashes: pd.Series) -> pd.DataFrame:
+    def _sig(hashes: pd.Series) -> pd.DataFrame:
         n = len(hashes)
         sig_col: list = [[None] * n_hashes] * n
         p_col: list = [None] * n
-        idx, sigs = _fold(hashes)
+        vals = hashes.to_numpy()
+        idx = [i for i, v in enumerate(vals) if v is not None and len(v)]
         if idx:
+            arrs = [np.asarray(vals[i], dtype=np.int64) for i in idx]
+            lens = np.fromiter(
+                (x.size for x in arrs), dtype=np.int64, count=len(arrs)
+            )
+            flat = np.concatenate(arrs)
+            starts = np.zeros(len(arrs), dtype=np.int64)
+            np.cumsum(lens[:-1], out=starts[1:])
+            sigs = np.empty((len(arrs), a.size), dtype=np.int64)
+            for j in range(a.size):
+                t = (a[j] * flat + b[j]) % MERSENNE_31
+                sigs[:, j] = np.minimum.reduceat(t, starts)
             packed = (sigs & 0xFF).astype(np.uint8)
             for row, i in enumerate(idx):
                 sig_col[i] = sigs[row, :n_hashes]
                 p_col[i] = packed[row].tobytes()
         return pd.DataFrame({"sig": sig_col, "p": p_col})
 
-    return _sig_packed
+    return _sig
 
 
 def minhash_lsh_candidates(
@@ -233,31 +212,30 @@ def minhash_lsh_candidates(
     runtime). A degenerate corpus (billions of near-identical docs in one
     bucket) therefore never OOMs a reducer; truncated buckets are
     observable via :func:`lsh_bucket_stats`.
-
-    The former ``_sigs`` signature-reuse parameter is gone: no caller
-    passed it, and the estimate prefilter in
-    :func:`near_duplicates_minhash` reuses its own signature frame
-    internally.
     """
-    banded = _minhash_banded(df, text_col, id_col, n_hashes, bands, k, seed)
-    return _raw_bucket_pairs(banded, max_bucket).distinct()
+    sigs = _minhash_sigs(
+        _spread_if_narrow(df), text_col, id_col, n_hashes, k, seed
+    )
+    banded = _minhash_banded(sigs, n_hashes, bands)
+    return _raw_bucket_pairs(banded, max_bucket).select("a", "b").distinct()
 
 
-def _raw_bucket_pairs(
-    banded: DataFrame, max_bucket: int, carry: tuple[str, ...] = ()
-) -> DataFrame:
+def _raw_bucket_pairs(banded: DataFrame, max_bucket: int) -> DataFrame:
     """(a, b) in-bucket pairs, WITHOUT the cross-band distinct — callers
     that run a cheap per-pair prefilter next (the packed-estimate join)
     apply it BEFORE deduplicating, so the distinct's hash aggregate sees
     the (small) survivor set instead of the raw near-quadratic candidate
     stream (44M-row distinct was 44s at sf1.0; post-filter it is ~2s).
 
-    ``carry`` columns ride through the self-join and come out twice as
-    ``<c>_a`` / ``<c>_b`` — shipping a per-doc payload through the
-    blocking join (one exchange of n_docs * bands rows) instead of
-    joining it onto the near-quadratic pair stream afterwards (two
-    shuffles + sorts of the pair stream keyed by a then b — guide §2.3:
-    shuffle the small side once, not the big stream twice)."""
+    Every column of ``banded`` besides ``(id, band, bucket)`` rides
+    through the self-join and comes out twice as ``<c>_a`` / ``<c>_b`` —
+    shipping a per-doc payload through the blocking join (one exchange
+    of n_docs * bands rows) instead of joining it onto the
+    near-quadratic pair stream afterwards (two shuffles + sorts of the
+    pair stream keyed by a then b — guide §2.3: shuffle the small side
+    once, not the big stream twice). A caller that selects only
+    ``(a, b)`` lets the optimizer prune the payload."""
+    carry = [c for c in banded.columns if c not in ("id", "band", "bucket")]
     w = Window.partitionBy("band", "bucket").orderBy("id")
     capped = (
         banded.withColumn("_rn", F.row_number().over(w))
@@ -281,27 +259,24 @@ def _raw_bucket_pairs(
     )
 
 
-def _minhash_sigs_packed(df, text_col, id_col, n_hashes, k, seed,
-                         n_extra: int = 0) -> DataFrame:
-    """(id, sig) minhash signatures from ONE corpus scan; with
-    ``n_extra > 0`` also the packed (n_hashes + n_extra)-byte estimate
-    sketch ``p`` -> (id, sig, p). The shingle hashes are hoisted through
-    their own projection so the fold consumes ONE materialized array
-    instead of re-evaluating the shingle->hash subtree per fold (HOFs are
-    CodegenFallback; CollapseProject keeps the boundary because the
-    subtree is non-cheap and multiply referenced) — measured 16x on the
-    sf0.1 corpus scan (120.7s -> 7.9s). The folds run in one numpy
-    pandas UDF (:func:`_signature_batch_udf`). ``df`` is used as given:
-    callers spread a narrow scan first (:func:`_spread_if_narrow` — the
-    sf tables are single-file scans), once, so a caller that reuses the
-    spread frame does not count the partitions of a repartition plan."""
+def _minhash_sigs(df, text_col, id_col, n_hashes, k, seed,
+                  n_extra: int = 0) -> DataFrame:
+    """(id, sig, p) minhash signatures and the packed (n_hashes +
+    n_extra)-byte estimate sketch from ONE corpus scan. The shingle
+    hashes are hoisted through their own projection so the fold consumes
+    ONE materialized array instead of re-evaluating the shingle->hash
+    subtree per fold (HOFs are CodegenFallback; CollapseProject keeps the
+    boundary because the subtree is non-cheap and multiply referenced) —
+    measured 16x on the sf0.1 corpus scan (120.7s -> 7.9s). The folds run
+    in one numpy pandas UDF (:func:`_signature_batch_udf`). ``df`` is
+    used as given: callers spread a narrow scan first
+    (:func:`_spread_if_narrow` — the sf tables are single-file scans),
+    once, so a caller that reuses the spread frame does not count the
+    partitions of a repartition plan."""
     sig = _signature_batch_udf(n_hashes, seed, n_extra=n_extra)
-    hashed = df.select(
+    return df.select(
         F.col(id_col).alias("id"), shingle_hashes(text_col, k).alias("_sh")
-    )
-    if not n_extra:
-        return hashed.select("id", sig(F.col("_sh")).alias("sig"))
-    return hashed.select(
+    ).select(
         "id", sig(F.col("_sh")).alias("_s")
     ).select("id", "_s.sig", "_s.p")
 
@@ -336,25 +311,16 @@ def _byte_match_udf(n_bytes: int):
     return _matches
 
 
-def _minhash_banded(df, text_col, id_col, n_hashes, bands, k, seed,
-                    _sigs: DataFrame | None = None,
-                    carry: tuple[str, ...] = ()):
-    """(id, band, bucket[, carry...]) exploded banding rows (shared by
-    candidates + stats). ``_sigs`` reuses an already-built (id, sig)
-    frame so a caller that ALSO needs the signatures (the estimate
-    prefilter) does not pay the corpus signature scan twice. ``carry``
-    names extra ``_sigs`` columns to keep on the exploded rows (the
-    prefilter rides its packed sketch through the blocking join instead
-    of joining it onto the pair stream)."""
+def _minhash_banded(sigs: DataFrame, n_hashes: int, bands: int):
+    """Exploded banding rows of a :func:`_minhash_sigs` frame, shared by
+    candidates, stats and the estimate prefilter: one row per (id, band)
+    with the band's ``bucket`` hash. Every column of ``sigs`` besides
+    ``sig`` is carried onto the rows (the prefilter's packed sketch
+    rides the blocking join this way instead of being joined onto the
+    pair stream)."""
     rows_per_band = n_hashes // bands
-    sigs = (
-        _sigs if _sigs is not None
-        else _minhash_sigs_packed(
-            _spread_if_narrow(df), text_col, id_col, n_hashes, k, seed
-        )
-    )
+    carry = [c for c in sigs.columns if c != "sig"]
     return sigs.select(
-        "id",
         *carry,
         F.explode(
             F.array(*[
@@ -367,7 +333,7 @@ def _minhash_banded(df, text_col, id_col, n_hashes, bands, k, seed,
                 for b in range(bands)
             ])
         ).alias("bb"),
-    ).select("id", *carry, "bb.band", "bb.bucket")
+    ).select(*carry, "bb.band", "bb.bucket")
 
 
 def lsh_bucket_stats(
@@ -384,8 +350,11 @@ def lsh_bucket_stats(
     monitoring side-output for cap tuning: any bucket_size above the
     candidate cap means ``minhash_lsh_candidates`` truncated it (pairs
     beyond the first max_bucket ids per bucket were not generated)."""
+    sigs = _minhash_sigs(
+        _spread_if_narrow(df), text_col, id_col, n_hashes, k, seed
+    )
     return (
-        _minhash_banded(df, text_col, id_col, n_hashes, bands, k, seed)
+        _minhash_banded(sigs, n_hashes, bands)
         .groupBy("band", "bucket")
         .agg(F.count(F.lit(1)).alias("bucket_size"))
         .filter(F.col("bucket_size") >= min_size)
@@ -427,8 +396,10 @@ def jaccard_similarity(df_pairs: DataFrame, docs: DataFrame,
 
 
 def near_duplicates_minhash(
-    df: DataFrame, threshold: float = 0.8,
-    estimate_margin: float | None = 0.4, **kw
+    df: DataFrame, threshold: float = 0.8, *,
+    text_col: str = "text", id_col: str = "doc_id", k: int = 5,
+    n_hashes: int = 64, seed: int = 42, bands: int = 16,
+    max_bucket: int = 200,
 ) -> DataFrame:
     """LSH candidates -> minhash-estimate prefilter -> exact-Jaccard
     verified pairs above threshold.
@@ -439,93 +410,50 @@ def near_duplicates_minhash(
     whose baseline similarity exceeds the banding threshold
     ((1/b)^(1/r) ~ 0.18), and the exact verify then shuffles the big
     shingle STRING arrays for every candidate (measured 3.3M pairs /
-    27s for 5k docs at sf0.1). The round-6 prefilter keeps only pairs
-    whose packed-sketch component agreement over 4*n_hashes independent
-    min-permutations is >= threshold - estimate_margin/2; a TRUE pair
-    (J >= threshold) is dropped with probability
-    <= exp(-2*(4*n_hashes)*(margin/2)^2) == exp(-2*n_hashes*margin^2)
-    (Hoeffding) — 1.3e-9 at (64, 0.4), the same order as the banding
-    miss probability callers already accept (the byte packing of the
-    sketch only ever INFLATES the estimate, so it cannot add drops).
-    The exact string-shingle verify then runs on the survivors' docs
-    only (semi-joined corpus). estimate_margin=None (or a margin >=
-    threshold) disables the prefilter."""
-    import math
+    27s for 5k docs at sf0.1). It keeps only pairs whose packed-sketch
+    component agreement over 4*n_hashes independent min-permutations is
+    >= threshold - ESTIMATE_MARGIN/2; a TRUE pair (J >= threshold) is
+    dropped with probability
+    <= exp(-2*(4*n_hashes)*(m/2)^2) == exp(-2*n_hashes*m^2)
+    (Hoeffding, m = ESTIMATE_MARGIN) — 1.3e-9 at 64 hashes, the same
+    order as the banding miss probability callers already accept (the
+    byte packing of the sketch only ever INFLATES the estimate, so it
+    cannot add drops). The bound does not depend on the threshold.
 
-    _known = {"text_col", "id_col", "k", "n_hashes", "seed", "bands",
-              "max_bucket"}
-    _unknown = set(kw) - _known
-    if _unknown:
-        # the prefilter branch reads kw via .get() and would otherwise
-        # drop a typoed tuning knob on the floor, while the
-        # estimate_margin=None branch forwards **kw and raises — behave
-        # alike on both branches
-        raise TypeError(
-            f"near_duplicates_minhash: unknown keyword(s) {sorted(_unknown)}"
-        )
-    text_col = kw.get("text_col", "text")
-    id_col = kw.get("id_col", "doc_id")
-    k = kw.get("k", 5)
-    n_hashes = kw.get("n_hashes", 64)
-    seed = kw.get("seed", 42)
-    cutoff = (
-        max(threshold - estimate_margin, 0.0)
-        if estimate_margin is not None else 0.0
-    )
-    if cutoff > 0.0 and (
-        math.exp(-2.0 * n_hashes * estimate_margin ** 2) > 1e-6
-    ):
-        # the Hoeffding drop bound depends on n_hashes: at the default
-        # margin it is 1.3e-9 for 64 hashes but ~0.6% for 16 — too weak
-        # to call negligible. Silently fall back to verifying every
-        # candidate rather than silently losing true pairs.
-        cutoff = 0.0
+    The bound does depend on n_hashes: it is <= 1e-6 only from 44 hashes
+    up (~0.6% at 16). Below 44 the byte filter is skipped and EVERY
+    bucket candidate is verified rather than silently losing true pairs.
+    The exact string-shingle verify then runs on the survivors' docs
+    only (semi-joined corpus). Unknown keywords raise ``TypeError``."""
+    prefilter = math.exp(-2.0 * n_hashes * ESTIMATE_MARGIN ** 2) <= 1e-6
+    n_est = 4 * n_hashes if prefilter else n_hashes
     # spread a narrow scan ONCE: the signature scan and the verify's doc
     # side both read `src`, so neither counts the partitions of the
     # other's repartition plan (that count would run the shuffle)
     src = _spread_if_narrow(df)
-    if cutoff > 0.0:
-        # Round-6 shape of the prefilter (same Hoeffding drop bound,
-        # far cheaper join): the estimate uses 4*n_hashes independent
-        # min-permutation components at HALF the margin — Hoeffding
-        # exp(-2*(4n)*(m/2)^2) == exp(-2*n*m^2), the exact bound the
-        # disable check above enforces — so the cutoff moves from
-        # threshold-m to threshold-m/2 and the exact-verify set shrinks
-        # by orders of magnitude on high-baseline-similarity corpora
-        # (5.4M -> ~10k pairs at sf1.0). Components ship as a packed
-        # low-byte-per-component binary sketch (keep-superset
-        # compression: byte equality is necessary for component
-        # equality, so the byte estimate >= the true estimate and can
-        # only keep MORE pairs — the exact verify still decides).
-        # The distinct runs AFTER this filter (see _raw_bucket_pairs).
-        n_est = 4 * n_hashes
-        bands = kw.get("bands", 16)
-        max_bucket = kw.get("max_bucket", 200)
-        sp = _minhash_sigs_packed(
-            src, text_col, id_col, n_hashes, k, seed, n_extra=3 * n_hashes
-        ).localCheckpoint(eager=False)
-        # the packed sketch RIDES the banding explode and the bucket
-        # self-join (one exchange of n_docs*bands ~300-byte rows) instead
-        # of being joined onto the near-quadratic raw-pair stream (which
-        # cost two full shuffles + sorts of the ~47M-row stream at
-        # sf1.0, keyed by a then by b — guide §2.3/§3.2)
-        banded = _minhash_banded(
-            df, text_col, id_col, n_hashes, bands, k, seed,
-            _sigs=sp.select("id", "sig", "p"), carry=("p",),
-        )
+    sigs = _minhash_sigs(
+        src, text_col, id_col, n_hashes, k, seed, n_extra=n_est - n_hashes
+    ).localCheckpoint(eager=False)
+    # the packed sketch RIDES the banding explode and the bucket
+    # self-join (one exchange of n_docs*bands ~300-byte rows) instead
+    # of being joined onto the near-quadratic raw-pair stream (which
+    # cost two full shuffles + sorts of the ~47M-row stream at
+    # sf1.0, keyed by a then by b — guide §2.3/§3.2)
+    cands = _raw_bucket_pairs(_minhash_banded(sigs, n_hashes, bands),
+                              max_bucket)
+    if prefilter:
+        # the estimate uses 4*n_hashes components at HALF the margin, so
+        # the cutoff is threshold-m/2 and the exact-verify set shrinks by
+        # orders of magnitude on high-baseline-similarity corpora (5.4M
+        # -> ~10k pairs at sf1.0). The distinct runs AFTER this filter
+        # (see _raw_bucket_pairs).
         matches = _byte_match_udf(n_est)
-        byte_cutoff = max(threshold - estimate_margin / 2.0, 0.0)
-        cands = (
-            _raw_bucket_pairs(banded, max_bucket, carry=("p",))
-            .filter(
-                (matches(F.col("p_a"), F.col("p_b"))
-                 / F.lit(float(n_est))) >= byte_cutoff
-            )
-            .select("a", "b")
-            .distinct()
+        byte_cutoff = max(threshold - ESTIMATE_MARGIN / 2.0, 0.0)
+        cands = cands.filter(
+            (matches(F.col("p_a"), F.col("p_b")) / F.lit(float(n_est)))
+            >= byte_cutoff
         )
-    else:
-        cands = minhash_lsh_candidates(df, **kw)
+    cands = cands.select("a", "b").distinct()
     # verify CANDIDATES only: materialize the (small) surviving pair set
     # once, then cut the corpus down to the ids it mentions before the
     # exact-Jaccard shingle computation. Without this the verify stage

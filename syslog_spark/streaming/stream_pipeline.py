@@ -180,7 +180,8 @@ def run_stream_once(
     row lands in its (sink_severity, source) partition, error rows in the
     sink_severity=-1 dead-letter partition. Returns valid rows written.
     Restart-safe: the checkpoint makes a second invocation a no-op for
-    already-committed files (exactly-once file sink)."""
+    already-committed files (exactly-once file sink). A routed table that
+    cannot be read raises instead of reading as 0 rows."""
     from ..operators.route import ERROR_SINK, with_sink_key
 
     parsed = with_sink_key(parse_stream(read_token_stream(spark, input_dir)))
@@ -194,11 +195,11 @@ def run_stream_once(
         .start()
     )
     q.awaitTermination()
-    try:
-        return (
-            spark.read.parquet(f"{out_dir}/routed")
-            .filter(F.col("sink_severity") != ERROR_SINK)
-            .count()
-        )
-    except Exception:
-        return 0
+    # read with the stream's own schema: after an empty input the sink
+    # holds only _spark_metadata, which has no files to infer a schema
+    # from, and that is 0 rows — any other read error propagates
+    return (
+        spark.read.schema(parsed.schema).parquet(f"{out_dir}/routed")
+        .filter(F.col("sink_severity") != ERROR_SINK)
+        .count()
+    )

@@ -59,7 +59,7 @@ def test_minhash_accuracy(spark):
     df = spark.createDataFrame(rows, "doc_id string, text string")
     out = df.select(
         "doc_id",
-        _signature_batch_udf(128)(shingle_hashes("text")).alias("sig"),
+        _signature_batch_udf(128)(shingle_hashes("text"))["sig"].alias("sig"),
         shingles("text").alias("sh"),
     ).collect()
     sig = {r["doc_id"]: r["sig"] for r in out}

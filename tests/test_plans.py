@@ -235,12 +235,13 @@ def test_minhash_shingle_hoist_survives_optimizer(spark):
     optimized banding plan — if CollapseProject ever starts re-inlining
     the hoisted hash array into the 64 min folds, array_distinct (the
     shingle subtree's marker) shows up 64x and this trips."""
-    from syslog_spark.operators.dedup import _minhash_banded
+    from syslog_spark.operators.dedup import _minhash_banded, _minhash_sigs
 
     docs = spark.createDataFrame(
         [(1, "hello world the end")], "doc_id long, text string"
     )
-    plan = _optimized(_minhash_banded(docs, "text", "doc_id", 64, 16, 5, 42))
+    sigs = _minhash_sigs(docs, "text", "doc_id", 64, 5, 42)
+    plan = _optimized(_minhash_banded(sigs, 64, 16))
     assert plan.count("array_distinct") == 1
 
 

@@ -44,7 +44,7 @@ def test_numpy_signature_bit_identical_to_catalyst(spark):
     got = {
         r["doc_id"]: r["s"]
         for r in hashes.select(
-            "doc_id", udf_sig(F.col("_sh")).alias("s")
+            "doc_id", udf_sig(F.col("_sh"))["sig"].alias("s")
         ).collect()
     }
     want = {
@@ -64,12 +64,10 @@ def test_packed_sketch_prefix_matches_signature(spark):
     """The packed estimate sketch's first n_hashes bytes must be the low
     bytes of the exact signature (the keep-superset compression claim
     rests on byte equality being NECESSARY for component equality)."""
-    from syslog_spark.operators.dedup import (
-        _minhash_sigs_packed,
-    )
+    from syslog_spark.operators.dedup import _minhash_sigs
 
     df = spark.createDataFrame(_random_docs(20), "doc_id string, text string")
-    out = _minhash_sigs_packed(df, "text", "doc_id", 8, 5, 42, n_extra=24)
+    out = _minhash_sigs(df, "text", "doc_id", 8, 5, 42, n_extra=24)
     for r in out.collect():
         assert len(r["p"]) == 32
         assert list(r["p"][:8]) == [v & 0xFF for v in r["sig"]]
@@ -204,7 +202,7 @@ def test_raw_bucket_pairs_carry_matches_join(spark):
     )
     new = {
         (r["a"], r["b"], bytes(r["p_a"]), bytes(r["p_b"]))
-        for r in _raw_bucket_pairs(banded, 200, carry=("p",)).collect()
+        for r in _raw_bucket_pairs(banded, 200).collect()
     }
     base = _raw_bucket_pairs(banded.select("id", "band", "bucket"), 200)
     payload = banded.select("id", "p")
@@ -234,7 +232,10 @@ def test_signature_udf_empty_array_matches_catalyst_null(spark):
         ])
     )
     sig = _signature_batch_udf(8, 42)
-    got = {r["id"]: r["s"] for r in df.select("id", sig("h").alias("s")).collect()}
+    got = {
+        r["id"]: r["s"]
+        for r in df.select("id", sig("h")["sig"].alias("s")).collect()
+    }
     assert got["b"] == [None] * 8
     assert got["c"] == [None] * 8
     assert all(v is not None for v in got["a"])
@@ -252,3 +253,90 @@ def test_spread_if_narrow_streaming_and_narrow_batch(spark):
     out = _spread_if_narrow(narrow)
     assert out.rdd.getNumPartitions() == spark.sparkContext.defaultParallelism
     assert sorted(r["id"] for r in out.collect()) == list(range(10))
+
+
+def _planted_shingle_corpus():
+    """3 clusters of a 24-word base text and 5 variants keeping its first
+    22/18/15/12/9 words, plus 6 unrelated docs: pair Jaccards fall on
+    both sides of 0.3, 0.4 and 0.7."""
+    rng = np.random.RandomState(21)
+
+    def words(n):
+        return [
+            "".join(rng.choice(list("abcdefghijklmnop"),
+                               size=rng.randint(3, 8)))
+            for _ in range(n)
+        ]
+
+    rows = []
+    for c in range(3):
+        base = words(24)
+        rows.append((f"c{c}", " ".join(base)))
+        for j, keep in enumerate((22, 18, 15, 12, 9)):
+            text = " ".join(base[:keep] + words(24 - keep))
+            rows.append((f"c{c}v{j}", text))
+    rows += [(f"u{i}", " ".join(words(20))) for i in range(6)]
+    return rows
+
+
+def _python_jaccards(rows, k=5):
+    def sh(t):
+        return {t[i:i + k] for i in range(max(len(t) - (k - 1), 1))}
+
+    sets = {d: sh(t) for d, t in rows}
+    ids = sorted(sets)
+    return {
+        (a, b): len(sets[a] & sets[b]) / len(sets[a] | sets[b])
+        for i, a in enumerate(ids) for b in ids[i + 1:]
+    }
+
+
+@pytest.mark.parametrize(
+    "threshold,n_hashes", [(0.3, 64), (0.7, 64), (0.7, 32)]
+)
+def test_minhash_one_candidate_path_exact(spark, monkeypatch, threshold,
+                                          n_hashes):
+    """near_duplicates_minhash has one candidate path: bucket pairs, the
+    byte-match prefilter only from 44 hashes up (where its Hoeffding drop
+    bound is <= 1e-6), then the exact verify. Thresholds at or below
+    ESTIMATE_MARGIN take the prefilter too. The output is exactly the
+    all-pairs 5-shingle Jaccard >= threshold set (one-row bands, so
+    banding recall is ~1 - 0.7^n_hashes at J = 0.3)."""
+    from syslog_spark.operators.dedup import near_duplicates_minhash
+
+    rows = _planted_shingle_corpus()
+    jac = _python_jaccards(rows)
+    for lo, hi in ((0.0, 0.3), (0.3, 0.4), (0.4, 0.7), (0.7, 1.01)):
+        assert any(lo <= v < hi for v in jac.values())
+    df = spark.createDataFrame(rows, "doc_id string, text string")
+
+    plans = []
+    cls = type(df)
+    orig = cls.localCheckpoint
+
+    def record(self, *a, **kw):
+        plans.append(self._jdf.queryExecution().optimizedPlan().toString())
+        return orig(self, *a, **kw)
+
+    monkeypatch.setattr(cls, "localCheckpoint", record)
+    out = near_duplicates_minhash(
+        df, threshold=threshold, n_hashes=n_hashes, bands=n_hashes
+    )
+    monkeypatch.undo()
+    got = {(r["a"], r["b"]): r["jaccard"] for r in out.collect()}
+    want = {p: v for p, v in jac.items() if v >= threshold}
+    assert got == want
+    assert len(plans) == 2  # signature sketch, then candidate pairs
+    assert ("_matches(" in plans[1]) == (n_hashes >= 44)
+
+
+def test_minhash_unknown_keyword_raises(spark):
+    """Keywords are explicit: the removed prefilter margin and a typoed
+    tuning knob both fail closed instead of being ignored."""
+    from syslog_spark.operators.dedup import near_duplicates_minhash
+
+    df = spark.createDataFrame(_random_docs(4), "doc_id string, text string")
+    with pytest.raises(TypeError):
+        near_duplicates_minhash(df, estimate_margin=0.4)
+    with pytest.raises(TypeError):
+        near_duplicates_minhash(df, max_buckets=10)

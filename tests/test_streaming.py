@@ -35,6 +35,25 @@ def test_stream_parse_availablenow(spark, token_dir, tmp_path):
     assert n2 == n1
 
 
+def test_stream_once_fails_closed(spark, token_dir, tmp_path):
+    """An empty input reads back as 0 rows (the sink holds only its
+    metadata log), but an unreadable routed table raises instead of
+    reporting 0 valid rows written."""
+    from syslog_spark.streaming.stream_pipeline import run_stream_once
+
+    empty = tmp_path / "empty"
+    empty.mkdir()
+    assert run_stream_once(
+        spark, str(empty), str(tmp_path / "e_out"), str(tmp_path / "e_ck")
+    ) == 0
+    out, ckpt = tmp_path / "out", str(tmp_path / "ckpt")
+    assert run_stream_once(spark, token_dir, str(out), ckpt) > 0
+    part = next((out / "routed").rglob("*.parquet"))
+    part.write_bytes(b"not a parquet file")
+    with pytest.raises(Exception):
+        run_stream_once(spark, token_dir, str(out), ckpt)
+
+
 def test_stream_windowed_counts(spark, token_dir):
     from syslog_spark.streaming.stream_pipeline import (
         parse_stream,

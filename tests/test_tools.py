@@ -97,3 +97,22 @@ def test_upscale_permute_vecs_rejects_null_and_ragged_rows():
                 [[1, 2, None], [4, 5, 6]]):     # null element
         with pytest.raises(ValueError):
             up.permute_vecs(pa.chunked_array([pa.array(bad, t)]), 1, 3)
+
+
+def test_gate_check_gates_its_own_checkout(tmp_path, monkeypatch):
+    """gate_check puts the checkout it lives in first on sys.path, so a
+    copy of the repo gates its own code: load a copy of the tool from
+    another directory and check the path it inserts."""
+    import shutil
+    import sys
+
+    checkout = tmp_path / "checkout"
+    (checkout / "tools").mkdir(parents=True)
+    shutil.copy(os.path.join(ROOT, "tools", "gate_check.py"),
+                checkout / "tools" / "gate_check.py")
+    monkeypatch.setattr(sys, "path", list(sys.path))
+    spec = importlib.util.spec_from_file_location(
+        "gate_check_copy", checkout / "tools" / "gate_check.py"
+    )
+    spec.loader.exec_module(importlib.util.module_from_spec(spec))
+    assert sys.path[0] == str(checkout)

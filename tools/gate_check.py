@@ -10,13 +10,16 @@ Usage:  python tools/gate_check.py [query ...]   (no args = all)
 """
 from __future__ import annotations
 
+import os
 import sys
 
 import duckdb
 import numpy as np
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+# gate the checkout this tool lives in, not whichever one is importable
+REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO_ROOT)
 
 SF_DIR = "/root/testdata/sf0.01"
 TABLES = [
