@@ -26,11 +26,6 @@ def severity_of(priority: Column | str) -> Column:
     return F.pmod(p.cast("int"), F.lit(8)).cast("smallint")
 
 
-def priority_of(facility: Column, severity: Column) -> Column:
-    """CalculatePriority (priority.go:48-51)."""
-    return (facility.cast("int") * 8 + severity.cast("int")).cast("smallint")
-
-
 def is_valid_priority(c: Column) -> Column:
     return c.cast("int").between(0, C.MAX_PRIORITY)
 

@@ -113,16 +113,30 @@ def _spread_if_narrow(df: DataFrame) -> DataFrame:
     shuffle is ever added to a 100-TB input. Streaming frames have no
     RDD to count and pass through unchanged.
 
-    Call it only on a scan or a materialized (checkpointed) frame: on a
-    plan with an exchange, counting partitions makes AQE run the
-    shuffle stages in a separate query execution whose result is thrown
-    away."""
+    So does a frame whose physical plan has an exchange: counting its
+    partitions would make AQE run the shuffle stages in a throwaway
+    query execution. Only scans and checkpointed frames are counted."""
     if df.isStreaming:
+        return df
+    if "Exchange" in df._jdf.queryExecution().executedPlan().toString():
         return df
     p = df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() * 2 <= p:
         return df.repartition(p)
     return df
+
+
+def _bit_planes(low: np.ndarray) -> np.ndarray:
+    """(rows, n) uint8 sketch bytes -> (rows, 8 * ceil(n/64)) int64 bit
+    planes: bit j of long ``c*8 + k`` is bit k of component 64c + j. The
+    components are zero-padded to a multiple of 64 (equal on every row,
+    so the padding never differs)."""
+    padded = np.pad(low, ((0, 0), (0, -low.shape[1] % 64)))
+    out = np.empty((low.shape[0], padded.shape[1] // 64, 8), np.int64)
+    for k in range(8):
+        bits = np.packbits((padded >> k) & 1, axis=1, bitorder="little")
+        out[:, :, k] = bits.view("<i8")
+    return out.reshape(low.shape[0], out.shape[1] * 8)
 
 
 def _signature_batch_udf(n_hashes: int = 64, seed: int = 42,
@@ -146,14 +160,15 @@ def _signature_batch_udf(n_hashes: int = 64, seed: int = 42,
     an empty segment would silently return the NEXT row's first element)
     and a NULL ``p``.
 
-    ``p`` is a packed (n_hashes + n_extra)-byte binary: the LOW byte of
-    every min value — the n_hashes signature mins first, then n_extra
-    additional independent permutations (coefficients from seed+1000).
-    ``p`` feeds the estimate prefilter: byte equality is NECESSARY for
-    component equality, so a byte-match fraction is >= the true
-    component-match fraction — a keep-superset compression that can only
-    weaken pruning, never drop a true pair. Callers that only band the
-    signature ignore it (the optimizer prunes the field)."""
+    ``p`` is the LOW byte of every min value — the n_hashes signature
+    mins first, then n_extra additional independent permutations
+    (coefficients from seed+1000) — as :func:`_bit_planes` in an
+    ``array<long>``. ``p`` feeds the estimate prefilter
+    (:func:`_sketch_matches` compares the same bytes): byte equality is
+    NECESSARY for component equality, so a byte-match fraction is >= the
+    true component-match fraction — a keep-superset compression that can
+    only weaken pruning, never drop a true pair. Callers that only band
+    the signature ignore it (the optimizer prunes the field)."""
     a, b = _coeffs(n_hashes, seed)
     ae, be = _coeffs(n_extra, seed + 1000)
     a = np.concatenate([a, ae])
@@ -162,7 +177,9 @@ def _signature_batch_udf(n_hashes: int = 64, seed: int = 42,
     @F.pandas_udf(
         T.StructType([
             T.StructField("sig", T.ArrayType(T.LongType())),
-            T.StructField("p", T.BinaryType()),
+            # elements are never NULL: `p[i]` then needs no null branch,
+            # keeping the join stage's method under the JIT size limit
+            T.StructField("p", T.ArrayType(T.LongType(), False)),
         ])
     )
     def _sig(hashes: pd.Series) -> pd.DataFrame:
@@ -183,10 +200,10 @@ def _signature_batch_udf(n_hashes: int = 64, seed: int = 42,
             for j in range(a.size):
                 t = (a[j] * flat + b[j]) % MERSENNE_31
                 sigs[:, j] = np.minimum.reduceat(t, starts)
-            packed = (sigs & 0xFF).astype(np.uint8)
+            planes = _bit_planes((sigs & 0xFF).astype(np.uint8))
             for row, i in enumerate(idx):
                 sig_col[i] = sigs[row, :n_hashes]
-                p_col[i] = packed[row].tobytes()
+                p_col[i] = planes[row]
         return pd.DataFrame({"sig": sig_col, "p": p_col})
 
     return _sig
@@ -222,7 +239,7 @@ def minhash_lsh_candidates(
 
 def _raw_bucket_pairs(banded: DataFrame, max_bucket: int) -> DataFrame:
     """(a, b) in-bucket pairs, WITHOUT the cross-band distinct — callers
-    that run a cheap per-pair prefilter next (the packed-estimate join)
+    that run a cheap per-pair prefilter next (the sketch estimate)
     apply it BEFORE deduplicating, so the distinct's hash aggregate sees
     the (small) survivor set instead of the raw near-quadratic candidate
     stream (44M-row distinct was 44s at sf1.0; post-filter it is ~2s).
@@ -261,8 +278,9 @@ def _raw_bucket_pairs(banded: DataFrame, max_bucket: int) -> DataFrame:
 
 def _minhash_sigs(df, text_col, id_col, n_hashes, k, seed,
                   n_extra: int = 0) -> DataFrame:
-    """(id, sig, p) minhash signatures and the packed (n_hashes +
-    n_extra)-byte estimate sketch from ONE corpus scan. The shingle
+    """(id, sig, p) minhash signatures and the estimate sketch (low bytes
+    of n_hashes + n_extra mins as bit planes; equal bytes are still
+    necessary for equal components) from ONE corpus scan. The shingle
     hashes are hoisted through their own projection so the fold consumes
     ONE materialized array instead of re-evaluating the shingle->hash
     subtree per fold (HOFs are CodegenFallback; CollapseProject keeps the
@@ -281,58 +299,37 @@ def _minhash_sigs(df, text_col, id_col, n_hashes, k, seed,
     ).select("id", "_s.sig", "_s.p")
 
 
-def _byte_match_udf(n_bytes: int):
-    """count of equal bytes between two fixed-width binary sketches
-    (NULL when either side is NULL — matching the Catalyst est's NULL
-    comparison semantics, which drops the pair at the filter)."""
-
-    @F.pandas_udf(T.LongType())
-    def _matches(pa: pd.Series, pb: pd.Series) -> pd.Series:
-        va, vb = pa.to_numpy(), pb.to_numpy()
-        n = len(va)
-        out = np.zeros(n, dtype=np.int64)
-        ok = np.fromiter(
-            (x is not None and y is not None for x, y in zip(va, vb)),
-            dtype=bool, count=n,
-        )
-        idx = np.flatnonzero(ok)
-        if idx.size:
-            aa = np.frombuffer(
-                b"".join(va[i] for i in idx), dtype=np.uint8
-            ).reshape(-1, n_bytes)
-            bb = np.frombuffer(
-                b"".join(vb[i] for i in idx), dtype=np.uint8
-            ).reshape(-1, n_bytes)
-            out[idx] = (aa == bb).sum(axis=1)
-        res = pd.Series(out, dtype="Int64")
-        res[~ok] = pd.NA
-        return res
-
-    return _matches
+def _sketch_matches(pa: str, pb: str, n: int) -> Column:
+    """Equal components of two n-component :func:`_bit_planes` columns.
+    A component differs iff any of its 8 planes does, so each 64-wide
+    chunk ORs its 8 plane XORs into one ``bit_count``; NULL on either
+    side is NULL. Codegen'd bitwise ops only (no HOF, no Python), one
+    small term per chunk: it stays under the JIT's method size limit."""
+    diff = " + ".join(
+        "bit_count(" + " | ".join(
+            f"(`{pa}`[{j}] ^ `{pb}`[{j}])" for j in range(c * 8, c * 8 + 8)
+        ) + ")"
+        for c in range(-(-n // 64))
+    )
+    return F.expr(f"{n} - ({diff})")
 
 
 def _minhash_banded(sigs: DataFrame, n_hashes: int, bands: int):
     """Exploded banding rows of a :func:`_minhash_sigs` frame, shared by
     candidates, stats and the estimate prefilter: one row per (id, band)
     with the band's ``bucket`` hash. Every column of ``sigs`` besides
-    ``sig`` is carried onto the rows (the prefilter's packed sketch
-    rides the blocking join this way instead of being joined onto the
-    pair stream)."""
-    rows_per_band = n_hashes // bands
+    ``sig`` is carried onto the rows (the prefilter's sketch rides the
+    blocking join this way instead of being joined onto the pair
+    stream)."""
+    r = n_hashes // bands
     carry = [c for c in sigs.columns if c != "sig"]
+    bb = ", ".join(
+        f"named_struct('band', {b}, "
+        f"'bucket', xxhash64(slice(sig, {b * r + 1}, {r})))"
+        for b in range(bands)
+    )
     return sigs.select(
-        *carry,
-        F.explode(
-            F.array(*[
-                F.struct(
-                    F.lit(b).alias("band"),
-                    F.xxhash64(
-                        F.slice(F.col("sig"), b * rows_per_band + 1, rows_per_band)
-                    ).alias("bucket"),
-                )
-                for b in range(bands)
-            ])
-        ).alias("bb"),
+        *carry, F.expr(f"explode(array({bb})) AS bb")
     ).select(*carry, "bb.band", "bb.bucket")
 
 
@@ -410,18 +407,21 @@ def near_duplicates_minhash(
     whose baseline similarity exceeds the banding threshold
     ((1/b)^(1/r) ~ 0.18), and the exact verify then shuffles the big
     shingle STRING arrays for every candidate (measured 3.3M pairs /
-    27s for 5k docs at sf0.1). It keeps only pairs whose packed-sketch
-    component agreement over 4*n_hashes independent min-permutations is
+    27s for 5k docs at sf0.1). It keeps only pairs whose low-byte sketch
+    agreement over 4*n_hashes independent min-permutations is
     >= threshold - ESTIMATE_MARGIN/2; a TRUE pair (J >= threshold) is
     dropped with probability
     <= exp(-2*(4*n_hashes)*(m/2)^2) == exp(-2*n_hashes*m^2)
     (Hoeffding, m = ESTIMATE_MARGIN) — 1.3e-9 at 64 hashes, the same
-    order as the banding miss probability callers already accept (the
-    byte packing of the sketch only ever INFLATES the estimate, so it
-    cannot add drops). The bound does not depend on the threshold.
+    order as the banding miss probability callers already accept (low
+    bytes only ever INFLATE the estimate — the bit-plane layout compares
+    the same bytes — so they cannot add drops). The bound does not
+    depend on the threshold. The agreement is a codegen'd popcount in
+    the join stage (:func:`_sketch_matches`); the signature fold is the
+    call's only Python stage.
 
     The bound does depend on n_hashes: it is <= 1e-6 only from 44 hashes
-    up (~0.6% at 16). Below 44 the byte filter is skipped and EVERY
+    up (~0.6% at 16). Below 44 the prefilter is skipped and EVERY
     bucket candidate is verified rather than silently losing true pairs.
     The exact string-shingle verify then runs on the survivors' docs
     only (semi-joined corpus). Unknown keywords raise ``TypeError``."""
@@ -434,11 +434,11 @@ def near_duplicates_minhash(
     sigs = _minhash_sigs(
         src, text_col, id_col, n_hashes, k, seed, n_extra=n_est - n_hashes
     ).localCheckpoint(eager=False)
-    # the packed sketch RIDES the banding explode and the bucket
-    # self-join (one exchange of n_docs*bands ~300-byte rows) instead
-    # of being joined onto the near-quadratic raw-pair stream (which
-    # cost two full shuffles + sorts of the ~47M-row stream at
-    # sf1.0, keyed by a then by b — guide §2.3/§3.2)
+    # the sketch RIDES the banding explode and the bucket self-join (one
+    # exchange of n_docs*bands ~300-byte rows) instead of being joined
+    # onto the near-quadratic raw-pair stream (which cost two full
+    # shuffles + sorts of the ~47M-row stream at sf1.0, keyed by a then
+    # by b — guide §2.3/§3.2)
     cands = _raw_bucket_pairs(_minhash_banded(sigs, n_hashes, bands),
                               max_bucket)
     if prefilter:
@@ -447,11 +447,10 @@ def near_duplicates_minhash(
         # orders of magnitude on high-baseline-similarity corpora (5.4M
         # -> ~10k pairs at sf1.0). The distinct runs AFTER this filter
         # (see _raw_bucket_pairs).
-        matches = _byte_match_udf(n_est)
-        byte_cutoff = max(threshold - ESTIMATE_MARGIN / 2.0, 0.0)
+        cutoff = max(threshold - ESTIMATE_MARGIN / 2.0, 0.0)
         cands = cands.filter(
-            (matches(F.col("p_a"), F.col("p_b")) / F.lit(float(n_est)))
-            >= byte_cutoff
+            (_sketch_matches("p_a", "p_b", n_est) / F.lit(float(n_est)))
+            >= cutoff
         )
     cands = cands.select("a", "b").distinct()
     # verify CANDIDATES only: materialize the (small) surviving pair set

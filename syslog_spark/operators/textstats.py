@@ -89,10 +89,6 @@ def _mean_word_length_w(words: Column) -> Column:
     return total / F.greatest(F.size(words), F.lit(1))
 
 
-def mean_word_length(col) -> Column:
-    return _mean_word_length_w(_words(col))
-
-
 def _quality_score_w(col, words: Column, words_lower: Column) -> Column:
     c = _c(col)
     len_ok = F.least(F.length(c) / F.lit(200.0), F.lit(1.0))

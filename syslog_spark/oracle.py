@@ -180,19 +180,6 @@ def days_from_civil(y: int, m: int, d: int) -> int:
     return era * 146097 + doe - 719468
 
 
-def civil_from_days(z: int) -> tuple[int, int, int]:
-    z += 719468
-    era = (z if z >= 0 else z - 146096) // 146097
-    doe = z - era * 146097
-    yoe = (doe - doe // 1460 + doe // 36524 - doe // 146096) // 365
-    y = yoe + era * 400
-    doy = doe - (365 * yoe + yoe // 4 - yoe // 100)
-    mp = (5 * doy + 2) // 153
-    d = doy - (153 * mp + 2) // 5 + 1
-    m = mp + (3 if mp < 10 else -9)
-    return y + (m <= 2), m, d
-
-
 def is_leap(y: int) -> bool:
     return y % 4 == 0 and (y % 100 != 0 or y % 400 == 0)
 

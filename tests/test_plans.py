@@ -212,6 +212,43 @@ def test_minhash_verify_plan_starts_no_job(spark, monkeypatch):
     assert set(tracker.getJobIdsForGroup()) - after_build
 
 
+def test_pair_gate_queries_spread_without_jobs(spark, sf_dir, monkeypatch):
+    """Building the minhash_pairs and simhash_pairs gate queries starts
+    no job inside _spread_if_narrow: their corpus is a union of
+    repartitioned scans, and a plan with an exchange passes through
+    instead of having its partitions counted (which made AQE run the
+    shuffle in a throwaway query execution)."""
+    import __spark_entry__ as E
+    from syslog_spark.operators import dedup as D
+
+    tracker = spark.sparkContext.statusTracker()
+    bus = spark.sparkContext._jsc.sc().listenerBus()
+
+    def job_ids():
+        # the tracker learns of a job through the listener bus
+        bus.waitUntilEmpty()
+        return set(tracker.getJobIdsForGroup())
+
+    spread_jobs, calls = set(), []
+    orig = D._spread_if_narrow
+
+    def record(df):
+        before = job_ids()
+        out = orig(df)
+        spread_jobs.update(job_ids() - before)
+        calls.append(out is df)
+        return out
+
+    monkeypatch.setattr(D, "_spread_if_narrow", record)
+    monkeypatch.setattr(E, "_spread_if_narrow", record)
+    qs = [E.q_minhash_pairs(spark, sf_dir), E.q_simhash_pairs(spark, sf_dir)]
+    monkeypatch.undo()
+    assert spread_jobs == set()
+    # the narrow scans were spread, the unions passed through
+    assert False in calls and True in calls
+    assert all(q.count() > 0 for q in qs)
+
+
 def test_star_contraction_no_cross_join(spark):
     """The star-contraction fallback is also pure equi-joins + keyed aggs
     with checkpoint-truncated lineage — no CartesianProduct/BNLJ."""

@@ -60,8 +60,36 @@ def test_numpy_signature_bit_identical_to_catalyst(spark):
     assert "dnull" in got and "dempty" in got
 
 
+def _unpack_planes(planes, n):
+    """Low bytes of n sketch components from their bit-plane longs (the
+    inverse of dedup._bit_planes, written independently of it)."""
+    out = []
+    for j in range(n):
+        c, bit = divmod(j, 64)
+        out.append(sum(
+            ((planes[c * 8 + k] >> bit) & 1) << k for k in range(8)
+        ))
+    return out
+
+
+def test_bit_planes_round_trip():
+    """The bit-plane packing holds exactly the low bytes (Spark-free),
+    including a component count that is not a multiple of 64."""
+    from syslog_spark.operators.dedup import _bit_planes
+
+    rng = np.random.RandomState(5)
+    for n in (8, 64, 176, 256):
+        low = rng.randint(0, 256, size=(7, n)).astype(np.uint8)
+        planes = _bit_planes(low)
+        assert planes.shape == (7, 8 * -(-n // 64))
+        assert planes.dtype == np.int64
+        for row in range(7):
+            got = _unpack_planes([int(v) for v in planes[row]], n)
+            assert got == [int(v) for v in low[row]]
+
+
 def test_packed_sketch_prefix_matches_signature(spark):
-    """The packed estimate sketch's first n_hashes bytes must be the low
+    """The estimate sketch's first n_hashes components must be the low
     bytes of the exact signature (the keep-superset compression claim
     rests on byte equality being NECESSARY for component equality)."""
     from syslog_spark.operators.dedup import _minhash_sigs
@@ -69,26 +97,40 @@ def test_packed_sketch_prefix_matches_signature(spark):
     df = spark.createDataFrame(_random_docs(20), "doc_id string, text string")
     out = _minhash_sigs(df, "text", "doc_id", 8, 5, 42, n_extra=24)
     for r in out.collect():
-        assert len(r["p"]) == 32
-        assert list(r["p"][:8]) == [v & 0xFF for v in r["sig"]]
+        assert len(r["p"]) == 8
+        assert _unpack_planes(r["p"], 8) == [v & 0xFF for v in r["sig"]]
 
 
-def test_byte_match_udf_counts(spark):
-    from syslog_spark.operators.dedup import _byte_match_udf
+@pytest.mark.parametrize("n", [176, 256])
+def test_sketch_matches_counts(spark, n):
+    """_sketch_matches counts equal low bytes exactly like numpy does —
+    random sketches (few byte values, so many agree), all equal, all
+    different, and NULL on one side."""
+    from syslog_spark.operators.dedup import _bit_planes, _sketch_matches
 
-    rows = [
-        (bytes([1, 2, 3, 4]), bytes([1, 9, 3, 9]), 2),
-        (bytes([0, 0, 0, 0]), bytes([0, 0, 0, 0]), 4),
-        (bytes([5, 6, 7, 8]), bytes([9, 10, 11, 12]), 0),
-        (None, bytes([1, 2, 3, 4]), None),
+    rng = np.random.RandomState(n)
+    pairs = [
+        (rng.randint(0, 4, size=n), rng.randint(0, 4, size=n))
+        for _ in range(30)
     ]
+    same = rng.randint(0, 256, size=n)
+    pairs += [(same, same), (same, (same + 1) % 256)]
+    rows = [
+        ([int(v) for v in _bit_planes(a.astype(np.uint8)[None])[0]],
+         [int(v) for v in _bit_planes(b.astype(np.uint8)[None])[0]],
+         int((a == b).sum()))
+        for a, b in pairs
+    ]
+    rows.append((None, rows[0][1], None))
     df = spark.createDataFrame(
-        [(a, b, w) for a, b, w in rows], "pa binary, pb binary, want long"
+        rows, "pa array<long>, pb array<long>, want long"
     )
-    m = _byte_match_udf(4)
-    got = df.select(m("pa", "pb").alias("got"), "want").collect()
-    for r in got:
-        assert r["got"] == r["want"]
+    got = df.select(
+        _sketch_matches("pa", "pb", n).alias("got"), "want"
+    ).collect()
+    assert [r["got"] for r in got] == [r["want"] for r in got]
+    assert got[-3]["got"] == n and got[-2]["got"] == 0
+    assert got[-1]["got"] is None
 
 
 @pytest.mark.parametrize("max_hamming", [0, 1, 2, 3])
@@ -297,7 +339,7 @@ def _python_jaccards(rows, k=5):
 def test_minhash_one_candidate_path_exact(spark, monkeypatch, threshold,
                                           n_hashes):
     """near_duplicates_minhash has one candidate path: bucket pairs, the
-    byte-match prefilter only from 44 hashes up (where its Hoeffding drop
+    bit-plane prefilter only from 44 hashes up (where its Hoeffding drop
     bound is <= 1e-6), then the exact verify. Thresholds at or below
     ESTIMATE_MARGIN take the prefilter too. The output is exactly the
     all-pairs 5-shingle Jaccard >= threshold set (one-row bands, so
@@ -327,7 +369,11 @@ def test_minhash_one_candidate_path_exact(spark, monkeypatch, threshold,
     want = {p: v for p, v in jac.items() if v >= threshold}
     assert got == want
     assert len(plans) == 2  # signature sketch, then candidate pairs
-    assert ("_matches(" in plans[1]) == (n_hashes >= 44)
+    assert ("bit_count(" in plans[1]) == (n_hashes >= 44)
+    # the prefilter runs in the join stage: the signature fold is the
+    # call's only Python stage
+    assert plans[0].count("ArrowEvalPython") == 1
+    assert "ArrowEvalPython" not in plans[1]
 
 
 def test_minhash_unknown_keyword_raises(spark):
