@@ -848,8 +848,8 @@ def q_minhash_neardup(spark, sf_dir):
 
 def q_dedup_pipeline(spark, sf_dir):
     """END-TO-END corpus dedup through the hash gate: minhash-LSH
-    candidates -> exact-Jaccard verify -> connected components (with the
-    round-4 star-contraction fallback available) -> keep-one-per-cluster,
+    candidates -> exact-Jaccard verify -> connected components (local
+    union-find, then star test / large-star rounds) -> keep-one-per-cluster,
     over the REAL documents table. The DuckDB oracle recomputes exact
     all-pairs shingle Jaccard (inverted index), takes the >= 0.7 pair
     graph's recursive-CTE closure, and keeps min-id representatives plus

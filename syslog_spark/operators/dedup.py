@@ -320,17 +320,22 @@ def _minhash_banded(sigs: DataFrame, n_hashes: int, bands: int):
     with the band's ``bucket`` hash. Every column of ``sigs`` besides
     ``sig`` is carried onto the rows (the prefilter's sketch rides the
     blocking join this way instead of being joined onto the pair
-    stream)."""
+    stream).
+
+    The band number is exploded from ``sequence(0, bands - 1)`` and the
+    slice offset computed from it, so the generated code holds ONE
+    ``xxhash64(slice(…))`` whatever ``bands`` is: 32 unrolled terms made
+    the stage's method 9,846 bytes, past the JIT's 8,000-bytecode
+    limit."""
     r = n_hashes // bands
     carry = [c for c in sigs.columns if c != "sig"]
-    bb = ", ".join(
-        f"named_struct('band', {b}, "
-        f"'bucket', xxhash64(slice(sig, {b * r + 1}, {r})))"
-        for b in range(bands)
-    )
     return sigs.select(
-        *carry, F.expr(f"explode(array({bb})) AS bb")
-    ).select(*carry, "bb.band", "bb.bucket")
+        *carry, "sig",
+        F.explode(F.sequence(F.lit(0), F.lit(bands - 1))).alias("band"),
+    ).select(
+        *carry, "band",
+        F.expr(f"xxhash64(slice(sig, band * {r} + 1, {r}))").alias("bucket"),
+    )
 
 
 def lsh_bucket_stats(
@@ -714,18 +719,13 @@ class _IterCheckpointer:
     ``pin=True`` marks a LONG-LIVED frame (e.g. the algorithm's input
     edge set, read by every round): in durable mode it always spills
     and is excluded from garbage collection — the rolling GC deleting
-    the input spill crashed every later round (executed repro, round-5
-    review). Rolling spills older than the last THREE are deleted
-    best-effort: star contraction's prev_edges can reference a spill
-    from one full alternation back."""
+    the input spill crashed every later round (executed repro). Rolling
+    spills older than the last three are deleted best-effort."""
 
-    def __init__(self, spark, checkpoint_dir: str | None, every: int = 5,
-                 tag: str = ""):
+    def __init__(self, spark, checkpoint_dir: str | None, every: int = 5):
         self.spark = spark
         self.dir = checkpoint_dir
         self.every = max(1, every)
-        self.tag = tag  # namespaces spills when two algorithms share a
-        # dir (label propagation falling back to star contraction)
         self.calls = 0
         self.spills: list[str] = []
         self.pinned: list[str] = []
@@ -738,9 +738,7 @@ class _IterCheckpointer:
             # durable mode, in-between round: chain to the last spill
             return df
         suffix = "pin" if pin else "iter"
-        path = (
-            f"{self.dir.rstrip('/')}/{self.tag}{suffix}_{self.calls:04d}"
-        )
+        path = f"{self.dir.rstrip('/')}/{suffix}_{self.calls:04d}"
         df.write.mode("overwrite").parquet(path)
         out = self.spark.read.parquet(path)
         if pin:
@@ -762,230 +760,160 @@ class _IterCheckpointer:
         return out
 
 
-def _edge_signature(e: DataFrame):
-    """(exact count, xor-of-xxhash64) multiset signature of an edge
-    frame — the cheap stability probe for star contraction (module-level
-    so tests can force collisions)."""
-    row = e.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.bit_xor(F.xxhash64("a", "b")).alias("x"),
-    ).first()
-    return (row["n"], row["x"])
+# large-star/small-star alternations connected_components runs before it
+# raises: Kiveris et al. bound the alternations polylogarithmically in the
+# node count, whatever the diameter (a 10k-node path scattered over 8
+# partitions takes 14)
+_MAX_ROUNDS = 64
 
 
-def star_contraction_components(
-    pairs: DataFrame,
-    a_col: str = "a",
-    b_col: str = "b",
-    max_rounds: int = 60,
-    checkpoint_dir: str | None = None,
-    checkpoint_every: int = 5,
-) -> DataFrame:
-    """Connected components by alternating large-star / small-star edge
-    contraction (Kiveris et al., "Connected Components in MapReduce and
-    Beyond"): converges in O(log n) alternations regardless of graph
-    diameter — the deep-chain regime where min-label propagation's
-    O(diameter) rounds would not terminate in a sane bound.
+def _local_stars(batches):
+    """``mapInArrow`` body of :func:`connected_components`: contract ALL
+    ``(a, b)`` edges of one partition with a numpy union-find. Nodes are
+    numbered in id order (``np.unique``), so hooking every root onto the
+    smaller root of each edge (``np.minimum.at``) and pointer jumping
+    until every node points at a root leaves each local component rooted
+    at its min id. Emits ``(node, root)`` for every non-root node, and
+    ``(node, node)`` for a node whose only edges here are self-loops (so
+    it keeps its row); a root with children occurs as their ``b``."""
+    import pyarrow as pa
 
-    Per node u with closed-neighbourhood min m = min({u} U N(u)):
-      * large-star rewires every LARGER neighbour v > u to m,
-      * small-star rewires every SMALLER neighbour v < u to m.
-    Both also keep (u, m), which preserves connectivity of every original
-    edge within a single pass (each endpoint stays linked to the shared
-    min) at the cost of a few extra edges that the per-round distinct
-    absorbs. At the fixed point every component is a star centred on its
-    min node.
+    a, b = [], []
+    for batch in batches:
+        a.append(batch.column(0).to_numpy())
+        b.append(batch.column(1).to_numpy())
+    if not a:
+        return
+    nodes, idx = np.unique(np.concatenate(a + b), return_inverse=True)
+    ia, ib = np.split(idx, 2)
+    parent = np.arange(nodes.size)
+    while True:
+        ra, rb = parent[ia], parent[ib]
+        if (ra == rb).all():
+            break
+        lo = np.minimum(ra, rb)
+        np.minimum.at(parent, ra, lo)
+        np.minimum.at(parent, rb, lo)
+        while True:
+            up = parent[parent]
+            if (up == parent).all():
+                break
+            parent = up
+    child = parent != np.arange(nodes.size)
+    has_child = np.zeros(nodes.size, bool)
+    has_child[parent[child]] = True
+    emit = child | ~has_child
+    if emit.any():
+        yield pa.RecordBatch.from_arrays(
+            [pa.array(nodes[emit]), pa.array(nodes[parent[emit]])],
+            names=["a", "b"],
+        )
 
-    Scale shape: each half-round is one symmetrize + one groupBy-min +
-    one equi-join on node id — no driver graph state, no cartesian
-    products; lineage is cut per half-round (localCheckpoint, or with
-    ``checkpoint_dir`` a durable parquet spill every
-    ``checkpoint_every`` cuts, in-between rounds chaining to the last
-    spill — see _IterCheckpointer for the recovery semantics).
-    Convergence is detected by a (count, xor-of-xxhash64) set signature
-    going stable across a full large+small alternation, then CONFIRMED
-    exactly: the candidate fixed point is accepted only when the edge
-    set is literally unchanged (exceptAll empty) — a 2^-64 signature
-    collision therefore degrades to one extra alternation instead of a
-    silently wrong component map."""
-    spark = pairs.sparkSession
-    ckpt = _IterCheckpointer(spark, checkpoint_dir, checkpoint_every,
-                             tag="star_")
-    # cut the INPUT plan's lineage immediately: `pairs` is typically the
-    # whole LSH candidate+verify pipeline, and without this cut the
-    # first alternation (and all_nodes) would re-execute it several
-    # times (round-5 finding: uncut edges made the end-to-end dedup
-    # re-run the minhash plan once per CC round — 149s -> ~50s at sf0.1)
-    edges = ckpt.cut(
-        pairs.select(F.col(a_col).alias("a"), F.col(b_col).alias("b"))
-        .filter(F.col("a") != F.col("b"))
-        .distinct(),
-        pin=True,  # read by every alternation AND by all_nodes
+
+def _symmetric(edges: DataFrame) -> DataFrame:
+    """``(u, v)`` in both directions of every ``(a, b)`` edge, with ONE
+    reference to ``edges`` (a unionAll of two projections of a lazy plan
+    executes that plan once per branch)."""
+    return edges.select(F.inline(F.array(
+        F.struct(F.col("a").alias("u"), F.col("b").alias("v")),
+        F.struct(F.col("b").alias("u"), F.col("a").alias("v")),
+    )))
+
+
+def _star_test(edges: DataFrame) -> DataFrame:
+    """``(u, m, ok)`` per node: ``m`` is the min of its closed
+    neighbourhood, ``ok`` says all its neighbours are >= it or it has one
+    distinct neighbour. If every node is ok, each component is a star
+    centred on its min (a node with a smaller neighbour has only that
+    one, and two nodes that are both >= all their neighbours cannot be
+    adjacent), so ``m`` is the component. Self-loops only make the test
+    stricter."""
+    return _symmetric(edges).groupBy("u").agg(
+        F.least(F.col("u"), F.min("v")).alias("m"),
+        ((F.min("v") >= F.col("u")) | (F.min("v") == F.max("v")))
+        .alias("ok"),
     )
-    all_nodes = (
-        edges.select(F.col("a").alias("node"))
-        .unionAll(edges.select(F.col("b").alias("node")))
-        .distinct()
-    )
-    if checkpoint_dir is None:
-        all_nodes = all_nodes.localCheckpoint(eager=False)
-    # durable mode: leave all_nodes UNCUT — it chains to the pinned
-    # edges spill, so it stays recomputable after executor loss, whereas
-    # a localCheckpoint here would silently defeat the durability this
-    # mode exists for (round-5 ADVICE finding)
 
-    prev_sig = None
-    prev_edges = None
-    for _ in range(max_rounds):
-        for large in (True, False):
-            sym = edges.unionAll(
-                edges.select(F.col("b").alias("a"), F.col("a").alias("b"))
-            ).distinct()
-            mins = sym.groupBy("a").agg(
-                F.least(F.col("a"), F.min("b")).alias("m")
-            )
-            j = sym.join(mins, "a")
-            rewired = j.filter(
-                F.col("b") > F.col("a") if large else F.col("b") < F.col("a")
-            ).select(F.col("b").alias("a"), F.col("m").alias("b"))
-            kept = mins.select(F.col("a"), F.col("m").alias("b"))
-            edges = ckpt.cut(
-                rewired.unionAll(kept)
-                .filter(F.col("a") != F.col("b"))
-                .distinct()
-            )
-        sig = _edge_signature(edges)
-        if sig == prev_sig:
-            # exact confirmation of the fixed point: the signature says
-            # "probably unchanged since last alternation"; accept only
-            # if the set truly is (both are distinct sets and the
-            # signature's count component matched, so one exceptAll
-            # direction proves equality). Costs one job, once.
-            if prev_edges is not None and (
-                edges.exceptAll(prev_edges).limit(1).count() == 0
-            ):
-                non_centers = edges.groupBy(F.col("a").alias("node")).agg(
-                    F.min("b").alias("component")
-                )
-                return all_nodes.join(non_centers, "node", "left").select(
-                    "node",
-                    F.coalesce(F.col("component"), F.col("node")).alias(
-                        "component"
-                    ),
-                )
-            # signature collision: keep contracting
-        prev_sig = sig
-        prev_edges = edges
-    raise RuntimeError(
-        f"star_contraction_components did not converge in {max_rounds} "
-        "alternations — O(log n) bound exceeded; the edge list is likely "
-        "pathological (raise max_rounds)"
-    )
+
+def _star_round(edges: DataFrame, mins: DataFrame,
+                large: bool) -> DataFrame:
+    """One half of a large-star/small-star alternation (Kiveris et al.,
+    "Connected Components in MapReduce and Beyond", SoCC'14). Per node u
+    with closed-neighbourhood min m (``mins`` is the
+    :func:`_star_test` of ``edges``): large-star rewires every larger
+    neighbour to m, small-star every smaller one. Both keep ``(u, m)``,
+    which keeps every node and every original connection; the self-loop
+    ``(m, m)`` of a centre is harmless to the star test."""
+    rewired = _symmetric(edges).join(mins, "u").filter(
+        F.col("v") > F.col("u") if large else F.col("v") < F.col("u")
+    ).select(F.col("v").alias("a"), F.col("m").alias("b"))
+    kept = mins.select(F.col("u").alias("a"), F.col("m").alias("b"))
+    return rewired.unionAll(kept).distinct()
 
 
 def connected_components(
     pairs: DataFrame,
     a_col: str = "a",
     b_col: str = "b",
-    max_iters: int = 25,
+    *,
     checkpoint_dir: str | None = None,
     checkpoint_every: int = 5,
 ) -> DataFrame:
     """Undirected connected components over a near-dup pair list:
-    (node, component) where component = min node id reachable.
+    ``(node, component)`` with component = min node id reachable, for
+    every node of ``pairs`` (nodes of self-loops and duplicate edges
+    included). Ids must be integral; an edge with a NULL end is not an
+    edge.
 
-    Min-label propagation: each round, each node takes the min of its
-    own label and its neighbours'. Round 1 is the SEED: from the
-    implicit start ``label = node`` it only computes ``least(u,
-    min(v))``, so it is one keyed aggregate over the edges (no join, no
-    changed count); ``max_iters`` counts it. Convergence needs O(graph
-    diameter) rounds — near-dup clusters are shallow (a cluster's
-    members all link to a shared survivor within a hop or two), so this
-    terminates in a handful of rounds even at corpus scale.
+    1. **Local contraction.** ``pairs`` is referenced once: rebalanced
+       (AQE coalesces a small edge set into ONE partition and splits a
+       large one at the advisory partition size, which also bounds the
+       numpy memory per task), then each partition's edges are contracted
+       to stars on their local min by :func:`_local_stars`. With one
+       partition this already is the answer.
+    2. **Exact star test** (:func:`_star_test`): one keyed aggregate
+       over the symmetrized star edges; when every node passes, its
+       ``m`` is the component.
+    3. **Alternation.** Otherwise one large-star + small-star
+       alternation (:func:`_star_round`) contracts the edges, and the
+       test runs again. The alternations are polylogarithmic in the node
+       count whatever the diameter (Kiveris et al., SoCC'14); past
+       ``_MAX_ROUNDS`` this raises ``RuntimeError``.
 
-    A graph that has not converged after ``max_iters`` rounds FALLS BACK
-    to :func:`star_contraction_components` (O(log n) rounds, diameter-
-    proof) with a warning instead of failing mid-pipeline — an
-    adversarial chain from greedy-transitive LSH output degrades to the
-    logarithmic algorithm rather than taking down the whole dedup job.
-
-    Scale shape: per round, one groupBy over the (symmetrized) edge list
-    joined to current labels — shuffles on node id only, labels frame is
-    2 longs per node, edges never mutate. The per-round convergence
-    check reuses the aggregated frame (single count of changed labels).
-    No driver-side graph state. Lineage is cut per round; with
-    ``checkpoint_dir`` set, every ``checkpoint_every``-th cut is a
-    durable parquet spill and in-between rounds chain to the last spill
-    (recomputable after executor loss — localCheckpoint blocks die with
-    their executor; see _IterCheckpointer).
-    """
+    On the neardup graph (57k edges) this is 4 Spark jobs; label
+    propagation took 20. No driver-side graph state, no cross join.
+    Lineage is cut per step; with ``checkpoint_dir`` set, every
+    ``checkpoint_every``-th cut is a durable parquet spill and in-between
+    steps chain to the last spill (recomputable after executor loss —
+    localCheckpoint blocks die with their executor; see
+    _IterCheckpointer)."""
+    for c in (a_col, b_col):
+        if not isinstance(pairs.schema[c].dataType, T.IntegralType):
+            raise TypeError(f"connected_components: {c} is not integral")
     ckpt = _IterCheckpointer(
-        pairs.sparkSession, checkpoint_dir, checkpoint_every, tag="label_"
+        pairs.sparkSession, checkpoint_dir, checkpoint_every
     )
-    # cut the INPUT plan's lineage once: `edges` is referenced by EVERY
-    # propagation round, and `pairs` is typically the full LSH
-    # candidate+verify pipeline — uncut, each round's join + changed
-    # count re-executed that whole plan (round-5 finding via the new
-    # secondary bench section: dedup_pipeline spent ~75% of its 149s
-    # re-running minhash once per round)
-    #
-    # Symmetrize with ONE reference to `pairs`: a unionAll of two
-    # projections of the lazy pair plan would execute that whole plan
-    # (the exact-Jaccard verify) once per branch.
     edges = ckpt.cut(
-        pairs.select(F.inline(F.array(
-            F.struct(F.col(a_col).alias("u"), F.col(b_col).alias("v")),
-            F.struct(F.col(b_col).alias("u"), F.col(a_col).alias("v")),
-        )))
-        .distinct(),
-        pin=True,  # read by EVERY propagation round — the rolling GC
-        # deleting this spill crashed round every+1 (executed repro)
-    )
-    # round 1, the seed: every node appears as `u` (edges are symmetric)
-    labels = ckpt.cut(
-        edges.groupBy(F.col("u").alias("node"))
-        .agg(F.least(F.col("u"), F.min("v")).alias("label"))
-    )
-    for _ in range(max_iters - 1):
-        # min neighbour label per node, folded with own label
-        neigh = (
-            edges.join(
-                labels.withColumnRenamed("node", "v").withColumnRenamed(
-                    "label", "v_label"
-                ),
-                "v",
-            )
-            .groupBy(F.col("u").alias("node"))
-            .agg(F.min("v_label").alias("neigh_label"))
+        pairs.select(
+            F.col(a_col).cast("long").alias("a"),
+            F.col(b_col).cast("long").alias("b"),
         )
-        merged = ckpt.cut(
-            labels.join(neigh, "node", "left")
-            .select(
-                "node",
-                F.least(
-                    F.col("label"),
-                    F.coalesce(F.col("neigh_label"), F.col("label")),
-                ).alias("new_label"),
-                F.col("label"),
-            )
-        )
-        changed = merged.filter(F.col("new_label") != F.col("label")).count()
-        labels = merged.select("node", F.col("new_label").alias("label"))
-        if changed == 0:
-            return labels.select("node", F.col("label").alias("component"))
-    # graph deeper than the propagation bound: degrade to the O(log n)
-    # contraction instead of failing the whole dedup job
-    import warnings
-
-    warnings.warn(
-        f"connected_components: label propagation hit max_iters="
-        f"{max_iters} (deep graph); falling back to large-star/"
-        "small-star contraction",
-        stacklevel=2,
+        .filter(F.col("a").isNotNull() & F.col("b").isNotNull())
+        .hint("rebalance")
+        .mapInArrow(_local_stars, "a long, b long"),
+        pin=True,  # the verify's output: never recompute it
     )
-    return star_contraction_components(
-        pairs, a_col, b_col,
-        checkpoint_dir=checkpoint_dir, checkpoint_every=checkpoint_every,
+    for _ in range(_MAX_ROUNDS):
+        test = ckpt.cut(_star_test(edges))
+        if test.filter(~F.col("ok")).isEmpty():
+            return test.select(
+                F.col("u").alias("node"), F.col("m").alias("component")
+            )
+        edges = ckpt.cut(_star_round(edges, test, large=True))
+        edges = ckpt.cut(_star_round(edges, _star_test(edges), large=False))
+    raise RuntimeError(
+        f"connected_components: no star forest after {_MAX_ROUNDS} "
+        "large-star/small-star alternations"
     )
 
 
@@ -995,16 +923,22 @@ def dedupe_by_components(
     id_col: str = "doc_id",
     a_col: str = "a",
     b_col: str = "b",
-    **cc_kwargs,
+    *,
+    checkpoint_dir: str | None = None,
+    checkpoint_every: int = 5,
 ) -> DataFrame:
     """Keep ONE representative (min id) per near-dup component, plus all
     docs that appear in no pair — the standard last stage of a corpus
     dedup pipeline (pairs from minhash/simhash/embedding candidates).
     One broadcast-sized join when the pair list is small relative to the
     corpus; a plain shuffled left_anti otherwise (Spark picks via AQE).
-    Extra kwargs (checkpoint_dir=, checkpoint_every=, max_iters=) pass
-    through to :func:`connected_components`."""
-    comps = connected_components(pairs, a_col, b_col, **cc_kwargs)
+    ``checkpoint_dir`` and ``checkpoint_every`` are
+    :func:`connected_components`'s; any other keyword raises
+    ``TypeError``."""
+    comps = connected_components(
+        pairs, a_col, b_col,
+        checkpoint_dir=checkpoint_dir, checkpoint_every=checkpoint_every,
+    )
     drop = comps.filter(F.col("node") != F.col("component")).select(
         F.col("node").alias(id_col)
     )

@@ -53,3 +53,39 @@ def standard_reader(monkeypatch):
             yield
 
     return forced
+
+
+@pytest.fixture
+def split_edges(spark):
+    """Scatter small edge sets over 8 partitions: with AQE's partition
+    coalescing off, ``connected_components``'s rebalance leaves edges of
+    one component in different partitions, so the local contraction is
+    not the answer and the large-star/small-star alternation runs."""
+    conf = {
+        "spark.sql.adaptive.coalescePartitions.enabled": "false",
+        "spark.sql.shuffle.partitions": "8",
+    }
+    old = {k: spark.conf.get(k) for k in conf}
+    for k, v in conf.items():
+        spark.conf.set(k, v)
+    yield
+    for k, v in old.items():
+        spark.conf.set(k, v)
+
+
+@pytest.fixture
+def star_rounds(monkeypatch):
+    """A list that counts the large-star/small-star alternations
+    ``connected_components`` runs: one entry per alternation."""
+    from syslog_spark.operators import dedup
+
+    rounds = []
+    orig = dedup._star_round
+
+    def count(edges, mins, large):
+        if large:
+            rounds.append(1)
+        return orig(edges, mins, large)
+
+    monkeypatch.setattr(dedup, "_star_round", count)
+    return rounds

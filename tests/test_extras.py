@@ -344,29 +344,54 @@ def test_jaccard_similarity_matches_python_sets(spark):
     assert want[(6, 9)] == 0.0 and 0.0 < want[(6, 8)] < 1.0
 
 
-def test_connected_components_seed_is_round_one(spark, monkeypatch):
-    """Label propagation seeds the labels with round 1 (a keyed min over
-    the edges, no join): a 3-node path takes exactly pin + seed + 2
-    rounds of cuts (round 2 moves node 3 to label 1, round 3 confirms)."""
+def test_connected_components_local_contraction_is_one_pass(
+    spark, monkeypatch
+):
+    """A small edge set is coalesced into one partition, where the local
+    union-find already is the answer: two cuts (the pinned local stars,
+    the star test) and no alternation. The pinned frame is the rebalance
+    + mapInArrow over the pairs; the star test is one keyed aggregate."""
     from syslog_spark.operators import dedup as D
 
     cuts = []
     orig = D._IterCheckpointer.cut
 
     def record(self, df, pin=False):
-        cuts.append(df._jdf.queryExecution().optimizedPlan().toString())
+        cuts.append((pin, df._jdf.queryExecution().optimizedPlan().toString()))
         return orig(self, df, pin=pin)
 
     monkeypatch.setattr(D._IterCheckpointer, "cut", record)
-    pairs = spark.createDataFrame([(1, 2), (2, 3)], "a long, b long")
+    pairs = spark.createDataFrame(
+        [(2, 3), (3, 1), (10, 11), (12, 11), (4, 3)], "a long, b long"
+    )
     got = {
         (r["node"], r["component"])
         for r in D.connected_components(pairs).collect()
     }
-    assert got == {(1, 1), (2, 1), (3, 1)}
-    assert len(cuts) == 4
-    assert "Join" not in cuts[1] and "Aggregate" in cuts[1]  # the seed
-    assert all("Join" in c for c in cuts[2:])  # propagation rounds
+    assert got == {(1, 1), (2, 1), (3, 1), (4, 1),
+                   (10, 10), (11, 10), (12, 10)}
+    assert [pin for pin, _ in cuts] == [True, False]
+    assert "MapInArrow" in cuts[0][1] and "RebalancePartitions" in cuts[0][1]
+    assert "Join" not in cuts[1][1] and "Aggregate" in cuts[1][1]
+
+
+def test_connected_components_self_loops_and_duplicates(spark, split_edges):
+    """The node-set contract: a node that occurs only in self-loops is its
+    own component, duplicate and reversed edges change nothing, and a
+    node with a self-loop in one partition and an edge in another keeps
+    the right label, in one partition and scattered over eight."""
+    from syslog_spark.operators.dedup import connected_components
+
+    edges = [(1, 1), (2, 3), (3, 2), (2, 3), (5, 5), (5, 5), (7, 8), (8, 8),
+             (9, 8), (20, 21), (21, 20)]
+    want = {1: 1, 2: 2, 3: 2, 5: 5, 7: 7, 8: 7, 9: 7, 20: 20, 21: 20}
+    pairs = spark.createDataFrame(edges, "a long, b long")
+    scattered = {r["node"]: r["component"]
+                 for r in connected_components(pairs).collect()}
+    spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "true")
+    one = {r["node"]: r["component"]
+           for r in connected_components(pairs).collect()}
+    assert scattered == want and one == want
 
 
 def test_dedupe_by_components_minhash_end_to_end(spark):
@@ -429,12 +454,12 @@ def test_embedding_near_dups_dim768_no_plan_bloat(spark):
     assert got == {(i, 100 + i) for i in range(5)}
 
 
-def test_star_contraction_matches_label_propagation(spark):
-    """Star contraction and label propagation agree on a mixed graph
-    (several components, a cycle, a chain, isolated-pair edges)."""
-    from syslog_spark.operators.dedup import (
-        connected_components, star_contraction_components,
-    )
+def test_star_contraction_matches_local_contraction(spark, split_edges,
+                                                   star_rounds):
+    """The alternation over edges scattered across eight partitions gives
+    the components the one-partition local union-find gives, on a mixed
+    graph (a chain, a cycle, a pair, random blobs)."""
+    from syslog_spark.operators.dedup import connected_components
 
     rng = np.random.RandomState(11)
     edges = [(i, i + 1) for i in range(10)]            # chain 0..10
@@ -442,28 +467,31 @@ def test_star_contraction_matches_label_propagation(spark):
     edges += [(30, 31)]                                # pair
     edges += [(int(rng.randint(40, 60)), int(rng.randint(40, 60)))
               for _ in range(30)]                      # random blob(s)
-    edges = [(a, b) for a, b in edges if a != b]
     pairs = spark.createDataFrame(edges, "a long, b long")
+    got = {(r["node"], r["component"])
+           for r in connected_components(pairs).collect()}
+    assert star_rounds
+    spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "true")
+    n = len(star_rounds)
     want = {(r["node"], r["component"])
             for r in connected_components(pairs).collect()}
-    got = {(r["node"], r["component"])
-           for r in star_contraction_components(pairs).collect()}
+    assert len(star_rounds) == n  # one partition: no alternation
     assert got == want
 
 
-def test_star_contraction_deep_path_graph(spark):
-    """A 10k-node path graph (diameter 10k) — the adversarial case where
-    label propagation's O(diameter) rounds can never finish — converges
-    in O(log n) star alternations with the correct single component."""
+def test_star_contraction_deep_path_graph(spark, split_edges, star_rounds):
+    """A 10k-node path graph (diameter 10k), scattered over eight
+    partitions: the alternation takes a number of rounds logarithmic in
+    the path length, not linear, and finds the one component."""
     from pyspark.sql import functions as F
-    from syslog_spark.operators.dedup import star_contraction_components
+    from syslog_spark.operators.dedup import connected_components
 
     n = 10_000
     pairs = (
         spark.range(n - 1)
         .select(F.col("id").alias("a"), (F.col("id") + 1).alias("b"))
     )
-    comps = star_contraction_components(pairs)
+    comps = connected_components(pairs)
     agg = comps.agg(
         F.countDistinct("component").alias("ncomp"),
         F.count(F.lit(1)).alias("n"),
@@ -473,61 +501,85 @@ def test_star_contraction_deep_path_graph(spark):
     assert agg["n"] == n
     assert agg["ncomp"] == 1
     assert agg["mn"] == 0 and agg["mx"] == 0
+    assert 2 <= len(star_rounds) <= 30
 
 
-def test_connected_components_auto_falls_back(spark):
-    """connected_components degrades to star contraction instead of
-    raising when the propagation bound is hit mid-pipeline."""
-    import warnings
-
-    from syslog_spark.operators.dedup import connected_components
+def test_connected_components_round_bound_raises(spark, split_edges,
+                                                 monkeypatch):
+    """A graph that is not a star forest within the round bound raises
+    instead of returning labels that are not components."""
+    from syslog_spark.operators import dedup as D
 
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(60)], "a long, b long"
     )
-    with warnings.catch_warnings(record=True) as w:
-        warnings.simplefilter("always")
-        comps = connected_components(pairs, max_iters=3).collect()
-    assert any("falling back" in str(x.message) for x in w)
+    monkeypatch.setattr(D, "_MAX_ROUNDS", 1)
+    with pytest.raises(RuntimeError, match="no star forest"):
+        D.connected_components(pairs)
+    monkeypatch.undo()
+    comps = D.connected_components(pairs).collect()
     assert {r["component"] for r in comps} == {0}
     assert len(comps) == 61
 
 
-def test_star_contraction_exact_termination_survives_sig_collision(
-    spark, monkeypatch, tmp_path
+def test_star_test_accepts_exactly_star_forests(spark):
+    """The star test that ends connected_components is exact: over every
+    graph on 4 nodes with self-loops allowed (1,024 graphs, one Spark
+    aggregate), all nodes pass iff every edge of each component touches
+    the component's min (self-loops only on the min), and then each
+    node's ``m`` is its component's min."""
+    from syslog_spark.operators.dedup import _star_test
+
+    slots = [(i, j) for i in range(4) for j in range(i, 4)]  # 10 slots
+    rows, want = [], {}
+    for g in range(1 << len(slots)):
+        es = [slots[k] for k in range(len(slots)) if g >> k & 1]
+        if not es:
+            continue
+        rows += [(10 * g + i, 10 * g + j) for i, j in es]
+        parent = list(range(4))
+
+        def find(x):
+            while parent[x] != x:
+                x = parent[x]
+            return x
+
+        for i, j in es:
+            parent[max(find(i), find(j))] = min(find(i), find(j))
+        star = all(min(i, j) == find(i) and (i == j) <= (i == find(i))
+                   for i, j in es)
+        want[g] = star, {10 * g + x: 10 * g + find(x)
+                         for e in es for x in e}
+    assert len(want) == 1023
+    test = _star_test(spark.createDataFrame(rows, "a long, b long"))
+    got = {}
+    for r in test.collect():
+        ok, m = got.setdefault(r["u"] // 10, (True, {}))
+        got[r["u"] // 10] = ok and r["ok"], {**m, r["u"]: r["m"]}
+    assert {g: ok for g, (ok, _) in got.items()} == {
+        g: ok for g, (ok, _) in want.items()
+    }
+    assert sum(ok for ok, _ in want.values()) > 50  # both sides occur
+    for g, (ok, m) in want.items():
+        if ok:
+            assert got[g][1] == m
+
+
+def test_connected_components_parquet_spill_checkpoint(
+    spark, tmp_path, split_edges, star_rounds
 ):
-    """The convergence signature is only a PROBE since round 5: a stable
-    (count, xor-hash) pair must be confirmed by an exact edge-set
-    equality check before terminating. Forcing the signature to collide
-    on every round (constant return) simulates the 2^-64 hash collision
-    — the old code would return after the second alternation with a
-    wrong component map; the exact check must keep contracting until the
-    true fixed point."""
-    from syslog_spark.operators import dedup as D
-
-    monkeypatch.setattr(D, "_edge_signature", lambda e: (0, 0))
-    n = 200
-    pairs = spark.createDataFrame(
-        [(i, i + 1) for i in range(n - 1)], "a long, b long"
-    )
-    comps = D.star_contraction_components(pairs).collect()
-    assert len(comps) == n
-    assert {r["component"] for r in comps} == {0}
-
-
-def test_connected_components_parquet_spill_checkpoint(spark, tmp_path):
-    """checkpoint_dir spills the iterated labels frame to parquet every
-    k rounds (durable lineage cut — localCheckpoint blocks die with an
-    executor on a real cluster). A diameter-9 chain drives >=4 rounds
-    through the spill path at checkpoint_every=2; results must match the
-    default path and old spill dirs must be garbage-collected down to
-    the last two."""
+    """checkpoint_dir spills every k-th cut to parquet (a durable lineage
+    cut — localCheckpoint blocks die with an executor on a real
+    cluster). A 200-node chain scattered over eight partitions drives
+    the alternation through the spill path at checkpoint_every=2; the
+    result matches and old spill dirs are garbage-collected down to the
+    last three."""
     import os
 
     from syslog_spark.operators.dedup import connected_components
 
     pairs = spark.createDataFrame(
-        [(i, i + 1) for i in range(9)], "a long, b long"
+        [(i, i + 1) for i in range(199)], "a long, b long"
     )
     ck = str(tmp_path / "cc_ckpt")
     got = {
@@ -536,17 +588,18 @@ def test_connected_components_parquet_spill_checkpoint(spark, tmp_path):
             pairs, checkpoint_dir=ck, checkpoint_every=2
         ).collect()
     }
-    assert got == {(i, 0) for i in range(10)}
-    spills = sorted(d for d in os.listdir(ck) if d.startswith("label_iter_"))
+    assert got == {(i, 0) for i in range(200)}
+    assert star_rounds
+    spills = sorted(d for d in os.listdir(ck) if d.startswith("iter_"))
     assert 1 <= len(spills) <= 3  # older spills deleted best-effort
-    # the chain needs ~9 propagation rounds -> at every=2 the highest
-    # surviving spill index proves >=3 spill cuts actually happened
+    # at every=2 the highest surviving spill index proves >= 3 spill cuts
     assert int(spills[-1].rsplit("_", 1)[1]) >= 6
 
 
-def test_connected_components_spill_every_round(spark, tmp_path):
+def test_connected_components_spill_every_round(spark, tmp_path,
+                                                split_edges, star_rounds):
     """checkpoint_every=1 (every cut spills): the rolling GC must NOT
-    delete the pinned input-edges spill that every round re-reads —
+    delete the pinned local-star spill that the first rounds re-read —
     doing so crashed round every+1 with FAILED_READ_FILE (executed
     repro, round-5 review)."""
     import os
@@ -554,7 +607,7 @@ def test_connected_components_spill_every_round(spark, tmp_path):
     from syslog_spark.operators.dedup import connected_components
 
     pairs = spark.createDataFrame(
-        [(i, i + 1) for i in range(9)], "a long, b long"
+        [(i, i + 1) for i in range(99)], "a long, b long"
     )
     ck = str(tmp_path / "cc1")
     got = {
@@ -563,29 +616,41 @@ def test_connected_components_spill_every_round(spark, tmp_path):
             pairs, checkpoint_dir=ck, checkpoint_every=1
         ).collect()
     }
-    assert got == {(i, 0) for i in range(10)}
+    assert got == {(i, 0) for i in range(100)}
+    assert len(star_rounds) >= 2
     names = os.listdir(ck)
-    assert any(n.startswith("label_pin_") for n in names)  # input pinned
+    assert any(n.startswith("pin_") for n in names)  # input pinned
+    assert sum(n.startswith("iter_") for n in names) == 3  # rolling GC
 
 
-def test_star_contraction_parquet_spill_checkpoint(spark, tmp_path):
-    """Star contraction with a durable checkpoint_dir: every half-round
-    cut spills to parquet; the component map is unchanged."""
+def test_star_contraction_parquet_spill_checkpoint(
+    spark, tmp_path, split_edges, star_rounds
+):
+    """dedupe_by_components passes checkpoint_dir / checkpoint_every to
+    connected_components: with the alternation running, cuts spill to
+    parquet and the kept ids are the min of each component plus the
+    unpaired docs. Any other keyword (the removed ``max_iters``) raises
+    TypeError."""
     import os
 
-    from syslog_spark.operators.dedup import star_contraction_components
+    from syslog_spark.operators.dedup import dedupe_by_components
 
-    n = 100
+    docs = spark.createDataFrame(
+        [(i, f"doc {i}") for i in range(130)], "doc_id long, text string"
+    )
     pairs = spark.createDataFrame(
-        [(i, i + 1) for i in range(n - 1)], "a long, b long"
+        [(i, i + 1) for i in range(99)] + [(110, 120), (121, 120)],
+        "a long, b long",
     )
     ck = str(tmp_path / "star_ckpt")
-    comps = star_contraction_components(
-        pairs, checkpoint_dir=ck, checkpoint_every=1
-    ).collect()
-    assert len(comps) == n
-    assert {r["component"] for r in comps} == {0}
-    assert any(d.startswith("star_iter_") for d in os.listdir(ck))
+    kept = sorted(r["doc_id"] for r in dedupe_by_components(
+        docs, pairs, checkpoint_dir=ck, checkpoint_every=3
+    ).collect())
+    assert kept == [0] + [i for i in range(100, 130) if i not in (120, 121)]
+    assert star_rounds
+    assert any(d.startswith("iter_") for d in os.listdir(ck))
+    with pytest.raises(TypeError):
+        dedupe_by_components(docs, pairs, max_iters=3)
 
 
 def _simhash_fold_reference(hashes):
@@ -635,24 +700,30 @@ def test_simhash_fold_batch_matches_reference():
 
 
 @pytest.mark.parametrize("seed", [0, 1, 2, 3])
-def test_star_contraction_random_graphs_vs_union_find(spark, seed):
-    """Star contraction agrees with a driver-side union-find ground truth
-    on random multigraphs (self-loops, duplicate edges, many components,
-    varying density)."""
-    from syslog_spark.operators.dedup import star_contraction_components
+def test_star_contraction_random_graphs_vs_union_find(
+    spark, seed, split_edges, star_rounds
+):
+    """connected_components agrees with a driver-side union-find on
+    random multigraphs (self-loops, duplicate edges, many components,
+    varying density) plus a chain of 100-400 edges, all under randomly
+    permuted ids and scattered over eight partitions, so the
+    large-star/small-star alternation has to run two rounds or more."""
+    from syslog_spark.operators.dedup import connected_components
 
     rng = np.random.RandomState(100 + seed)
     n_nodes = int(rng.randint(10, 60))
-    n_edges = int(rng.randint(5, 80))
     edges = [
         (int(rng.randint(n_nodes)), int(rng.randint(n_nodes)))
-        for _ in range(n_edges)
+        for _ in range(int(rng.randint(5, 80)))
     ]
+    edges += [(i, i + 1) for i in range(100, 100 + int(rng.randint(100, 400)))]
+    ids = rng.permutation(1000)
+    edges = [(int(ids[a]), int(ids[b])) for a, b in edges]
 
-    parent = list(range(n_nodes))
+    parent = {}
 
     def find(x):
-        while parent[x] != x:
+        while parent.setdefault(x, x) != x:
             parent[x] = parent[parent[x]]
             x = parent[x]
         return x
@@ -661,19 +732,13 @@ def test_star_contraction_random_graphs_vs_union_find(spark, seed):
         ra, rb = find(a), find(b)
         if ra != rb:
             parent[max(ra, rb)] = min(ra, rb)
-    touched = {x for e in edges if e[0] != e[1] for x in e}
-    want = {}
-    for x in sorted(touched):
-        r = find(x)
-        want[x] = min(y for y in touched if find(y) == r)
+    want = {x: find(x) for x in list(parent)}
 
-    real_edges = [(a, b) for a, b in edges if a != b]
-    if not real_edges:
-        pytest.skip("degenerate: all self-loops")
-    pairs = spark.createDataFrame(real_edges, "a long, b long")
+    pairs = spark.createDataFrame(edges, "a long, b long")
     got = {r["node"]: r["component"]
-           for r in star_contraction_components(pairs).collect()}
+           for r in connected_components(pairs).collect()}
     assert got == want
+    assert len(star_rounds) >= 2
 
 
 def test_rh_signature_pandas_null_and_bad_width_rows(spark):

@@ -11,6 +11,14 @@ def plan_of(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
+def job_ids(spark) -> set:
+    """Ids of the jobs started so far outside any job group. The
+    tracker learns of a job through the listener bus, so drain it first:
+    a job started from an AQE stage thread can register after a read."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    return set(spark.sparkContext.statusTracker().getJobIdsForGroup())
+
+
 @pytest.fixture(scope="module")
 def routed_dir(spark, tmp_path_factory):
     from syslog_spark.plans.pipeline import run_pipeline
@@ -158,11 +166,11 @@ def _neardup_docs(spark):
 
 
 def test_components_run_the_verify_once(spark, monkeypatch):
-    """connected_components symmetrizes the pair list with one reference
-    to it: the executed plan of its pinned edge frame over a
-    near_duplicates_minhash output holds ONE array_intersect (a unionAll
-    of two projections ran the whole exact verify twice) and no
-    array_union (|A u B| comes from the per-doc set sizes)."""
+    """connected_components references the pair list once: the executed
+    plan of the frame its local contraction consumes (the pinned cut:
+    rebalance + mapInArrow over a near_duplicates_minhash output) holds
+    ONE array_intersect, and no array_union (|A u B| comes from the
+    per-doc set sizes)."""
     from syslog_spark.operators import dedup as D
 
     pinned = []
@@ -179,6 +187,7 @@ def test_components_run_the_verify_once(spark, monkeypatch):
              for r in D.connected_components(pairs).collect()}
     assert comps == {0: 0, 1: 0, 2: 0}
     assert len(pinned) == 1
+    assert "MapInArrow" in pinned[0]
     assert pinned[0].count("array_intersect") == 1
     assert "array_union" not in pinned[0]
 
@@ -191,25 +200,44 @@ def test_minhash_verify_plan_starts_no_job(spark, monkeypatch):
     from syslog_spark.operators.dedup import near_duplicates_minhash
 
     docs = _neardup_docs(spark)
-    tracker = spark.sparkContext.statusTracker()
     seen = []
     cls = type(docs)
     orig = cls.localCheckpoint
 
     def record(self, *a, **kw):
         out = orig(self, *a, **kw)
-        seen.append(set(tracker.getJobIdsForGroup()))
+        seen.append(job_ids(spark))
         return out
 
     monkeypatch.setattr(cls, "localCheckpoint", record)
     pairs = near_duplicates_minhash(docs, threshold=0.5)
-    after_build = set(tracker.getJobIdsForGroup())
+    after_build = job_ids(spark)
     monkeypatch.undo()
     assert len(seen) == 2  # signature sketch, then candidate pairs
     assert after_build == seen[-1]
     assert pairs.count() == 3
     # the tracker does see this thread's jobs (the check is not vacuous)
-    assert set(tracker.getJobIdsForGroup()) - after_build
+    assert job_ids(spark) - after_build
+
+
+def test_components_of_checkpointed_pairs_start_few_jobs(spark):
+    """Components over a checkpointed neardup-shaped pair frame (3-doc
+    clusters plus a 60-doc clique, on 4 partitions) start at most 6
+    jobs, collect included: the rebalance coalesces the edges into one
+    partition, whose local union-find passes the star test at once (label
+    propagation started 20 jobs on the neardup graph)."""
+    from syslog_spark.operators.dedup import connected_components
+
+    edges = [(3 * i, 3 * i + k) for i in range(1, 300) for k in (1, 2)]
+    edges += [(a, b) for a in range(2000, 2060) for b in range(a + 1, 2060)]
+    pairs = spark.createDataFrame(edges, "a long, b long").repartition(4)
+    pairs = pairs.localCheckpoint(eager=True)
+    before = job_ids(spark)
+    comps = dict(connected_components(pairs).collect())
+    n_jobs = len(job_ids(spark) - before)
+    assert len(comps) == 2 * 299 + 299 + 60
+    assert comps[2059] == 2000 and comps[3 * 7 + 2] == 21
+    assert n_jobs <= 6
 
 
 def test_pair_gate_queries_spread_without_jobs(spark, sf_dir, monkeypatch):
@@ -221,21 +249,13 @@ def test_pair_gate_queries_spread_without_jobs(spark, sf_dir, monkeypatch):
     import __spark_entry__ as E
     from syslog_spark.operators import dedup as D
 
-    tracker = spark.sparkContext.statusTracker()
-    bus = spark.sparkContext._jsc.sc().listenerBus()
-
-    def job_ids():
-        # the tracker learns of a job through the listener bus
-        bus.waitUntilEmpty()
-        return set(tracker.getJobIdsForGroup())
-
     spread_jobs, calls = set(), []
     orig = D._spread_if_narrow
 
     def record(df):
-        before = job_ids()
+        before = job_ids(spark)
         out = orig(df)
-        spread_jobs.update(job_ids() - before)
+        spread_jobs.update(job_ids(spark) - before)
         calls.append(out is df)
         return out
 
@@ -249,18 +269,28 @@ def test_pair_gate_queries_spread_without_jobs(spark, sf_dir, monkeypatch):
     assert all(q.count() > 0 for q in qs)
 
 
-def test_star_contraction_no_cross_join(spark):
-    """The star-contraction fallback is also pure equi-joins + keyed aggs
-    with checkpoint-truncated lineage — no CartesianProduct/BNLJ."""
-    from syslog_spark.operators.dedup import star_contraction_components
+def test_star_contraction_no_cross_join(spark, split_edges, star_rounds,
+                                      monkeypatch):
+    """The large-star/small-star rounds are equi-joins + keyed aggs with
+    cut lineage — no CartesianProduct/BNLJ in the plan of any cut."""
+    from syslog_spark.operators import dedup as D
 
+    plans = []
+    orig = D._IterCheckpointer.cut
+
+    def record(self, df, pin=False):
+        plans.append(plan_of(df))
+        return orig(self, df, pin=pin)
+
+    monkeypatch.setattr(D._IterCheckpointer, "cut", record)
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(0, 40)], "a long, b long"
     )
-    comps = star_contraction_components(pairs)
-    plan = plan_of(comps)
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
+    assert {r["component"] for r in D.connected_components(pairs).collect()} \
+        == {0}
+    assert star_rounds and len(plans) > 2
+    assert not any("CartesianProduct" in p or "BroadcastNestedLoopJoin" in p
+                   for p in plans)
 
 
 def _optimized(df) -> str:
@@ -280,6 +310,35 @@ def test_minhash_shingle_hoist_survives_optimizer(spark):
     sigs = _minhash_sigs(docs, "text", "doc_id", 64, 5, 42)
     plan = _optimized(_minhash_banded(sigs, 64, 16))
     assert plan.count("array_distinct") == 1
+
+
+def test_minhash_banding_stage_fits_the_jit(spark):
+    """The banding stage at (64 hashes, 32 bands) generates no method over
+    HotSpot's 8,000-bytecode JIT limit: the band is exploded from a
+    sequence, so the stage holds one xxhash64(slice(...)) instead of 32
+    unrolled ones (9,846 bytes, left interpreted for every doc)."""
+    import re
+
+    from syslog_spark.operators.dedup import _minhash_banded, _minhash_sigs
+
+    docs = spark.createDataFrame(
+        [(i, f"the quick brown fox {i} jumps over the lazy dog {7 * i}")
+         for i in range(40)],
+        "doc_id long, text string",
+    )
+    banded = _minhash_banded(
+        _minhash_sigs(docs, "text", "doc_id", 64, 5, 42), 64, 32
+    )
+    rows = banded.collect()
+    assert len(rows) == 40 * 32
+    assert {r["band"] for r in rows} == set(range(32))
+    code = spark._jvm.org.apache.spark.sql.execution.debug.package \
+        .codegenString(banded._jdf.queryExecution().executedPlan())
+    stages = code.split("== Subtree ")[1:]
+    banding = [s for s in stages if "Generate explode" in s]
+    assert len(banding) == 1
+    sizes = [int(n) for n in re.findall(r"maxMethodCodeSize:(\d+)", code)]
+    assert len(sizes) == len(stages) and max(sizes) < 8000
 
 
 def test_document_stats_split_hoist_survives_optimizer(spark):
