@@ -30,6 +30,22 @@ ROUTED = "routed"
 MANIFEST = "manifest"
 METRICS = "metrics"
 ERROR_SINK = -1  # sink_severity value of the dead-letter partition
+SINK_KEYS = ("sink_severity", "source")  # the routed table's partition columns
+
+# Hadoop options of the routed write, passed as writer options: Spark copies
+# them into this job's Hadoop conf only, never the session's shared one.
+#  * FileOutputCommitter v1: task output stays under ``_temporary`` until the
+#    driver's job commit renames it into place, so readers never see a
+#    running job's files and the resume anti-join is sound.
+#  * The raw local FS for ``file:`` output (other schemes ignore the key):
+#    no ``.crc`` sidecar per file. Without libhadoop the local FS spawns a
+#    ``chmod`` per file and directory it creates (~3 ms each). The cache
+#    flag keeps the cached checksummed LocalFileSystem from being reused.
+_WRITE_OPTIONS = {
+    "mapreduce.fileoutputcommitter.algorithm.version": "1",
+    "fs.file.impl": "org.apache.hadoop.fs.RawLocalFileSystem",
+    "fs.file.impl.disable.cache": "true",
+}
 
 _CHECKSUM_COLS = (
     "doc_id", "priority", "version", "ts_micros", "ts_nanos",
@@ -61,7 +77,7 @@ def rebalance_by_sink(df: DataFrame) -> DataFrame:
     across several tasks, so a hot sink (one facility dominating) does
     not straggle. Only the keys that are actually hot get split; nothing
     is salted up front."""
-    return df.hint("rebalance", "sink_severity", "source")
+    return df.hint("rebalance", *SINK_KEYS)
 
 
 def partition_metrics(routed: DataFrame) -> DataFrame:
@@ -142,7 +158,7 @@ def sink_stats(routed: DataFrame) -> DataFrame:
     whole hostname set through one reducer (measured: an exact distinct
     made this scan a flat ~4.4s at any core count; the sketch scan is
     ~0.6s and scales)."""
-    return routed.groupBy("sink_severity", "source").agg(
+    return routed.groupBy(*SINK_KEYS).agg(
         F.count(F.lit(1)).alias("rows"),
         F.bit_xor("row_cs").alias("row_set_checksum"),
         F.approx_count_distinct("hostname").alias("distinct_hostnames"),
@@ -295,25 +311,8 @@ def route_write(
     # safe when nothing pre-exists; dynamic preserves untouched partitions
     # at the cost of a driver-side rename per partition dir (~10s/650 dirs
     # measured) — pay it only when layering onto an existing table.
-    # Both the overwrite mode and the committer version are passed as
-    # PER-WRITE writer options (newHadoopConfWithOptions copies them into
-    # this job's hadoop conf) — mutating spark.conf / the shared
-    # sparkContext hadoopConfiguration would leak the setting into every
-    # later write in the session.
     routed_exists = table_exists(spark, f"{out_dir}/{ROUTED}")
     overwrite_mode = "dynamic" if (resume or routed_exists) else "static"
-    # commit protocol: v2 moves task output into place at TASK commit
-    # (parallel, no serial driver-side job-commit rename over every
-    # sink dir — measured ~0.9s of a ~8s write at 32 cores, and the
-    # serial cost grows with the number of files written: a direct
-    # Amdahl penalty on a large write). Safe only for fresh overwrites,
-    # where a crashed job is rerun from scratch and the static truncate
-    # clears any partials. Resume/append runs keep
-    # v1: v2's task-visible partial files would double-write a sink
-    # that crashed mid-job on the next resume (manifest rows are only
-    # written after job success, so v1's invisible-until-job-commit is
-    # what makes the resume anti-join sound).
-    committer_version = "1" if (resume or routed_exists) else "2"
     stage_t: dict[str, float] = {}
     _t0 = _time.monotonic()
     # row_cs is materialized BEFORE the shuffle (pipelined with the parse
@@ -327,25 +326,24 @@ def route_write(
         _clear_stale_temporary(spark, f"{out_dir}/{ROUTED}")
         done = completed_sinks(spark, out_dir)
         if done is None and routed_exists:
-            # routed data with NO manifest = a FRESH (committer v2)
-            # write crashed mid-job: its task-visible partials are in
-            # the final sink dirs and nothing is recorded as complete.
-            # resume would append the full dataset ON TOP of the
-            # partials and then compute a manifest over the duplicated
-            # table, legitimizing the inflated counts (round-5 review).
-            # The correct recovery for a crashed fresh write is a fresh
-            # rerun (static overwrite clears the partials).
+            # routed data with NO manifest = a FRESH write crashed in
+            # or after its job commit: part of its output may be in the
+            # final sink dirs, and nothing is recorded as complete.
+            # resume would append the full dataset ON TOP of those files
+            # and then compute a manifest over the duplicated table,
+            # legitimizing the inflated counts. The correct recovery is
+            # a fresh rerun (static overwrite clears the partials).
             raise RuntimeError(
                 f"resume=True but {out_dir}/{MANIFEST} is missing while "
                 f"{out_dir}/{ROUTED} exists — this looks like a crashed "
-                "FRESH write (partials present, nothing committed). "
+                "FRESH write (interrupted job commit, no manifest). "
                 "Rerun with resume=False to overwrite from scratch."
             )
         if done is not None:
-            keys = done.select("sink_severity", "source")
+            keys = done.select(*SINK_KEYS)
             skipped = keys.count()
             df = df.join(
-                F.broadcast(keys), ["sink_severity", "source"], "left_anti"
+                F.broadcast(keys), list(SINK_KEYS), "left_anti"
             )
 
     mode = "overwrite" if not resume else "append"
@@ -353,11 +351,8 @@ def route_write(
         rebalance_by_sink(df)
         .write.mode(mode)
         .option("partitionOverwriteMode", overwrite_mode)
-        .option(
-            "mapreduce.fileoutputcommitter.algorithm.version",
-            committer_version,
-        )
-        .partitionBy("sink_severity", "source")
+        .options(**_WRITE_OPTIONS)
+        .partitionBy(*SINK_KEYS)
         .parquet(f"{out_dir}/{ROUTED}")
     )
     stage_t["parse_route_write"] = _time.monotonic() - _t0
@@ -372,9 +367,13 @@ def route_write(
     # tried and REVERTED: the expand duplicates every row through the
     # sketch updates and measured 5-33s where the two scans take ~1-2s
     # total.)
-    routed = read_routed(spark, out_dir)
+    # read with the written schema (a partitioned read puts the sink keys
+    # last): no footer-inference job
+    written = df.select(*(c for c in df.columns if c not in SINK_KEYS),
+                        *SINK_KEYS)
+    routed = spark.read.schema(written.schema).parquet(f"{out_dir}/{ROUTED}")
     new = routed if keys is None else routed.join(
-        F.broadcast(keys), ["sink_severity", "source"], "left_anti"
+        F.broadcast(keys), list(SINK_KEYS), "left_anti"
     )
     stats_rows = [r.asDict() for r in sink_stats(new).collect()]
     write_local_table(

@@ -1,18 +1,21 @@
-"""Round-5 chaos test: the commit-protocol/resume reasoning in
-route.py (v2 for fresh writes, v1 for resume/append) was argued in
-comments — this executes it. A child process running route_write is
-SIGKILLed after the first task commit becomes observable, then the
-documented recovery action runs and the final table must be
-row_cs-exact against an uncrashed run.
+"""Chaos test: the commit-protocol/resume reasoning in route.py
+(FileOutputCommitter v1 for every routed write) is executed, not argued.
+A child process running route_write is SIGKILLed as soon as a commit
+becomes observable on disk, then the documented recovery action runs
+and the final table must be row_cs-exact against an uncrashed run.
 
 Recovery contract under test:
-  * crashed FRESH write (committer v2, task-visible partials): rerun
-    from scratch — the overwrite clears partials; manifest was never
-    written so no sink is falsely "complete".
-  * crashed RESUME/append write (committer v1): partials live only
-    under _temporary (invisible to readers); re-running the same resume
-    skips manifest-complete sinks and appends the missing ones exactly
-    once — no double-write.
+  * crashed FRESH write: v1 keeps task output under _temporary until the
+    driver's job commit renames it into the final sink dirs, so the only
+    window in which a fresh write's partials are visible is that job
+    commit (or the manifest scan after it). The kill lands there. The
+    manifest was never written, so no sink is falsely "complete"; resume
+    is refused, and a rerun from scratch (the overwrite clears the
+    partials) is the recovery.
+  * crashed RESUME/append write: the kill lands after the first task
+    commit, whose output lives only under _temporary (invisible to
+    readers); re-running the same resume skips manifest-complete sinks
+    and appends the missing ones exactly once — no double-write.
 """
 from __future__ import annotations
 
@@ -74,7 +77,7 @@ _CHILD = textwrap.dedent("""
 def _run_child_and_kill(tmp_path, tokens, out, resume, evidence_glob,
                         timeout=180):
     """Start route_write in a child process group, SIGKILL the whole
-    group as soon as the first task-commit evidence appears on disk.
+    group as soon as the first commit evidence appears on disk.
     Returns True if the kill landed mid-job (False = job finished too
     fast; caller should retry with more data)."""
     script = tmp_path / f"chaos_{'resume' if resume else 'fresh'}.py"
@@ -127,22 +130,23 @@ def test_chaos_kill_fresh_then_rerun_and_kill_resume_then_resume(
     clean_final = _manifest_set(spark, clean)
     assert clean_final > clean_after_b1
 
-    # ---- scenario 1: kill a FRESH (committer v2) write mid-job
+    # ---- scenario 1: kill a FRESH write in its job commit
     out = str(tmp_path / "out_chaos")
     killed = _run_child_and_kill(
         tmp_path, b1, out, resume=False,
-        # v2 task commits land in FINAL partition dirs while running
+        # the first file in a FINAL partition dir: the driver's job
+        # commit has started renaming task output into place
         evidence_glob=f"{out}/routed/sink_severity=*/source=*/part-*.parquet",
     )
-    assert killed, "fresh write finished before first task commit was seen"
-    # job never committed: no manifest, so nothing is falsely complete
+    assert killed, "fresh write finished before its job commit was seen"
+    # no manifest, so nothing is falsely complete
     assert not os.path.exists(f"{out}/manifest")
     partials = glob.glob(f"{out}/routed/sink_severity=*/source=*/*.parquet")
-    assert partials, "kill should have left task-visible v2 partials"
+    assert partials, "kill should have left job-commit partials in place"
 
     # the WRONG recovery — resume=True on a crashed fresh write — must
     # be refused: no manifest means nothing is recorded complete, and
-    # appending would land the full dataset on top of the v2 partials
+    # appending would land the full dataset on top of the partials
     # and then legitimize the duplicates in a fresh manifest
     with pytest.raises(RuntimeError, match="crashed\\s+FRESH write"):
         route_write(parse_tokens(spark.read.parquet(b1)), out, spark,
@@ -152,14 +156,14 @@ def test_chaos_kill_fresh_then_rerun_and_kill_resume_then_resume(
     route_write(parse_tokens(spark.read.parquet(b1)), out, spark)
     assert _manifest_set(spark, out) == clean_after_b1
 
-    # ---- scenario 2: kill a RESUME/append (committer v1) write mid-job
+    # ---- scenario 2: kill a RESUME/append write mid-job
     killed = _run_child_and_kill(
         tmp_path, b2, out, resume=True,
-        # v1 task commits are only visible under _temporary
+        # task commits are only visible under _temporary
         evidence_glob=f"{out}/routed/_temporary/*/task_*",
     )
     assert killed, "resume write finished before first task commit was seen"
-    # readers see ONLY b1 data (v1 partials are invisible) and the
+    # readers see ONLY b1 data (task-committed output is invisible) and the
     # manifest still lists exactly the b1 sinks
     assert _manifest_set(spark, out) == clean_after_b1
 

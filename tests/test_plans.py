@@ -31,6 +31,22 @@ def routed_dir(spark, tmp_path_factory):
     return out
 
 
+def test_run_pipeline_starts_at_most_six_jobs(spark, tmp_path):
+    """One run_pipeline call starts at most 6 jobs: the routed write and
+    the manifest and metrics scans. The manifest scan reads the routed
+    table with the written frame's schema, so no footer-inference job
+    runs (7 jobs when the schema was inferred)."""
+    from syslog_spark.plans.pipeline import run_pipeline
+    from syslog_spark.sources.datagen import write_token_table
+
+    tok = str(tmp_path / "tokens")
+    write_token_table(spark, tok, 2000, partitions=4)
+    before = job_ids(spark)
+    res = run_pipeline(spark, tok, str(tmp_path / "out"))
+    assert res["routed_rows"] + res["error_rows"] == 2000
+    assert len(job_ids(spark) - before) <= 6
+
+
 def test_enrich_join_is_broadcast(spark, sf_dir):
     from syslog_spark.operators.enrich import enrich_with_joins
     from syslog_spark.operators.parse import parse_tokens
@@ -139,20 +155,32 @@ def test_single_shuffle_in_route_plan(spark):
     assert "xxhash64" not in plan
 
 
-def test_connected_components_no_cross_join(spark):
-    """The per-round propagation is equi-joins + a keyed agg — no
-    CartesianProduct, and the final labels carry no unbounded lineage
-    (localCheckpoint truncates each round, so the returned plan depends
-    only on the last round's frames)."""
-    from syslog_spark.operators.dedup import connected_components
+def test_connected_components_no_cross_join(spark, monkeypatch):
+    """On the default path (the edges fit the local contraction, so no
+    large-star/small-star alternation runs) every frame
+    connected_components cuts is built from a rebalance, the local
+    union-find and keyed aggregates: no CartesianProduct/BNLJ in the
+    executed plan of any cut. (The returned frame is a projection of a
+    checkpoint, whose plan cannot show the joins.)"""
+    from syslog_spark.operators import dedup as D
 
+    plans = []
+    orig = D._IterCheckpointer.cut
+
+    def record(self, df, pin=False):
+        plans.append(plan_of(df))
+        return orig(self, df, pin=pin)
+
+    monkeypatch.setattr(D._IterCheckpointer, "cut", record)
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(0, 40, 2)], "a long, b long"
     )
-    comps = connected_components(pairs)
-    plan = plan_of(comps)
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
+    comps = dict(D.connected_components(pairs).collect())
+    assert comps == {n: n - n % 2 for n in range(40)}
+    assert len(plans) == 2  # the contracted edges, then the star test
+    assert "MapInArrow" in plans[0]
+    assert not any("CartesianProduct" in p or "BroadcastNestedLoopJoin" in p
+                   for p in plans)
 
 
 def _neardup_docs(spark):

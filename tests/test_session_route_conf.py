@@ -75,9 +75,11 @@ def test_table_exists_local_and_remote_scheme(spark, tmp_path):
 
 
 def test_route_write_does_not_leak_committer_conf(spark, sf_dir, tmp_path):
-    """The committer version / overwrite mode must be writer-scoped:
-    after a fresh route_write (which uses v2 + static), the session's
-    shared hadoopConfiguration and SQL conf are unchanged."""
+    """The committer version, overwrite mode and raw local filesystem
+    must be writer-scoped: after a fresh route_write (v1 + static + raw
+    local FS), the session's shared hadoopConfiguration and SQL conf are
+    unchanged, and ``file:`` paths still resolve to the session's own
+    (checksummed) local filesystem."""
     from syslog_spark.operators.parse import parse_tokens
     from syslog_spark.operators.route import route_write
 
@@ -86,6 +88,10 @@ def test_route_write_does_not_leak_committer_conf(spark, sf_dir, tmp_path):
         "mapreduce.fileoutputcommitter.algorithm.version"
     )
     before_mode = spark.conf.get("spark.sql.sources.partitionOverwriteMode")
+    jpath = spark.sparkContext._jvm.org.apache.hadoop.fs.Path(
+        f"file://{tmp_path}"
+    )
+    before_fs = jpath.getFileSystem(hconf).getClass().getName()
 
     tok = (
         spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
@@ -110,6 +116,35 @@ def test_route_write_does_not_leak_committer_conf(spark, sf_dir, tmp_path):
     after_mode = spark.conf.get("spark.sql.sources.partitionOverwriteMode")
     assert after_committer == before_committer
     assert after_mode == before_mode
+    assert hconf.get("fs.file.impl") is None
+    after_fs = jpath.getFileSystem(hconf).getClass().getName()
+    assert after_fs == before_fs
+    assert after_fs != "org.apache.hadoop.fs.RawLocalFileSystem"
+
+
+def test_routed_table_has_no_checksum_sidecars(spark, tmp_path):
+    """The routed write goes through the raw local filesystem: no
+    ``.crc`` file anywhere in the table, the ``_SUCCESS`` marker is still
+    written, and the table reads back row for row (its row_cs multiset
+    equals that of the frame written)."""
+    from syslog_spark.operators.parse import parse_tokens
+    from syslog_spark.operators.route import read_routed, route_write, \
+        row_checksum
+    from syslog_spark.sources.datagen import generate_tokens_df
+
+    parsed = parse_tokens(generate_tokens_df(spark, 600, 2))
+    out = tmp_path / "out"
+    route_write(parsed, str(out), spark)
+    names = [f for _, _, fs in os.walk(out / "routed") for f in fs]
+    assert "_SUCCESS" in names
+    assert any(f.endswith(".parquet") for f in names)
+    assert not [f for f in names if f.endswith(".crc")]
+
+    def multiset(df):
+        return sorted(r[0] for r in df.collect())
+
+    assert multiset(read_routed(spark, str(out)).select("row_cs")) == \
+        multiset(parsed.select(row_checksum()))
 
 
 def _mini_tokens(spark, src: str, n: int = 120):
