@@ -1,30 +1,37 @@
 """Routing stage: per-severity x per-source fan-out sinks + error sink.
 
 Replaces the reference's single (nil, err) return (syslog.go:148-157) with
-the north rule's fan-out, designed as a SINGLE PASS over the parsed rows:
+the north rule's fan-out, designed as ONE Spark query over the parsed rows:
 
   * every row gets a sink key ``sink_severity`` = severity, or -1 for rows
     that failed to parse — the error sink (the distributed version of the
     reference's stdout print at syslog.go:155) is just another partition,
-  * ONE shuffle (an AQE rebalance on the sink key: one file per sink
-    while partitions are small, hot sinks split across writer tasks),
-    ONE write partitioned by (sink_severity, source),
-  * manifest / per-sink aggregates / per-partition lineage metrics are
-    computed from the *written* table (cheap columnar re-reads), never by
-    re-running the Python parse stage and never via caching — measured on
-    1M rows, caching the nested rows cost 4x the parse itself.
+  * ONE shuffle (an AQE rebalance on the sink key: one writer task per
+    sink while partitions are small, hot sinks split across tasks),
+  * ONE Python stage (:func:`_sink_writer`, a ``mapInArrow``) that writes
+    each sink of its partition as one parquet file with pyarrow, into a
+    per-attempt staging dir, and yields the flat columns the manifest
+    aggregates read plus one row per file it wrote,
+  * ONE aggregate (:func:`sink_stats` + :func:`partition_metrics`) and
+    ONE collect: the driver gets the manifest, the per-partition lineage
+    metrics and the exact list of files to commit.
 
-Manifest checksums are pure JVM (xxhash64 over the canonical column tuple
-with ``to_json`` for nested data) xor-folded with bit_xor — associative +
-commutative, so equal row multisets give equal checksums under any
-partitioning: the routed-row-set equality contract. Resume anti-joins the
-manifest's completed sinks (checkpoint/resume contract).
+The written table is never re-read, and the writer's output is never
+cached or consumed by a second action: each action would re-run the
+side-effecting stage.
+
+Manifest checksums are pure JVM (xxhash64 over the canonical column tuple)
+xor-folded with bit_xor — associative + commutative, so equal row
+multisets give equal checksums under any partitioning: the routed-row-set
+equality contract. Resume anti-joins the manifest's completed sinks
+(checkpoint/resume contract).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 ROUTED = "routed"
 MANIFEST = "manifest"
@@ -32,26 +39,25 @@ METRICS = "metrics"
 ERROR_SINK = -1  # sink_severity value of the dead-letter partition
 SINK_KEYS = ("sink_severity", "source")  # the routed table's partition columns
 
-# Hadoop options of the routed write, passed as writer options: Spark copies
-# them into this job's Hadoop conf only, never the session's shared one.
-#  * FileOutputCommitter v1: task output stays under ``_temporary`` until the
-#    driver's job commit renames it into place, so readers never see a
-#    running job's files and the resume anti-join is sound.
-#  * The raw local FS for ``file:`` output (other schemes ignore the key):
-#    no ``.crc`` sidecar per file. Without libhadoop the local FS spawns a
-#    ``chmod`` per file and directory it creates (~3 ms each). The cache
-#    flag keeps the cached checksummed LocalFileSystem from being reused.
-_WRITE_OPTIONS = {
-    "mapreduce.fileoutputcommitter.algorithm.version": "1",
-    "fs.file.impl": "org.apache.hadoop.fs.RawLocalFileSystem",
-    "fs.file.impl.disable.cache": "true",
-}
-
 _CHECKSUM_COLS = (
     "doc_id", "priority", "version", "ts_micros", "ts_nanos",
     "tz_offset_seconds", "hostname", "appname", "proc_id", "msg_id",
     "message", "error_msg", "error_column",
 )
+
+# The writer's output rows: kind 0 = one per routed row (the columns
+# sink_stats reads), 1 = one per (task, input_partition) with partial
+# lineage counts, 2 = one per file written (path under the job's staging
+# dir). Columns a kind does not use are null.
+_ROW, _PARTIAL, _FILE = 0, 1, 2
+_ROW_COLS = ("sink_severity", "source", "row_cs", "hostname", "doc_id", "n_tok")
+_PARTIAL_COLS = ("input_rows", "ok_rows", "error_rows", "token_bytes")
+
+# Spark's partition-path escaping (ExternalCatalogUtils.escapePathName,
+# non-Windows): ASCII controls 0x01-0x1F, DEL and "#%'*/:=?\{[]^ become
+# %XX; a NULL or empty value is the default partition.
+_ESCAPED = frozenset(map(chr, range(1, 0x20))) | frozenset("\"#%'*/:=?\\\x7f{[]^")
+_DEFAULT_PARTITION = "__HIVE_DEFAULT_PARTITION__"
 
 
 def row_checksum() -> F.Column:
@@ -80,47 +86,73 @@ def rebalance_by_sink(df: DataFrame) -> DataFrame:
     return df.hint("rebalance", *SINK_KEYS)
 
 
-def partition_metrics(routed: DataFrame) -> DataFrame:
-    """Per-INPUT-partition lineage rows (SURVEY.md §2.8). input_partition
-    is stamped before the routing shuffle, so lineage survives it."""
-    return routed.groupBy("input_partition").agg(
-        F.count(F.lit(1)).alias("input_rows"),
-        F.count(F.when(F.col("error_msg").isNull(), 1)).alias("ok_rows"),
-        F.count(F.when(F.col("error_msg").isNotNull(), 1)).alias("error_rows"),
-        F.sum("n_tok").alias("token_bytes"),
-    )
+def partition_path(sink_severity, source) -> str:
+    """``sink_severity=…/source=…``, escaped the way Spark's partitioned
+    writer names the directory, so readers discover the same values."""
+
+    def value(v) -> str:
+        if v is None or v == "":
+            return _DEFAULT_PARTITION
+        return "".join(
+            f"%{ord(c):02X}" if c in _ESCAPED else c for c in str(v)
+        )
+
+    return f"sink_severity={value(sink_severity)}/source={value(source)}"
 
 
-def completed_sinks(spark, out_dir: str):
-    """Manifest of already-routed sinks, or None when no manifest exists
-    (a fresh run). Any other read error propagates: taking an unreadable
-    manifest for "no manifest" would hide the real error behind the
-    crashed-fresh-write refusal in :func:`route_write`."""
-    path = f"{out_dir}/{MANIFEST}"
-    if not table_exists(spark, path):
+def sink_stats() -> list:
+    """The manifest aggregates, one row per (sink_severity, source): rows,
+    the row-set checksum from the precomputed ``row_cs``, and the per-sink
+    stats. Error-sink rows (sink_severity=-1) get null hostname/n_tok
+    stats naturally.
+
+    Distinct hostnames use the HLL sketch (approx_count_distinct):
+    partial-aggregable and skew-immune, so the hot sink never funnels its
+    whole hostname set through one reducer (measured: an exact distinct
+    made this aggregate a flat ~4.4s at any core count; the sketch ~0.6s
+    and scales)."""
+    return [
+        F.count(F.lit(1)).alias("rows"),
+        F.bit_xor("row_cs").alias("row_set_checksum"),
+        F.approx_count_distinct("hostname").alias("distinct_hostnames"),
+        F.approx_count_distinct("doc_id").alias("approx_docs"),
+        F.min("n_tok").alias("min_n_tok"),
+        F.max("n_tok").alias("max_n_tok"),
+        F.sum("n_tok").alias("sum_n_tok"),
+        # cast first (percentile_approx returns the INPUT element type);
+        # accuracy 1000 — this is a monitoring stat, and the sketch insert
+        # cost is on every routed row
+        F.percentile_approx(
+            F.col("n_tok").cast("double"), [0.5, 0.95, 0.99], 1000
+        ).alias("n_tok_pcts"),
+    ]
+
+
+def partition_metrics() -> list:
+    """Per-INPUT-partition lineage aggregates (SURVEY.md §2.8): sums of the
+    writer tasks' partial counts. input_partition is stamped before the
+    routing shuffle, so lineage survives it."""
+    return [F.sum(c).alias(c) for c in _PARTIAL_COLS]
+
+
+def completed_sinks(out_dir: str) -> list[dict] | None:
+    """Manifest rows of already-routed sinks, or None when no manifest
+    exists (a fresh run). Any other read error propagates: taking an
+    unreadable manifest for "no manifest" would hide the real error
+    behind the crashed-fresh-write refusal in :func:`route_write`."""
+    from ..sources.direct import _resolve_fs
+
+    fs, path = _resolve_fs(f"{out_dir}/{MANIFEST}")
+    if not _exists(fs, path):
         return None
-    return spark.read.parquet(path)
+    return read_local_table(f"{out_dir}/{MANIFEST}")
 
 
 def read_routed(spark, out_dir: str) -> DataFrame:
     return spark.read.parquet(f"{out_dir}/{ROUTED}")
 
 
-def read_errors(spark, out_dir: str) -> DataFrame:
-    """The dead-letter sink: rows the reference would have rejected."""
-    return (
-        read_routed(spark, out_dir)
-        .filter(F.col("sink_severity") == ERROR_SINK)
-        .select(
-            "doc_id", "source", "n_tok", "error_column", "error_msg",
-            "failed_stage",
-        )
-    )
-
-
 def _manifest_metrics_schemas():
-    from pyspark.sql import types as T
-
     manifest = T.StructType([  # == sink_stats output types
         T.StructField("sink_severity", T.IntegerType()),
         T.StructField("source", T.StringType()),
@@ -146,38 +178,8 @@ def _manifest_metrics_schemas():
 MANIFEST_SCHEMA, METRICS_SCHEMA = _manifest_metrics_schemas()
 
 
-def sink_stats(routed: DataFrame) -> DataFrame:
-    """ONE pass over the routed table producing both the manifest columns
-    (rows, row-set checksum from the precomputed ``row_cs``) and the
-    per-sink aggregates — merging the two scans halves the post-route
-    IO/CPU. Error-sink rows (sink_severity=-1) get null hostname/n_tok
-    stats naturally.
-
-    Distinct hostnames use the HLL sketch (approx_count_distinct):
-    partial-aggregable and skew-immune, so the hot sink never funnels its
-    whole hostname set through one reducer (measured: an exact distinct
-    made this scan a flat ~4.4s at any core count; the sketch scan is
-    ~0.6s and scales)."""
-    return routed.groupBy(*SINK_KEYS).agg(
-        F.count(F.lit(1)).alias("rows"),
-        F.bit_xor("row_cs").alias("row_set_checksum"),
-        F.approx_count_distinct("hostname").alias("distinct_hostnames"),
-        F.approx_count_distinct("doc_id").alias("approx_docs"),
-        F.min("n_tok").alias("min_n_tok"),
-        F.max("n_tok").alias("max_n_tok"),
-        F.sum("n_tok").alias("sum_n_tok"),
-        # cast first (percentile_approx returns the INPUT element type);
-        # accuracy 1000 — this is a monitoring stat, and the sketch insert
-        # cost is on every routed row
-        F.percentile_approx(
-            F.col("n_tok").cast("double"), [0.5, 0.95, 0.99], 1000
-        ).alias("n_tok_pcts"),
-    )
-
-
 def _pa_schema(spark_schema):
     import pyarrow as pa
-    from pyspark.sql import types as T
 
     def conv(dt):
         if isinstance(dt, T.IntegerType):
@@ -195,27 +197,36 @@ def _pa_schema(spark_schema):
     return pa.schema([(f.name, conv(f.dataType)) for f in spark_schema])
 
 
+def _exists(fs, path: str) -> bool:
+    from pyarrow import fs as pafs
+
+    return fs.get_file_info(path).type != pafs.FileType.NotFound
+
+
 def write_local_table(path: str, rows: list, spark_schema, append: bool = False):
     """Write a driver-local (tiny) table as a parquet directory WITHOUT a
     Spark job: a createDataFrame(local rows).write would be backed by a
     python RDD, and its single write task forks a python worker (~4-7s of
     pure latency per call on this box). The manifest/metrics/aggregates
-    tables are at most a few hundred rows — pyarrow writes them in
+    tables are at most a few thousand rows — pyarrow writes them in
     milliseconds and Spark reads the directory exactly the same."""
-    import os
-    import shutil
     import uuid
 
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    if not append:
-        shutil.rmtree(path, ignore_errors=True)
-    os.makedirs(path, exist_ok=True)
+    from ..sources.direct import _resolve_fs
+
+    fs, inner = _resolve_fs(path)
+    if not append and _exists(fs, inner):
+        fs.delete_dir(inner)
+    fs.create_dir(inner)
     table = pa.Table.from_pylist(
         [dict(r) for r in rows], schema=_pa_schema(spark_schema)
     )
-    pq.write_table(table, os.path.join(path, f"part-{uuid.uuid4().hex}.parquet"))
+    pq.write_table(
+        table, f"{inner}/part-{uuid.uuid4().hex}.parquet", filesystem=fs
+    )
 
 
 def read_local_table(path: str) -> list[dict]:
@@ -223,15 +234,18 @@ def read_local_table(path: str) -> list[dict]:
     pyarrow twin of write_local_table; no Spark job."""
     import pyarrow.parquet as pq
 
-    return pq.read_table(path).to_pylist()
+    from ..sources.direct import _resolve_fs
+
+    fs, inner = _resolve_fs(path)
+    return pq.read_table(inner, filesystem=fs).to_pylist()
 
 
 def table_exists(spark, path: str) -> bool:
     """Existence check that works for hdfs:///s3a:// out_dirs too: a
     driver-local os.path.isdir is always False for remote URIs, which
-    would silently pick static overwrite and truncate a remote table the
-    docstring promises to preserve. Resolved through the Hadoop
-    FileSystem API of the path's own scheme."""
+    would silently take a crashed fresh write for a fresh out_dir.
+    Resolved through the Hadoop FileSystem API of the path's own
+    scheme."""
     try:
         jvm = spark.sparkContext._jvm
         jpath = jvm.org.apache.hadoop.fs.Path(path)
@@ -241,47 +255,194 @@ def table_exists(spark, path: str) -> bool:
         if "://" in path:
             # remote URI and the FS probe failed (transient store error,
             # auth, missing connector jar): do NOT guess "absent" — a
-            # wrong False picks static overwrite and truncates the very
-            # table this function exists to protect
+            # wrong False would let resume append onto a crashed fresh
+            # write's partials
             raise
         import os as _os
 
         return _os.path.isdir(path)
 
 
-def _clear_stale_temporary(spark, table_path: str) -> bool:
-    """Delete a leftover ``_temporary`` dir under a table path.
+def _clear_stale_temporary(fs, table: str) -> None:
+    """Delete a leftover ``_temporary`` dir under the routed table.
 
-    A crashed append/resume attempt leaves its committed task dirs under
-    ``<table>/_temporary/0``; FileOutputCommitter v1's job commit merges
-    EVERY task dir found there, so the next resume run would silently
-    absorb the crashed attempt's rows on top of its own — double-writing
-    those sinks (executed, not theorized: test_chaos_resume.py reproduces
-    it). The resume protocol is single-writer per out_dir (the manifest
-    anti-join already requires that), so any pre-existing _temporary is
-    garbage by definition. Resolved through the Hadoop FS of the path's
-    own scheme, like :func:`table_exists`.
+    It holds the staging dirs of a crashed or failed run. The job commit
+    only moves the files its own query listed, so stale staging cannot be
+    committed; it is cleared so it neither piles up nor confuses a reader
+    of the directory. The protocol is single-writer per out_dir (the
+    manifest anti-join already requires that), so any pre-existing
+    _temporary is garbage by definition. A failed delete raises."""
+    if _exists(fs, f"{table}/_temporary"):
+        fs.delete_dir(f"{table}/_temporary")
 
-    Fail-closed EVERYWHERE (round-6, advice fix): a failed delete of a
-    directory we just confirmed exists precedes a v1-committer append
-    that would silently absorb the crashed attempt's rows — the local
-    branch used to swallow the error and proceed, reintroducing exactly
-    the double-write this function prevents. Hadoop's ``delete`` also
-    reports failure by RETURN VALUE, not exception; check it."""
-    jvm = spark.sparkContext._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(f"{table_path}/_temporary")
-    fs = jpath.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
-    if fs.exists(jpath):
-        deleted = fs.delete(jpath, True)
-        if not deleted and fs.exists(jpath):
-            raise RuntimeError(
-                f"could not delete stale {table_path}/_temporary; "
-                "resuming over it would double-write the crashed "
-                "attempt's task dirs (v1 job commit merges every task "
-                "dir it finds) — clear it manually and re-run"
+
+def _sink_writer(fs, staging: str, codec: str, data_cols: list, meta: dict,
+                 schema):
+    """The ``mapInArrow`` body of the routed write.
+
+    One call per task attempt: it sorts the partition by the sink keys,
+    writes each sink it holds as one parquet file under
+    ``<staging>/task_<part>_<attempt>/sink_severity=…/source=…/`` and
+    yields the rows :func:`route_write` aggregates (see ``_ROW``,
+    ``_PARTIAL``, ``_FILE``; ``schema`` is their Arrow schema).
+    ``<attempt>`` is Spark's task attempt id,
+    unique in the application, so a retried or speculative attempt never
+    writes over another's files; the aggregate reads one attempt's output
+    per partition, so only that attempt's files are listed."""
+    ext = "" if codec == "none" else f".{codec}"
+    job = staging.rsplit("/", 1)[1]
+
+    def write(batches):
+        import numpy as np
+        import pyarrow as pa
+        import pyarrow.compute as pc
+        import pyarrow.parquet as pq
+        from pyspark import TaskContext
+
+        batches = list(batches)
+        if not batches:
+            return
+        t = pa.Table.from_batches(batches)
+        n = t.num_rows
+        if not n:
+            return
+        ctx = TaskContext.get()
+        part = ctx.partitionId()
+        task = f"task_{part}_{ctx.taskAttemptId()}"
+        t = t.sort_by([(k, "ascending") for k in SINK_KEYS]).combine_chunks()
+        sev = t.column("sink_severity").to_numpy()
+        src = t.column("source")
+        code = pc.fill_null(
+            pc.dictionary_encode(src.chunk(0)).indices, -1
+        ).to_numpy()
+        cut = np.flatnonzero((sev[1:] != sev[:-1]) | (code[1:] != code[:-1])) + 1
+        data = t.select(data_cols).replace_schema_metadata(meta)
+        files = []
+        for k, (s, e) in enumerate(zip(np.r_[0, cut], np.r_[cut, n])):
+            sink = f"{task}/{partition_path(int(sev[s]), src[s].as_py())}"
+            fs.create_dir(f"{staging}/{sink}")
+            name = f"{sink}/part-{part:05d}-{job}.c{k:03d}{ext}.parquet"
+            pq.write_table(
+                data.slice(s, e - s), f"{staging}/{name}", filesystem=fs,
+                compression=codec, store_schema=False,
             )
-        return True
-    return False
+            files.append(name)
+
+        def rows(kind, m, **cols):
+            cols["kind"] = pa.array(np.full(m, kind, np.int8))
+            return pa.table(
+                [cols.get(f.name, pa.nulls(m, f.type)) for f in schema],
+                schema=schema,
+            )
+
+        g = pa.table({
+            "input_partition": t.column("input_partition"),
+            "ok": pc.is_null(t.column("error_msg")).cast(pa.int64()),
+            "n_tok": t.column("n_tok"),
+        }).group_by("input_partition").aggregate(
+            [("ok", "count"), ("ok", "sum"), ("n_tok", "sum")]
+        )
+        total = g.column("ok_count")
+        out = pa.concat_tables([
+            rows(_ROW, n, **{c: t.column(c) for c in _ROW_COLS}),
+            rows(
+                _PARTIAL, g.num_rows,
+                input_partition=g.column("input_partition"),
+                input_rows=total,
+                ok_rows=g.column("ok_sum"),
+                error_rows=pc.subtract(total, g.column("ok_sum")),
+                token_bytes=g.column("n_tok_sum"),
+            ),
+            rows(_FILE, len(files), file=pa.array(files, pa.string())),
+        ])
+        yield from out.to_batches()
+
+    return write
+
+
+def _route_query(df: DataFrame, fs, staging: str) -> DataFrame:
+    """The routed write as one query: rebalance -> :func:`_sink_writer`
+    -> one aggregate whose rows are the manifest (kind 0), the lineage
+    metrics (kind 1) and the staged files (kind 2). Collect it once."""
+    spark = df.sparkSession
+    codec = spark.conf.get("spark.sql.parquet.compression.codec", "snappy")
+    codec = "none" if codec.lower() in ("none", "uncompressed") else codec.lower()
+    data = df.select(*(c for c in df.columns if c not in SINK_KEYS))
+    # the key/value metadata Spark's own parquet writer adds: readers get
+    # the exact Spark schema and the calendar (no datetime rebase) back
+    meta = {
+        "org.apache.spark.version": spark.version,
+        "org.apache.spark.sql.parquet.row.metadata": data.schema.json(),
+    }
+    types = {f.name: f.dataType for f in df.schema}
+    out = T.StructType(
+        [T.StructField("kind", T.ByteType())]
+        + [T.StructField(c, types[c]) for c in _ROW_COLS]
+        + [T.StructField("input_partition", T.IntegerType())]
+        + [T.StructField(c, T.LongType()) for c in _PARTIAL_COLS]
+        + [T.StructField("file", T.StringType())]
+    )
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    writer = _sink_writer(
+        fs, staging, codec, data.columns, meta, to_arrow_schema(out)
+    )
+    return (
+        rebalance_by_sink(df)
+        .mapInArrow(writer, out)
+        .groupBy("kind", *SINK_KEYS, "input_partition", "file")
+        .agg(*sink_stats(), *partition_metrics())
+    )
+
+
+def _sink_of(row) -> tuple:
+    return tuple(row[k] for k in SINK_KEYS)
+
+
+def _commit(fs, table: str, staging: str, files: list[str], stats_rows) -> None:
+    """Job commit: every sink directory that received a file this run is
+    replaced by exactly the listed files; other sinks are left alone.
+    Files a failed or speculative attempt left in staging are not listed
+    and are deleted with the staging dir.
+
+    Then each replaced directory is listed and the row counts in its
+    files' footers are checked against the manifest rows: the manifest
+    records what readers will find there, not what the writer meant to
+    write (the check reads O(files) footers, never the data). A mismatch
+    raises before ``_SUCCESS``, so no manifest is written either."""
+    import posixpath
+    from collections import Counter
+
+    import pyarrow.parquet as pq
+    from pyarrow import fs as pafs
+
+    moves = {f: f"{table}/{f.split('/', 1)[1]}" for f in files}
+    sinks = sorted({posixpath.dirname(p) for p in moves.values()})
+    for info in fs.get_file_info(sinks):
+        if info.type != pafs.FileType.NotFound:
+            fs.delete_dir(info.path)
+    for d in sinks:
+        fs.create_dir(d)
+    for f, dst in moves.items():
+        fs.move(f"{staging}/{f}", dst)
+    fs.create_dir(table)
+    _clear_stale_temporary(fs, table)
+
+    want = Counter()
+    for r in stats_rows:
+        want[f"{table}/{partition_path(r['sink_severity'], r['source'])}"] += r["rows"]
+    got = Counter()
+    for d in sinks:
+        for info in fs.get_file_info(pafs.FileSelector(d)):
+            got[d] += pq.read_metadata(info.path, filesystem=fs).num_rows
+    if got != want:
+        bad = sorted(d for d in want.keys() | got.keys() if got[d] != want[d])
+        raise RuntimeError(
+            f"routed commit check failed: rows on disk differ from the "
+            f"manifest in {len(bad)} sink dir(s), e.g. {bad[0]} "
+            f"({got[bad[0]]} on disk, {want[bad[0]]} written)"
+        )
+    fs.open_output_stream(f"{table}/_SUCCESS").close()
 
 
 def route_write(
@@ -297,92 +458,84 @@ def route_write(
     ``spark.sql.adaptive.advisoryPartitionSizeInBytes``, and a hot sink
     is split across several writer tasks/files past it — no per-call
     file or task count to tune.
-    With resume=True, sinks already in the manifest are skipped via a
-    broadcast left_anti join and the returned ``sink_stats`` /
-    ``routed_rows`` are CUMULATIVE (full manifest: prior runs + this one).
-    Overwrite semantics: a fresh out_dir (or resume) uses the cheap static
-    commit; overwriting an EXISTING routed table without resume uses
-    dynamic partition overwrite so sinks absent from the current batch are
-    preserved (the static truncate-all would silently drop them)."""
+
+    Commit protocol (one rule for fresh, layering and resume runs):
+    stale ``<routed>/_temporary`` is cleared; writer tasks stage their
+    files under ``<routed>/_temporary/<job>/``, invisible to readers;
+    after the query the driver replaces the directory of every sink
+    written this run with exactly the listed files (other sinks are left
+    alone), deletes the staging dir, checks the replaced directories'
+    footer row counts against the manifest rows (:func:`_commit`), writes
+    ``_SUCCESS``, then the metrics table and the manifest last. So routed data without a
+    manifest means a crashed non-resume write, and resume refuses it.
+
+    The manifest keeps earlier rows of the sinks this run did not write,
+    so it always describes the whole table. With resume=True, sinks
+    already in the manifest are skipped via a broadcast left_anti join,
+    this run's rows are appended to the manifest, and the returned
+    ``sink_stats`` / ``routed_rows`` are CUMULATIVE (full manifest: prior
+    runs + this one). The metrics table holds the lineage of the rows
+    this run wrote."""
     import time as _time
+    import uuid
+
+    from ..sources.direct import _resolve_fs
 
     spark = spark or parsed.sparkSession
-    # static overwrite truncates the whole table in one step but is only
-    # safe when nothing pre-exists; dynamic preserves untouched partitions
-    # at the cost of a driver-side rename per partition dir (~10s/650 dirs
-    # measured) — pay it only when layering onto an existing table.
-    routed_exists = table_exists(spark, f"{out_dir}/{ROUTED}")
-    overwrite_mode = "dynamic" if (resume or routed_exists) else "static"
+    fs, table = _resolve_fs(f"{out_dir}/{ROUTED}")
+    prior = completed_sinks(out_dir)
+    if resume and prior is None and table_exists(spark, f"{out_dir}/{ROUTED}"):
+        # routed data with NO manifest = a non-resume write crashed in or
+        # after its job commit: part of its output may be in the final
+        # sink dirs, and nothing is recorded as complete. Resume would
+        # then skip nothing, and the manifest it writes would not list
+        # the partial sinks this run holds no rows for. The recovery is
+        # a rerun with resume=False.
+        raise RuntimeError(
+            f"resume=True but {out_dir}/{MANIFEST} is missing while "
+            f"{out_dir}/{ROUTED} exists — this looks like a crashed "
+            "FRESH write (interrupted job commit, no manifest). "
+            "Rerun with resume=False to overwrite from scratch."
+        )
+    _clear_stale_temporary(fs, table)
     stage_t: dict[str, float] = {}
     _t0 = _time.monotonic()
     # row_cs is materialized BEFORE the shuffle (pipelined with the parse
-    # stage) so the manifest scan afterwards reads 8 flat bytes per row
-    # instead of re-decoding + re-hashing the nested data column
+    # stage): the writer stores it and the manifest aggregate folds it
+    # without re-decoding the nested data column
     df = with_sink_key(parsed).withColumn("row_cs", row_checksum())
 
     skipped = 0
-    keys = None
-    if resume:
-        _clear_stale_temporary(spark, f"{out_dir}/{ROUTED}")
-        done = completed_sinks(spark, out_dir)
-        if done is None and routed_exists:
-            # routed data with NO manifest = a FRESH write crashed in
-            # or after its job commit: part of its output may be in the
-            # final sink dirs, and nothing is recorded as complete.
-            # resume would append the full dataset ON TOP of those files
-            # and then compute a manifest over the duplicated table,
-            # legitimizing the inflated counts. The correct recovery is
-            # a fresh rerun (static overwrite clears the partials).
-            raise RuntimeError(
-                f"resume=True but {out_dir}/{MANIFEST} is missing while "
-                f"{out_dir}/{ROUTED} exists — this looks like a crashed "
-                "FRESH write (interrupted job commit, no manifest). "
-                "Rerun with resume=False to overwrite from scratch."
+    if resume and prior is not None:
+        skipped = len(prior)
+        if prior:
+            keys = spark.createDataFrame(
+                [_sink_of(r) for r in prior],
+                "sink_severity int, source string",
             )
-        if done is not None:
-            keys = done.select(*SINK_KEYS)
-            skipped = keys.count()
-            df = df.join(
-                F.broadcast(keys), list(SINK_KEYS), "left_anti"
-            )
+            df = df.join(F.broadcast(keys), list(SINK_KEYS), "left_anti")
 
-    mode = "overwrite" if not resume else "append"
-    (
-        rebalance_by_sink(df)
-        .write.mode(mode)
-        .option("partitionOverwriteMode", overwrite_mode)
-        .options(**_WRITE_OPTIONS)
-        .partitionBy(*SINK_KEYS)
-        .parquet(f"{out_dir}/{ROUTED}")
-    )
+    staging = f"{table}/_temporary/{uuid.uuid4()}"
+    stats_rows, metrics_rows, files = [], [], []
+    for r in _route_query(df, fs, staging).collect():
+        if r["kind"] == _ROW:
+            stats_rows.append({k: r[k] for k in MANIFEST_SCHEMA.names})
+        elif r["kind"] == _PARTIAL:
+            metrics_rows.append({k: r[k] for k in METRICS_SCHEMA.names})
+        else:
+            files.append(r["file"])
     stage_t["parse_route_write"] = _time.monotonic() - _t0
     _t0 = _time.monotonic()
 
-    # ONE column-pruned scan computes manifest + per-sink aggregates over
-    # the sinks written THIS run (on resume: the routed table minus the
-    # sinks the manifest already lists); the tiny result is collected
-    # once. Resume appends those rows and hands callers the CUMULATIVE
-    # manifest, so summaries keep the prior runs' sinks. Metrics is its
-    # own cheap flat-column scan. (A grouping-sets fold of the two was
-    # tried and REVERTED: the expand duplicates every row through the
-    # sketch updates and measured 5-33s where the two scans take ~1-2s
-    # total.)
-    # read with the written schema (a partitioned read puts the sink keys
-    # last): no footer-inference job
-    written = df.select(*(c for c in df.columns if c not in SINK_KEYS),
-                        *SINK_KEYS)
-    routed = spark.read.schema(written.schema).parquet(f"{out_dir}/{ROUTED}")
-    new = routed if keys is None else routed.join(
-        F.broadcast(keys), list(SINK_KEYS), "left_anti"
-    )
-    stats_rows = [r.asDict() for r in sink_stats(new).collect()]
-    write_local_table(
-        f"{out_dir}/{MANIFEST}", stats_rows, MANIFEST_SCHEMA, append=resume
-    )
-    if resume:
-        stats_rows = read_local_table(f"{out_dir}/{MANIFEST}")
-    metrics_rows = [r.asDict() for r in partition_metrics(routed).collect()]
+    _commit(fs, table, staging, files, stats_rows)
     write_local_table(f"{out_dir}/{METRICS}", metrics_rows, METRICS_SCHEMA)
+    written = {_sink_of(r) for r in stats_rows}
+    kept = [r for r in prior or [] if _sink_of(r) not in written]
+    write_local_table(
+        f"{out_dir}/{MANIFEST}", stats_rows if resume else kept + stats_rows,
+        MANIFEST_SCHEMA, append=resume,
+    )
+    stats_rows = kept + stats_rows
     stage_t["manifest_metrics"] = _time.monotonic() - _t0
     n_ok = sum(
         r["rows"] for r in stats_rows if r["sink_severity"] != ERROR_SINK

@@ -1,14 +1,17 @@
 """End-to-end pipeline plan: read -> parse -> enrich -> route -> aggregate.
 
 The Spark lifecycle equivalent of the reference's ParseMessage driver loop
-(syslog.go:143-161) lifted to table scale (SURVEY.md §3):
+(syslog.go:143-161) lifted to table scale (SURVEY.md §3), as ONE Spark
+query of at most 3 jobs:
 
   read tokens (Iceberg/Parquet, partition-pruned on source)
     -> parse (one mapInArrow stage: detokenize + parse, no shuffle)
     -> enrich (literal lookups / broadcast joins, no shuffle)
-    -> route  (ONE shuffle on (severity, source) for the fan-out write)
-    -> aggregate (one scan of the routed table: manifest + per-sink stats;
-       hot sinks are split by the AQE rebalance on the routing shuffle)
+    -> route  (ONE shuffle on (severity, source); a pyarrow writer stage
+       stages one file per sink and yields the manifest's flat columns)
+    -> aggregate (one keyed aggregate over the writer's output, collected:
+       manifest + per-sink stats + lineage; the driver then commits the
+       listed files — the routed table is never re-scanned)
 
 Checkpoint/resume: the routing manifest records completed sinks; a resumed
 run anti-joins them out. Per-partition lineage rows land in <out>/metrics.
@@ -105,10 +108,9 @@ def run_pipeline(
     t0 = time.monotonic()
     df = parsed_frame(spark, input_path, cfg)
     route_info = route_write(df, out_dir, spark, resume=cfg.resume)
-    # per-sink aggregates were computed in the same scan as the manifest
-    # (route_write -> sink_stats) and collected (tiny: one row per sink);
-    # materialize the aggregate view from those rows — no data re-scan,
-    # no manifest re-read
+    # per-sink aggregates come with the manifest rows route_write collected
+    # (tiny: one row per sink); materialize the aggregate view from those
+    # rows — no data scan, no manifest re-read
     stats_rows = route_info["sink_stats"]
     if stats_rows:
         from pyspark.sql import types as T

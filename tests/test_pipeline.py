@@ -209,7 +209,7 @@ def test_facility_name_invalid(spark):
 
 def test_route_and_aggregate(spark, synth, tmp_path):
     out = str(tmp_path / "out")
-    from syslog_spark.operators.route import ERROR_SINK, read_errors, read_routed
+    from syslog_spark.operators.route import ERROR_SINK, read_routed
     from syslog_spark.plans.pipeline import run_pipeline
 
     res = run_pipeline(spark, synth, out)
@@ -218,7 +218,9 @@ def test_route_and_aggregate(spark, synth, tmp_path):
 
     routed = read_routed(spark, out)
     assert routed.count() == 5000  # errors are the sink_severity=-1 sink
-    assert read_errors(spark, out).count() == res["error_rows"]
+    errors = routed.filter(F.col("sink_severity") == ERROR_SINK)
+    assert errors.count() == res["error_rows"]
+    assert errors.filter(F.col("error_msg").isNull()).count() == 0
     manifest = spark.read.parquet(f"{out}/manifest")
     # manifest counts match the physically routed partitions
     chk = (

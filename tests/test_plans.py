@@ -31,11 +31,10 @@ def routed_dir(spark, tmp_path_factory):
     return out
 
 
-def test_run_pipeline_starts_at_most_six_jobs(spark, tmp_path):
-    """One run_pipeline call starts at most 6 jobs: the routed write and
-    the manifest and metrics scans. The manifest scan reads the routed
-    table with the written frame's schema, so no footer-inference job
-    runs (7 jobs when the schema was inferred)."""
+def test_run_pipeline_starts_at_most_three_jobs(spark, tmp_path):
+    """One run_pipeline call is one Spark query: the parse + routing
+    shuffle, the writer stage, and the manifest aggregate's collect. The
+    written table is never listed or scanned."""
     from syslog_spark.plans.pipeline import run_pipeline
     from syslog_spark.sources.datagen import write_token_table
 
@@ -44,7 +43,31 @@ def test_run_pipeline_starts_at_most_six_jobs(spark, tmp_path):
     before = job_ids(spark)
     res = run_pipeline(spark, tok, str(tmp_path / "out"))
     assert res["routed_rows"] + res["error_rows"] == 2000
-    assert len(job_ids(spark) - before) <= 6
+    assert len(job_ids(spark) - before) <= 3
+
+
+def test_run_pipeline_jobs_do_not_grow_with_sinks(spark, tmp_path):
+    """At 300+ sinks run_pipeline still starts at most 3 jobs: no listing
+    job and no job per directory level appears at width."""
+    from syslog_spark.plans.pipeline import run_pipeline
+    from syslog_spark.sources.datagen import generate_tokens_df
+
+    tok = str(tmp_path / "tokens")
+    (
+        generate_tokens_df(spark, 6000, partitions=4)
+        .withColumn(
+            "source",
+            F.concat_ws(
+                "/", "source", F.pmod(F.xxhash64("doc_id"), F.lit(8))
+            ),
+        )
+        .write.partitionBy("source").parquet(tok)
+    )
+    before = job_ids(spark)
+    res = run_pipeline(spark, tok, str(tmp_path / "out"))
+    assert res["routed_rows"] + res["error_rows"] == 6000
+    assert res["sinks"] >= 300
+    assert len(job_ids(spark) - before) <= 3
 
 
 def test_enrich_join_is_broadcast(spark, sf_dir):
@@ -92,14 +115,29 @@ def test_column_pruning(spark, routed_dir):
     assert "data" not in read_schema and "message" not in read_schema
 
 
-def test_manifest_scan_prunes_nested(spark, routed_dir):
-    """sink_stats reads the precomputed row_cs, never the nested data."""
-    from syslog_spark.operators.route import read_routed, sink_stats
+def test_route_query_hashes_once_and_scans_nothing(spark, tmp_path):
+    """The routed write and its manifest are one plan: the rebalance, one
+    writer MapInArrow and the manifest aggregate over the writer's flat
+    output. row_cs is hashed once, before the shuffle; no parquet scan of
+    the routed table and no second hash of the nested data column."""
+    from syslog_spark.operators import route as R
+    from syslog_spark.operators.parse import parse_tokens
+    from syslog_spark.sources.datagen import generate_tokens_df
+    from syslog_spark.sources.direct import _resolve_fs
 
-    plan = plan_of(sink_stats(read_routed(spark, routed_dir)))
-    read_schema = plan.split("ReadSchema:")[1][:400]
-    assert "row_cs" in read_schema
-    assert "sd_id" not in read_schema  # nested data column pruned
+    df = R.with_sink_key(
+        parse_tokens(generate_tokens_df(spark, 100, partitions=2))
+    ).withColumn("row_cs", R.row_checksum())
+    fs, table = _resolve_fs(str(tmp_path / "routed"))
+    plan = plan_of(R._route_query(df, fs, f"{table}/_temporary/j"))
+    assert plan.count("xxhash64(") == 1
+    assert plan.count("Exchange") == 2
+    # above the routing shuffle: the writer, the aggregate, nothing else
+    above = plan.split("REBALANCE_PARTITIONS_BY_COL")[0]
+    assert above.count("MapInArrow") == 1
+    assert above.count("HashAggregate") == 2  # partial + final
+    assert "Scan" not in above and "xxhash64" not in above
+    assert not (tmp_path / "routed").exists()  # planning wrote nothing
 
 
 def test_minhash_candidates_no_bucket_materialization(spark):
