@@ -8,8 +8,15 @@ routing, and per-sink aggregation — plus the training-data operations a
 100 TB pipeline needs (dedup, similarity search, text analysis).
 """
 
+from pyspark import TaskContext
+
 from . import constants
 from .session import build_session
+
+if TaskContext.get() is not None:  # imported by a task in a Python worker
+    from ._zipcache import install
+
+    install()
 
 
 def parse_tokens(df, **kw):

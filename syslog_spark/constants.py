@@ -74,9 +74,6 @@ BOM = b"\xef\xbb\xbf"  # stripped from MSG (parsers.go:42, 284)
 # (parsers.go:498-504) is the 4-char ASCII set. For MSG trimming the reference
 # uses bytes.TrimSpace (parsers.go:283-285) => full unicode space set; for the
 # nginx getValue right-trim it uses unicode.IsSpace too (parsers.go:491).
-GO_ASCII_SPACE = "\t\n\r "
-# ASCII subset of unicode.IsSpace (enough for byte-level trims):
-GO_TRIM_SPACE = "\t\n\v\f\r \x85\xa0"
 # Full unicode.IsSpace / White_Space set (what bytes.TrimSpace trims after
 # its ASCII fast loop). NOTE: Python's default str.strip() additionally
 # treats \x1c-\x1f (FS/GS/RS/US, bidi class B/S) as whitespace — Go does
@@ -109,7 +106,6 @@ DEFAULT_REFERENCE_TZ_OFFSET_SECONDS = 0  # UTC
 
 # Error text templates (syslog.go:163-166)
 FORMAT_ERROR_TEMPLATE = "syslog: format incorrect: {msg}, at column {col}"
-ERR_EOF = "EOF"
 ERR_UNEXPECTED_EOF = "unexpected EOF"
 
 MONTH_NAMES = (

@@ -345,27 +345,6 @@ def parse_tokens(
     )
 
 
-def new_parser(
-    fmt: str,
-    ref_year: int = C.DEFAULT_REFERENCE_YEAR,
-    ref_tz: int = C.DEFAULT_REFERENCE_TZ_OFFSET_SECONDS,
-    keep_raw: bool = False,
-):
-    """Prepared-parser factory — the NewParser analogue (syslog.go:172-176):
-    binds a format once, returns DataFrame(doc_id, line) -> parsed."""
-    from pyspark.sql import functions as F
-
-    if fmt not in C.FORMATS:
-        raise ValueError(f"unknown format {fmt!r}; expected one of {C.FORMATS}")
-
-    def parser(df):
-        return parse_lines(
-            df.withColumn("source", F.lit(fmt)), ref_year, ref_tz, keep_raw
-        )
-
-    return parser
-
-
 def parse_lines(
     df,
     ref_year: int = C.DEFAULT_REFERENCE_YEAR,

@@ -1,18 +1,14 @@
 """Text analysis operators: token counting, quality scoring, language ID,
-document fingerprinting. All pure Catalyst expressions except the rolling
-hash (Arrow-vectorized pandas UDF) — designed to run over billions of
-documents without Python in the hot path.
+document fingerprinting. All pure Catalyst expressions, designed to run
+over billions of documents without Python in the hot path.
 
 Each helper returns Columns so callers compose them into one projection
 (single pass over the text, whole-stage codegen)."""
 
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 # deliberately small, deterministic stopword lists (public knowledge)
 STOPWORDS_EN = (
@@ -101,16 +97,6 @@ def _quality_score_w(col, words: Column, words_lower: Column) -> Column:
     return (len_ok + stop_ok + punct_ok + wl_ok) / 4.0
 
 
-def quality_score(col) -> Column:
-    """Composite [0,1] quality heuristic: long enough, some stopwords,
-    sane punctuation, sane word lengths. Deterministic, monotone pieces.
-
-    As a single inline expression this re-splits the text per consumer
-    (the HOFs are CodegenFallback, no CSE); scan-heavy callers use
-    :func:`document_stats`, which hoists the tokenizations."""
-    return _quality_score_w(col, _words(col), _words_lower(col))
-
-
 # --- language identification ---------------------------------------------------
 
 _LANG_MARKERS = {
@@ -153,64 +139,6 @@ def normalized_text(col) -> Column:
 def fingerprint_md5(col) -> Column:
     """Normalized-content digest (exact-dup key after normalization)."""
     return F.md5(normalized_text(col))
-
-
-POLY_BASES = (1000003, 999983)  # two independent 31-bit streams
-POLY_MOD = (1 << 31) - 1  # Mersenne-31: byte*power products fit in uint64
-
-_POW_CACHE: dict[int, np.ndarray] = {}
-
-
-def _pows(base: int, n: int) -> np.ndarray:
-    """base^0..base^(n-1) mod M31 (cached, grown geometrically). The only
-    loop is over the power table — amortized O(1) per hashed byte."""
-    cur = _POW_CACHE.get(base)
-    if cur is None or len(cur) < n:
-        size = max(n, 1024, 0 if cur is None else 2 * len(cur))
-        out = np.empty(size, dtype=np.uint64)
-        out[0] = 1
-        acc = 1
-        for i in range(1, size):
-            acc = (acc * base) % POLY_MOD
-            out[i] = acc
-        _POW_CACHE[base] = cur = out
-    return cur[:n]
-
-
-def _poly_hash(b: np.ndarray, base: int) -> int:
-    """sum(b[i] * base^(n-1-i)) mod M31, fully vectorized: products are
-    < 2^39 so partial sums of up to 2^24 terms stay below 2^63 — fold a
-    mod in per chunk, no per-byte Python."""
-    n = len(b)
-    pows = _pows(base, n)[::-1]
-    acc = np.uint64(0)
-    chunk = 1 << 24
-    for s in range(0, n, chunk):
-        # powers encode the absolute position, so chunk sums just add
-        part = (b[s:s + chunk].astype(np.uint64) * pows[s:s + chunk]).sum()
-        acc = (acc + part) % np.uint64(POLY_MOD)
-    return int(acc)
-
-
-def rolling_hash_udf():
-    """Polynomial rolling hash of the text bytes (order-sensitive 62-bit
-    fingerprint): two independent 31-bit Horner streams packed as
-    h1 * 2^31 + h2. numpy-vectorized — one multiply + sum per row over
-    precomputed base powers; no per-byte Python loop."""
-
-    @F.pandas_udf(T.LongType())
-    def _roll(texts: pd.Series) -> pd.Series:
-        out = np.zeros(len(texts), dtype=np.int64)
-        for i, t in enumerate(texts):
-            if not t:
-                continue
-            b = np.frombuffer(t.encode("utf-8"), dtype=np.uint8)
-            h1 = _poly_hash(b, POLY_BASES[0])
-            h2 = _poly_hash(b, POLY_BASES[1])
-            out[i] = (h1 << 31) | h2
-        return pd.Series(out)
-
-    return _roll
 
 
 def document_stats(df: DataFrame, text_col: str = "text") -> DataFrame:

@@ -150,8 +150,10 @@ def _ship_package(spark: SparkSession) -> None:
 
     Local equivalent of `spark-submit --py-files syslog_spark.zip` (the
     deployment mode named in the north star): zip the package and
-    addPyFile it, so sessions built from any CWD work.
+    addPyFile it, so sessions built from any CWD work. The zip is
+    deleted when this interpreter exits, never while the context runs.
     """
+    import atexit
     import zipfile
 
     pkg_dir = os.path.dirname(os.path.abspath(__file__))
@@ -171,4 +173,12 @@ def _ship_package(spark: SparkSession) -> None:
                     if f.endswith(".py"):
                         full = os.path.join(dp, f)
                         z.write(full, os.path.relpath(full, root))
+        atexit.register(_remove_quietly, zpath)
     spark.sparkContext.addPyFile(zpath)
+
+
+def _remove_quietly(path: str) -> None:
+    try:
+        os.remove(path)
+    except FileNotFoundError:
+        pass

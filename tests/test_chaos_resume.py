@@ -1,8 +1,10 @@
 """Chaos test: the commit-protocol/resume reasoning in route.py
 (FileOutputCommitter v1 for every routed write) is executed, not argued.
-A child process running route_write is SIGKILLed as soon as a commit
-becomes observable on disk, then the documented recovery action runs
-and the final table must be row_cs-exact against an uncrashed run.
+A child process running route_write is SIGKILLed inside a commit (a
+fresh write's job commit stalls itself after its first file move and
+says so; a resume is killed when its first task output shows up on
+disk), then the documented recovery action runs and the final table
+must be row_cs-exact against an uncrashed run.
 
 Recovery contract under test:
   * crashed FRESH write: v1 keeps task output under _temporary until the
@@ -25,6 +27,7 @@ import signal
 import subprocess
 import sys
 import textwrap
+import threading
 import time
 
 import pytest
@@ -67,6 +70,7 @@ _CHILD = textwrap.dedent("""
                      "spark.sql.adaptive.coalescePartitions.enabled": "false",
                      "spark.ui.showConsoleProgress": "false"}},
     )
+    {stall}
     tok = spark.read.parquet({tokens!r})
     print("READY", flush=True)
     route_write(parse_tokens(tok), {out!r}, spark, resume={resume})
@@ -74,15 +78,49 @@ _CHILD = textwrap.dedent("""
 """)
 
 
-def _run_child_and_kill(tmp_path, tokens, out, resume, evidence_glob,
+# the fresh write's job commit gets a file system that, after its first
+# move into a final sink dir, says so on stdout and blocks, so the parent
+# kills the job commit mid-way
+_STALL_COMMIT = textwrap.dedent("""
+    import threading
+    from syslog_spark.operators import route
+
+    commit = route._commit
+
+
+    class _StallAfterFirstMove:
+        def __init__(self, fs):
+            self._fs = fs
+
+        def __getattr__(self, name):
+            return getattr(self._fs, name)
+
+        def move(self, src, dst):
+            self._fs.move(src, dst)
+            print("MOVED", flush=True)
+            threading.Event().wait()
+
+
+    route._commit = lambda fs, *a, **kw: commit(
+        _StallAfterFirstMove(fs), *a, **kw
+    )
+""")
+
+
+def _run_child_and_kill(tmp_path, tokens, out, resume, evidence_glob=None,
                         timeout=180):
-    """Start route_write in a child process group, SIGKILL the whole
-    group as soon as the first commit evidence appears on disk.
+    """Start route_write in a child process group and SIGKILL the whole
+    group at the first commit evidence: with ``evidence_glob``, the first
+    matching path on disk; without it, the fresh write's ``MOVED`` line
+    (its job commit has moved one file into place and is stalled there).
     Returns True if the kill landed mid-job (False = job finished too
     fast; caller should retry with more data)."""
     script = tmp_path / f"chaos_{'resume' if resume else 'fresh'}.py"
     script.write_text(
-        _CHILD.format(repo=REPO, tokens=tokens, out=out, resume=resume)
+        _CHILD.format(
+            repo=REPO, tokens=tokens, out=out, resume=resume,
+            stall=_STALL_COMMIT if evidence_glob is None else "",
+        )
     )
     p = subprocess.Popen(
         [sys.executable, str(script)], stdout=subprocess.PIPE,
@@ -91,16 +129,30 @@ def _run_child_and_kill(tmp_path, tokens, out, resume, evidence_glob,
     try:
         t0 = time.monotonic()
         killed = False
-        while time.monotonic() - t0 < timeout:
-            if p.poll() is not None:
-                break  # finished before we saw evidence
-            if glob.glob(evidence_glob):
-                os.killpg(p.pid, signal.SIGKILL)
-                killed = True
-                break
-            time.sleep(0.02)
+        if evidence_glob is None:
+            timer = threading.Timer(timeout, os.killpg, (p.pid, signal.SIGKILL))
+            timer.start()
+            try:
+                for line in p.stdout:
+                    if line.strip() == "MOVED":
+                        os.killpg(p.pid, signal.SIGKILL)
+                        killed = True
+                        break
+            finally:
+                timer.cancel()
+            if not killed and time.monotonic() - t0 >= timeout:
+                pytest.fail("chaos child neither moved a file nor exited")
         else:
-            pytest.fail("chaos child neither produced evidence nor exited")
+            while time.monotonic() - t0 < timeout:
+                if p.poll() is not None:
+                    break  # finished before we saw evidence
+                if glob.glob(evidence_glob):
+                    os.killpg(p.pid, signal.SIGKILL)
+                    killed = True
+                    break
+                time.sleep(0.02)
+            else:
+                pytest.fail("chaos child neither produced evidence nor exited")
         p.wait(timeout=30)
         return killed
     finally:
@@ -132,12 +184,9 @@ def test_chaos_kill_fresh_then_rerun_and_kill_resume_then_resume(
 
     # ---- scenario 1: kill a FRESH write in its job commit
     out = str(tmp_path / "out_chaos")
-    killed = _run_child_and_kill(
-        tmp_path, b1, out, resume=False,
-        # the first file in a FINAL partition dir: the driver's job
-        # commit has started renaming task output into place
-        evidence_glob=f"{out}/routed/sink_severity=*/source=*/part-*.parquet",
-    )
+    # the kill lands after the job commit's first move of a file into a
+    # FINAL sink dir, where the child stalls its commit
+    killed = _run_child_and_kill(tmp_path, b1, out, resume=False)
     assert killed, "fresh write finished before its job commit was seen"
     # no manifest, so nothing is falsely complete
     assert not os.path.exists(f"{out}/manifest")

@@ -176,13 +176,18 @@ def test_embedding_near_dups_planted(spark):
 def test_textstats(spark, docs):
     from syslog_spark.operators import textstats as TS
 
+    def quality_score(col):
+        """Composite [0,1] quality heuristic, the ``quality`` column of
+        ``TS.document_stats``, as a single inline expression."""
+        return TS._quality_score_w(col, TS._words(col), TS._words_lower(col))
+
     out = {r["doc_id"]: r for r in docs.select(
         "doc_id",
         TS.whitespace_token_count("text").alias("n"),
         TS.stopword_count("text").alias("sw"),
         TS.lang_id("text").alias("lang"),
         TS.fingerprint_md5("text").alias("fp"),
-        TS.quality_score("text").alias("q"),
+        quality_score(F.col("text")).alias("q"),
     ).collect()}
     assert out["d1"]["n"] == 9 and out["d7"]["n"] == 0
     assert out["d1"]["sw"] == 2  # 'the' twice
@@ -192,30 +197,6 @@ def test_textstats(spark, docs):
     assert out["d7"]["lang"] == "und"
     assert out["d1"]["fp"] == out["d2"]["fp"] != out["d3"]["fp"]
     assert 0 <= out["d7"]["q"] <= out["d1"]["q"] <= 1
-
-
-def test_rolling_hash(spark, docs):
-    from syslog_spark.operators.textstats import (
-        POLY_BASES, POLY_MOD, normalized_text, rolling_hash_udf,
-    )
-
-    out = {r["doc_id"]: r["rh"] for r in docs.select(
-        "doc_id", rolling_hash_udf()(normalized_text("text")).alias("rh")
-    ).collect()}
-    assert out["d1"] == out["d2"] != out["d3"]
-
-    def py_roll(t):
-        accs = []
-        for base in POLY_BASES:
-            acc = 0
-            for b in t.encode():
-                acc = (acc * base + b) % POLY_MOD
-            accs.append(acc)
-        return (accs[0] << 31) | accs[1]
-
-    assert out["d1"] == py_roll("the quick brown fox jumps over the lazy dog")
-    # order sensitivity (fingerprint_md5 of the same words would collide)
-    assert out["d1"] != py_roll("dog lazy the over jumps fox brown quick the")
 
 
 def test_ivf_topk_recall(spark):

@@ -16,7 +16,8 @@ import pytest
 from syslog_spark import oracle as O
 from syslog_spark.operators import fastpath as FP
 from syslog_spark.operators import parse as P
-from syslog_spark.sources import datagen as D
+
+import reference_corpus as RC
 
 Y, TZ = 2024, 0
 NULL = FP._NULL_INT
@@ -52,7 +53,7 @@ def oracle_row(line, fmt):
 
 
 def test_corpus_matches_oracle():
-    cases = D.corpus()
+    cases = RC.corpus()
     got = batch_rows([l for _, _, l in cases], [f for _, f, _ in cases])
     for (name, fmt, line), g in zip(cases, got):
         assert g == oracle_row(line, fmt), name
@@ -62,7 +63,7 @@ def test_fastpath_accepts_wellformed():
     """The headline corpus cases must take the vectorized path (perf gate)."""
     import pyarrow as pa
 
-    cases = [(n, f, l) for n, f, l in D.corpus() if not n.startswith("err/")]
+    cases = [(n, f, l) for n, f, l in RC.corpus() if not n.startswith("err/")]
     for fmt in ("rfc5424", "nginx_access", "nginx_error"):
         sub = [(n, l) for n, f, l in cases if f == fmt]
         res = FP.FAST_PARSERS[fmt](
@@ -80,7 +81,7 @@ def test_fastpath_accepts_wellformed():
 @pytest.mark.parametrize("seed", [42, 7, 123, 20240816])
 def test_fuzz_differential(seed):
     rng = random.Random(seed)
-    base = [l for _, _, l in D.corpus()]
+    base = [l for _, _, l in RC.corpus()]
     chars = list(' <>[]"=:,-\\abc019\tJanOct+.T') + ["﻿"]
     fmts_all = ["rfc5424", "nginx_access", "nginx_error"]
 
@@ -115,8 +116,8 @@ def test_fuzz_differential(seed):
 
 
 def test_detokenize_roundtrip():
-    cases = D.corpus()
-    batch = D.corpus_token_batch()
+    cases = RC.corpus()
+    batch = RC.corpus_token_batch()
     arr = P.detokenize_array(batch.column("tokens"))
     assert arr.to_pylist() == [l for _, _, l in cases]
     assert batch.column("n_tok").to_pylist() == [

@@ -13,6 +13,8 @@ from syslog_spark import constants as C
 from syslog_spark import oracle as O
 from syslog_spark.sources import datagen as D
 
+import reference_corpus as RC
+
 Y, TZ = 2024, 0
 
 
@@ -24,12 +26,12 @@ def parse(line, fmt):
 
 
 def test_rfc5424_minimum():
-    m = parse(D.MINIMUM_RFC5424, "rfc5424").msg
+    m = parse(RC.MINIMUM_RFC5424, "rfc5424").msg
     assert m == O.Msg()
 
 
 def test_rfc5424_regular():
-    m = parse(D.REGULAR_RFC5424, "rfc5424").msg
+    m = parse(RC.REGULAR_RFC5424, "rfc5424").msg
     assert (m.priority, m.facility, m.severity, m.version) == (191, 23, 7, 10)
     assert m.timestamp == O.TimeVal(2015, 9, 30, 23, 10, 11, 0, 7200)
     assert (m.hostname, m.appname, m.proc_id, m.msg_id) == (
@@ -47,27 +49,27 @@ def test_rfc5424_empty_data():
 
 
 def test_rfc5424_long():
-    m = parse(D.LONG_RFC5424, "rfc5424").msg
+    m = parse(RC.LONG_RFC5424, "rfc5424").msg
     assert m.version == 99
     assert m.timestamp == O.TimeVal(3000, 12, 31, 23, 59, 59, 999999999, 50400)
-    assert m.hostname == D._H and m.appname == D._A
-    assert m.proc_id == D._P and m.msg_id == D._M
+    assert m.hostname == RC._H and m.appname == RC._A
+    assert m.proc_id == RC._P and m.msg_id == RC._M
     assert m.data == {
-        D._D: {D._N: D._V},
-        D._D2: {D._N: D._V, D._N2: D._V2},
+        RC._D: {RC._N: RC._V},
+        RC._D2: {RC._N: RC._V, RC._N2: RC._V2},
     }
-    assert m.message == D._MSG
+    assert m.message == RC._MSG
 
 
 def test_nginx_access_golden():
-    m = parse(D.MINIMUM_NGINX_ACCESS, "nginx_access").msg
+    m = parse(RC.MINIMUM_NGINX_ACCESS, "nginx_access").msg
     assert (m.priority, m.facility, m.severity) == (190, 23, 6)
     assert m.timestamp == O.TimeVal(Y, 1, 1, 1, 1, 1, 0, TZ)
     assert (m.hostname, m.appname) == ("h", "a")
     assert m.data == {"request": {}}
     assert m.version == 0 and m.proc_id == "" and m.message == ""
 
-    m = parse(D.REGULAR_NGINX_ACCESS, "nginx_access").msg
+    m = parse(RC.REGULAR_NGINX_ACCESS, "nginx_access").msg
     assert m.data == {
         "request": {
             "key": "value", "key2": "value2", "key3": "value3",
@@ -75,7 +77,7 @@ def test_nginx_access_golden():
         }
     }
 
-    m = parse(D.REAL_NGINX_ACCESS_1, "nginx_access").msg
+    m = parse(RC.REAL_NGINX_ACCESS_1, "nginx_access").msg
     req = m.data["request"]
     assert "http_referer" not in req  # '-' values dropped (parsers.go:220)
     assert req["msec"] == "1444039515.695" and len(req) == 9
@@ -83,11 +85,11 @@ def test_nginx_access_golden():
 
 
 def test_nginx_error_golden():
-    m = parse(D.MINIMUM_NGINX_ERROR, "nginx_error").msg
+    m = parse(RC.MINIMUM_NGINX_ERROR, "nginx_error").msg
     assert m.message == "m"
     assert m.data == {"data": {"c": "c", "s": "s", "r": "r", "h": "h"}}
 
-    m = parse(D.REGULAR_NGINX_ERROR, "nginx_error").msg
+    m = parse(RC.REGULAR_NGINX_ERROR, "nginx_error").msg
     assert m.message == "message"
     assert m.data == {
         "data": {
@@ -96,19 +98,19 @@ def test_nginx_error_golden():
         }
     }
 
-    m = parse(D.REAL_NGINX_ERROR_QUOTED_KEY, "nginx_error").msg
+    m = parse(RC.REAL_NGINX_ERROR_QUOTED_KEY, "nginx_error").msg
     assert m.message == (
         '1187#1187: *46 open() "/usr/share/nginx/html/test" failed '
         "(2: No such file or directory)"
     )
     assert m.data["data"]["server"] == "localhost"
 
-    m = parse(D.LONG_NGINX_ERROR, "nginx_error").msg
-    assert m.message == D._MSG
+    m = parse(RC.LONG_NGINX_ERROR, "nginx_error").msg
+    assert m.message == RC._MSG
     assert m.data == {
         "data": {
-            "client": D._CLIENT, "server": D._SERVER,
-            "request": D._REQUEST, "host": D._HOST,
+            "client": RC._CLIENT, "server": RC._SERVER,
+            "request": RC._REQUEST, "host": RC._HOST,
         }
     }
 
@@ -341,12 +343,12 @@ def test_serialize_golden(msg, want):
 
 
 def test_roundtrip_canonical():
-    for line in [D.MINIMUM_RFC5424, D.REGULAR_RFC5424]:
+    for line in [RC.MINIMUM_RFC5424, RC.REGULAR_RFC5424]:
         r = parse(line, "rfc5424")
         assert O.serialize(r.msg) == line
     # long input: serialize is the sorted canonical permutation; re-parse
     # must be a fixpoint
-    r1 = parse(D.LONG_RFC5424, "rfc5424")
+    r1 = parse(RC.LONG_RFC5424, "rfc5424")
     canon = O.serialize(r1.msg)
     r2 = parse(canon, "rfc5424")
     assert O.to_row(r2) == O.to_row(r1)

@@ -8,14 +8,15 @@ import pytest
 from syslog_spark import oracle as O
 from syslog_spark.operators.parse import parse_tokens
 from syslog_spark.operators.schema import TOKENS_SPARK_SCHEMA
-from syslog_spark.sources import datagen as D
+
+import reference_corpus as RC
 
 Y, TZ = 2024, 0
 
 
 @pytest.fixture(scope="module")
 def corpus_df(spark):
-    batch = D.corpus_token_batch()
+    batch = RC.corpus_token_batch()
     pdf = pa.Table.from_batches([batch]).to_pandas()
     return spark.createDataFrame(pdf, schema=TOKENS_SPARK_SCHEMA)
 
@@ -23,8 +24,8 @@ def corpus_df(spark):
 def test_parse_corpus_end_to_end(spark, corpus_df):
     parsed = parse_tokens(corpus_df, Y, TZ, keep_raw=True)
     rows = {r["doc_id"]: r.asDict(recursive=True) for r in parsed.collect()}
-    assert len(rows) == len(D.corpus())
-    for name, fmt, line in D.corpus():
+    assert len(rows) == len(RC.corpus())
+    for name, fmt, line in RC.corpus():
         got = rows[name]
         exp = O.to_row(O.parse_message(line, fmt, Y, TZ))
         assert got["raw"] == line, name
@@ -78,20 +79,30 @@ def test_parse_synth_generator(spark):
     parsed.unpersist()
 
 
+def new_parser(fmt: str, ref_year: int = Y, ref_tz: int = TZ):
+    """Prepared-parser factory, the NewParser analogue (syslog.go:172-176):
+    binds a format once, returns DataFrame(doc_id, line) -> parsed."""
+    from pyspark.sql import functions as F
+
+    from syslog_spark import constants as C
+    from syslog_spark.operators.parse import parse_lines
+
+    if fmt not in C.FORMATS:
+        raise ValueError(f"unknown format {fmt!r}; expected one of {C.FORMATS}")
+    return lambda df: parse_lines(
+        df.withColumn("source", F.lit(fmt)), ref_year, ref_tz
+    )
+
+
 def test_new_parser_fixed_format(spark):
     """NewParser analogue (syslog.go:172-176): format bound once."""
-    import pytest as _pytest
-
-    from syslog_spark.operators.parse import new_parser
-    from syslog_spark.sources import datagen as D
-
     parse = new_parser("rfc5424", Y, TZ)
     df = spark.createDataFrame(
-        [("r1", D.REGULAR_RFC5424)], "doc_id string, line string"
+        [("r1", RC.REGULAR_RFC5424)], "doc_id string, line string"
     )
     row = parse(df).collect()[0]
     assert row["priority"] == 191 and row["hostname"] == "hostname"
-    with _pytest.raises(ValueError):
+    with pytest.raises(ValueError):
         new_parser("rfc3164")
 
 

@@ -15,6 +15,8 @@ from syslog_spark.operators.schema import TOKENS_SPARK_SCHEMA
 from syslog_spark.operators.serialize import with_canonical
 from syslog_spark.sources import datagen as D
 
+import reference_corpus as RC
+
 Y, TZ = 2024, 0
 
 # param values carrying every ASCII control byte (named \\a..\\v escapes +
@@ -33,7 +35,7 @@ def _sd_line(value: str) -> str:
 
 @pytest.fixture(scope="module")
 def parsed(spark):
-    batch = D.corpus_token_batch()
+    batch = RC.corpus_token_batch()
     pdf = pa.Table.from_batches([batch]).to_pandas()
     df = spark.createDataFrame(pdf, schema=TOKENS_SPARK_SCHEMA)
     return parse_tokens(df, Y, TZ, keep_raw=True).cache()
@@ -51,7 +53,7 @@ def test_serialize_matches_oracle(spark, parsed):
         "doc_id", "canonical"
     ).collect()
     got = {r["doc_id"]: r["canonical"] for r in rows}
-    for name, fmt, line in D.corpus():
+    for name, fmt, line in RC.corpus():
         r = O.parse_message(line, fmt, Y, TZ)
         want = None if r.msg is None else O.serialize(r.msg)
         assert got[name] == want, name
@@ -138,7 +140,7 @@ def test_serialize_batch_matches_oracle():
         TS_NULL_SENTINEL, serialize_batch,
     )
 
-    lines = [(fmt, line) for _, fmt, line in D.corpus()]
+    lines = [(fmt, line) for _, fmt, line in RC.corpus()]
     lines += [("rfc5424", _sd_line(v)) for v in CTRL_VALUES]
     results = [O.parse_message(line, fmt, Y, TZ) for fmt, line in lines]
     table = pa.Table.from_pylist(
